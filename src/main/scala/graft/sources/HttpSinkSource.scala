@@ -226,33 +226,25 @@ private[sources] class SkippedEpochWriter extends DataWriter[InternalRow] {
   * non-null pings) and fails loudly rather than delivering garbage. */
 private[sources] class HttpSinkDataWriter(sink: HttpSink, idx: PingIndices)
     extends DataWriter[InternalRow] {
-  private val buf = scala.collection.mutable.ArrayBuffer.empty[VehicleMessage]
+  private val chunk = new sink.Chunk
   private var rows = 0L
-  private var posts = 0L
 
   override def write(row: InternalRow): Unit = {
     require(!row.isNullAt(idx.vid) && !row.isNullAt(idx.lat) &&
         !row.isNullAt(idx.lon) && !row.isNullAt(idx.ts),
       "graft-http-sink: null ping field (upstream must drop malformed rows)")
-    buf += VehicleMessage(row.getLong(idx.vid), Seq(VehicleLocation(
-      row.getDouble(idx.lat), row.getDouble(idx.lon), row.getLong(idx.ts))))
+    chunk.add(VehicleMessage(row.getLong(idx.vid), Seq(VehicleLocation(
+      row.getDouble(idx.lat), row.getDouble(idx.lon), row.getLong(idx.ts)))))
     rows += 1
-    if (buf.size >= sink.batchSize) flush()
-  }
-
-  private def flush(): Unit = if (buf.nonEmpty) {
-    sink.post(buf.toSeq)
-    posts += 1
-    buf.clear()
   }
 
   override def commit(): WriterCommitMessage = {
-    flush()
-    HttpSinkCommit(rows, posts)
+    chunk.flush()
+    HttpSinkCommit(rows, chunk.posts)
   }
 
   // delivered chunks cannot be recalled (at-least-once); drop only the
   // not-yet-posted tail
-  override def abort(): Unit = buf.clear()
+  override def abort(): Unit = chunk.clear()
   override def close(): Unit = ()
 }

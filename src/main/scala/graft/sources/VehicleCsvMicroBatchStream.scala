@@ -15,9 +15,10 @@ import org.apache.spark.sql.types.StructType
 import graft.ingest.IngestFiles
 
 /** Streaming side of [[VehicleCsvSource]] (MICRO_BATCH_READ): the same
-  * per-file partitions, the same parse/drop semantics, the same
-  * decompression dispatch (plain/.gz/.zip-first-entry, case-insensitive)
-  * as the batch scan — so `spark.readStream.format("graft-vehicle-csv")`
+  * reader, parse/drop semantics and decompression dispatch
+  * (plain/.gz/.zip-first-entry, case-insensitive) as the batch scan, with
+  * one whole-file partition per admitted file (the batch scan also cuts
+  * large plain files into byte ranges) — so `spark.readStream.format("graft-vehicle-csv")`
   * is the ONE streaming ingest path and the `spark.readStream.text`
   * detour (which could not serve `.zip` archives — zip is not a Hadoop
   * line-reader codec) is gone.

@@ -1,21 +1,22 @@
 package graft.sources
 
-import java.io.{BufferedReader, InputStreamReader}
-import java.nio.charset.StandardCharsets
-
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.io.Text
+import org.apache.hadoop.util.LineReader
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics}
+import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.{And, DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Not, Or}
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.{BigIntLow64, FlexTimestamp}
-import graft.ingest.CsvFields
+import graft.ingest.{CsvFields, IngestFiles}
 
 /** The vehicle-ping CSV ingest as a first-class DataSourceV2
   * `TableProvider` — `spark.read.format("graft-vehicle-csv")
@@ -47,10 +48,19 @@ import graft.ingest.CsvFields
   * is the honest contract and the spec asserts rows are identical
   * under any projection or predicate placement.
   *
-  * Scale shape: one InputPartition per file (gz/zip are not splittable;
-  * a 100 TB drop parallelizes across its file count, the same contract
-  * as the reference's per-file loop), readers stream line-by-line —
-  * no whole-file buffering.
+  * Scale shape: a plain file is read in byte ranges sized by Spark's
+  * own file-split rule (`spark.sql.files.maxPartitionBytes`, with
+  * `spark.sql.files.openCostInBytes` and the default parallelism, as
+  * `FilePartition.maxSplitBytes` computes it for the built-in file
+  * sources), so one large plain CSV keeps every core busy. A range owns
+  * the lines that START inside it: it skips the line straddling its
+  * first byte and reads past its last byte to finish its final line,
+  * the Hadoop line-reader rule, so every line is read exactly once
+  * whatever the boundaries and line endings (LF, CRLF, CR). A `.gz` or
+  * `.zip` file is not splittable and stays one InputPartition, so a
+  * compressed drop parallelizes across its file count, the same
+  * contract as the reference's per-file loop. Readers stream
+  * line-by-line — no whole-file buffering.
   *
   * Streaming: the table also declares MICRO_BATCH_READ
   * ([[VehicleCsvMicroBatchStream]]) — `spark.readStream.format(
@@ -190,9 +200,10 @@ object VehicleCsvSource {
   }
 
   /** One parsed record in schema order; null = drop. Shared by the
-    * reader so the dispatch/drop logic lives in exactly one place. */
-  private[sources] def parseLine(line: String): Array[Any] = {
-    val f = CsvFields.split(UTF8String.fromString(line))
+    * reader so the dispatch/drop logic lives in exactly one place. The
+    * record holds copies: `line` may be a reused buffer. */
+  private[sources] def parseLine(line: UTF8String): Array[Any] = {
+    val f = CsvFields.split(line)
     if (f == null) return null
     val n = f.numElements()
     if (n < 4) return null
@@ -304,14 +315,31 @@ private[sources] class VehicleCsvScan(val path: String,
   private def hadoopConf = org.apache.spark.sql.SparkSession.active
     .sparkContext.hadoopConfiguration
 
-  private lazy val files: Seq[String] =
-    graft.ingest.IngestFiles.listInputFiles(path, hadoopConf)
+  /** Input files with their on-disk lengths. Shared glob/directory
+    * expansion (graft.ingest.IngestFiles): a directory path expands to
+    * its visible files, matching CsvVehicleReader / spark.read.text
+    * semantics. */
+  private lazy val files: Seq[(String, Long)] = {
+    val conf = hadoopConf
+    IngestFiles.listInputFiles(path, conf).map { f =>
+      val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(f), conf)
+      f -> fs.getFileStatus(new HPath(f)).getLen
+    }
+  }
 
-  override def planInputPartitions(): Array[InputPartition] =
-    // shared glob/directory expansion (graft.ingest.IngestFiles): a
-    // directory path expands to its visible files, matching
-    // CsvVehicleReader / spark.read.text semantics
-    files.map(f => VehicleCsvPartition(f): InputPartition).toArray
+  /** A compressed file is one partition; a plain one is cut into byte
+    * ranges of Spark's `FilePartition.maxSplitBytes` (see the class doc
+    * of [[VehicleCsvSource]]). */
+  override def planInputPartitions(): Array[InputPartition] = {
+    val openCost = SQLConf.get.filesOpenCostInBytes
+    val maxSplit = FilePartition.maxSplitBytes(
+      org.apache.spark.sql.SparkSession.active, files.map(_._2 + openCost).sum)
+    files.flatMap { case (f, len) =>
+      if (IngestFiles.isCompressed(f) || len <= maxSplit) Seq(VehicleCsvPartition(f))
+      else (0L until len by maxSplit).map(start =>
+        VehicleCsvPartition(f, start, math.min(start + maxSplit, len)))
+    }.toArray[InputPartition]
+  }
 
   /** Size statistics for the optimizer's join planning (broadcast
     * decisions): the summed on-disk file length, with compressed
@@ -320,17 +348,11 @@ private[sources] class VehicleCsvScan(val path: String,
     * is not under-reported into a bad broadcast. Row count stays
     * unknown: drops make it unknowable without a parse. */
   override def estimateStatistics(): Statistics = {
-    val conf = hadoopConf
     val factor = scala.util.Try(org.apache.spark.sql.SparkSession.active
       .conf.get("spark.sql.sources.fileCompressionFactor", "1.0").toDouble)
       .getOrElse(1.0)
-    val total = files.map { f =>
-      val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(f), conf)
-      val len = fs.getFileStatus(new HPath(f)).getLen
-      val lower = f.toLowerCase(java.util.Locale.ROOT)
-      if (lower.endsWith(".gz") || lower.endsWith(".zip"))
-        (len * factor).toLong
-      else len
+    val total = files.map { case (f, len) =>
+      if (IngestFiles.isCompressed(f)) (len * factor).toLong else len
     }.sum
     new Statistics {
       override def sizeInBytes(): java.util.OptionalLong =
@@ -357,7 +379,11 @@ private[sources] class VehicleCsvScan(val path: String,
       graft.ingest.IngestFiles.confProps(hadoopConf))
 }
 
-private[sources] case class VehicleCsvPartition(file: String)
+/** Lines of `file` that start in the byte range (`start`, `end`], plus
+  * the first line when `start` is 0; the default range is the whole
+  * file, the only range a compressed file or a micro-batch plans. */
+private[sources] case class VehicleCsvPartition(file: String,
+    start: Long = 0L, end: Long = Long.MaxValue)
     extends InputPartition
 
 private[sources] case class VehicleCsvReaderFactory(
@@ -366,12 +392,12 @@ private[sources] case class VehicleCsvReaderFactory(
     extends PartitionReaderFactory {
   override def createReader(
       partition: InputPartition): PartitionReader[InternalRow] = {
-    val file = partition.asInstanceOf[VehicleCsvPartition].file
-    new VehicleCsvPartitionReader(file, required, pushed, confProps)
+    new VehicleCsvPartitionReader(partition.asInstanceOf[VehicleCsvPartition],
+      required, pushed, confProps)
   }
 }
 
-private[sources] class VehicleCsvPartitionReader(file: String,
+private[sources] class VehicleCsvPartitionReader(part: VehicleCsvPartition,
     required: StructType, pushed: Array[Filter],
     confProps: Seq[(String, String)])
     extends PartitionReader[InternalRow] {
@@ -380,21 +406,34 @@ private[sources] class VehicleCsvPartitionReader(file: String,
   private val proj: Array[Int] = required.fields.map(f =>
     VehicleCsvSource.Schema.fieldIndex(f.name))
 
-  private val reader: BufferedReader = {
+  // Hadoop's line reader splits on LF, CRLF and CR, like
+  // BufferedReader.readLine and spark.read.text, and hands out bytes:
+  // no UTF-8 decode before the field split
+  private val reader: LineReader = {
+    val conf = IngestFiles.taskConf(confProps)
     // shared decompression dispatch (plain/.gz/.zip-first-entry; an
-    // empty zip yields zero rows, the CsvVehicleReader parity)
-    val in = graft.ingest.IngestFiles.openDecompressed(file,
-      graft.ingest.IngestFiles.taskConf(confProps))
-    new BufferedReader(
-      new InputStreamReader(in, StandardCharsets.UTF_8))
+    // empty zip yields zero rows, the CsvVehicleReader parity); only a
+    // plain file has ranges that start past byte 0
+    val in =
+      if (part.start == 0) IngestFiles.openDecompressed(part.file, conf)
+      else { val raw = IngestFiles.openRaw(part.file, conf); raw.seek(part.start); raw }
+    new LineReader(in, 1 << 16)
   }
+  private val line = new Text()
+  // bytes consumed so far; a line starting at or before `end` is ours
+  private var pos = part.start
+  // the line straddling `start` belongs to the range before it
+  if (part.start != 0) pos += reader.readLine(line)
 
   private var current: InternalRow = _
 
   override def next(): Boolean = {
-    var line = reader.readLine()
-    while (line != null) {
-      val rec = VehicleCsvSource.parseLine(line)
+    while (pos <= part.end) {
+      val n = reader.readLine(line)
+      if (n == 0) return false
+      pos += n
+      val rec = VehicleCsvSource.parseLine(
+        UTF8String.fromBytes(line.getBytes, 0, line.getLength))
       if (rec != null &&
           pushed.forall(VehicleCsvSource.Filters.eval(_, rec))) {
         val out = new Array[Any](proj.length)
@@ -407,7 +446,6 @@ private[sources] class VehicleCsvPartitionReader(file: String,
           .GenericInternalRow(out)
         return true
       }
-      line = reader.readLine()
     }
     false
   }

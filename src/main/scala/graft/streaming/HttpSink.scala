@@ -70,12 +70,48 @@ class HttpSink(
     attempts
   }
 
-  /** Sink a (batch) Dataset: per partition, chunk into `batchSize` and POST
-    * each chunk, with a final partial flush (CsvLoader.java:169). */
+  /** Sink a (batch) Dataset: per partition, [[postThrough]] drained. */
   def write(ds: Dataset[VehicleMessage]): Unit = {
     val sink = this
     ds.foreachPartition { (it: Iterator[VehicleMessage]) =>
-      it.grouped(sink.batchSize).foreach(chunk => sink.post(chunk))
+      sink.postThrough(it)(m => m).foreach(_ => ())
     }
+  }
+
+  /** Deliver `rows` as they stream past and yield them unchanged: each
+    * row's message joins the current chunk, a full chunk of `batchSize`
+    * is POSTed before the next row is pulled (CsvLoader.java:160-166),
+    * and the partial tail is POSTed when `rows` runs out
+    * (CsvLoader.java:169). Memory holds one chunk; a consumer that stops
+    * early leaves the tail unsent. */
+  def postThrough[T](rows: Iterator[T])(message: T => VehicleMessage): Iterator[T] =
+    new Iterator[T] {
+      private val chunk = new Chunk
+      override def hasNext: Boolean = rows.hasNext || { chunk.flush(); false }
+      override def next(): T = {
+        val r = rows.next()
+        chunk.add(message(r))
+        r
+      }
+    }
+
+  /** The chunk-and-POST loop: `add` POSTs the chunk once it holds
+    * `batchSize` messages, `flush` POSTs what is left. */
+  final class Chunk {
+    private val buf = scala.collection.mutable.ArrayBuffer.empty[VehicleMessage]
+    private var sent = 0L
+    /** Envelopes POSTed so far. */
+    def posts: Long = sent
+    def add(m: VehicleMessage): Unit = {
+      buf += m
+      if (buf.size >= batchSize) flush()
+    }
+    def flush(): Unit = if (buf.nonEmpty) {
+      post(buf.toSeq)
+      sent += 1
+      buf.clear()
+    }
+    /** Drop the unsent tail. */
+    def clear(): Unit = buf.clear()
   }
 }

@@ -64,6 +64,53 @@ class ExpressionsSpec extends SparkSpec {
     assert(parse("2015-99-99 99:99:99").isDefined)
   }
 
+  test("flex timestamp: property — fast path equals the format cascade") {
+    val years = Seq("1582", "1583", "1599", "1600", "1900", "1970", "2000",
+      "2015", "2016", "2100", "9999", "0001", "015", "20155")
+    val months = Seq("01", "02", "06", "11", "12", "00", "13", "99", "2")
+    val days = Seq("01", "14", "28", "29", "30", "31", "00", "32", "99", "7")
+    val hours = Seq("00", "09", "18", "23", "24", "99", "5")
+    val minsecs = Seq("00", "07", "51", "59", "60", "99")
+    val seps = Seq(" ", "T", "  ", "t", "_")
+    val fracs = Seq("", ".5", ".29", ".57", ".05", ".123", ".999", ".1234",
+      ".000001", ".123456", ".999999", ".1000005", ".987654321", ".1234567891",
+      ".9999999999999999", ".", ".x")
+    val zones = Seq("", "Z", "+05", "-05", "+00", "-00", "+23", "+24", "+5",
+      "+0530", "+05:30", "-0800", "-08:00", "z", "UTC", "+5Z")
+    val pads = Seq("", " ", "\t", " \n")
+    val junk = Seq("", "x", "0", " 1", "Z")
+    val rng = new scala.util.Random(20150214L)
+    def pick(xs: Seq[String]): String = xs(rng.nextInt(xs.size))
+    def ts(y: String, mo: String, d: String, h: String, mi: String, s: String,
+        sep: String, frac: String, zone: String): String =
+      s"$y-$mo-$d$sep$h:$mi:$s$frac$zone"
+    // every accepted shape (each separator and suffix, with fractions)
+    val shapes = for {
+      sep <- Seq(" ", "T"); frac <- fracs; zone <- zones
+    } yield ts("2015", "02", "14", "18", "51", "40", sep, frac, zone)
+    // calendar edges: leap days, month ends, the Gregorian cutover years
+    val edges = for {
+      y <- years; mo <- Seq("02", "04", "12"); d <- Seq("28", "29", "30", "31")
+      sep <- Seq(" ", "T"); zone <- Seq("", "Z", "-05")
+    } yield ts(y, mo, d, "23", "59", "59", sep, "", zone)
+    val fuzz = Seq.fill(20000) {
+      pick(pads) + ts(pick(years), pick(months), pick(days), pick(hours),
+        pick(minsecs), pick(minsecs), pick(seps), pick(fracs), pick(zones)) +
+        pick(junk) + pick(pads)
+    }
+    val inputs = shapes ++ edges ++ fuzz
+    var parsed = 0
+    for (s <- inputs) {
+      val u = org.apache.spark.unsafe.types.UTF8String.fromString(s)
+      val fast = FlexTimestamp.parseToMillis(u)
+      assert(fast == FlexTimestamp.parseToMillisCascade(u), s"input '$s'")
+      if (fast != null) parsed += 1
+    }
+    // the property is not vacuous: many inputs parse, many do not
+    assert(parsed > inputs.size / 10 && parsed < inputs.size * 9 / 10,
+      s"$parsed of ${inputs.size} parsed")
+  }
+
   test("flex timestamp: property — arbitrary strings never throw") {
     val strs = samples(Gen.asciiPrintableStr, 50) ++
       Seq(".", "+", "Z", "...", "2015-02-14.", ".5+Z", "2015-02-14 18:51:40.")

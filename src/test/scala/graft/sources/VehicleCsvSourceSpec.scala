@@ -666,4 +666,112 @@ class VehicleCsvSourceSpec extends SparkSpec {
         Seq((7L, 1L), (42L, 2L), (99L, 1L)))
     } finally spark.sql("DROP TABLE IF EXISTS vehicle_pings_dsv2")
   }
+
+  /** Runs `body` with `spark.sql.files.maxPartitionBytes` at `bytes`, the
+    * shared session's setting restored afterwards. */
+  private def withMaxPartitionBytes[T](bytes: Long)(body: => T): T = {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, bytes.toString)
+    try body
+    finally old match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
+
+  private def plannedScan(path: String): VehicleCsvScan =
+    new VehicleCsvScanBuilder(path,
+      org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
+      .build().asInstanceOf[VehicleCsvScan]
+
+  // LF, CRLF and lone-CR endings, blank lines (both kinds), a wide row,
+  // malformed rows, ids at 2^63 and 2^64 + 1, and no final newline
+  private val rangeCsv = Seq(
+    "2015-02-14 23:51:40+05,42,23.7689,90.3886\n",
+    "\n",
+    "2015-02-14 23:51:41,43,23.7690,90.3890\r\n",
+    "\r\n",
+    "2015-02-14T18:51:42.123Z,18446744073709551617,23.7701,90.3901\r\n",
+    "short,row\n",
+    "2015-02-14 23:51:43.500+05,9223372036854775808,23.7712,90.3912\n",
+    "2015-02-14 23:51:40+05,44,x,x,x,x,x,x,x,23.7689,90.3886,extra\r",
+    "2015-02-14 23:51:44,45,not_a_number,90.3890\n",
+    "\"2015-02-14 23:51:45\",\"46\",1.5,2.5\r\n",
+    "2015-02-14 23:51:46,47,1.5,2.5").mkString
+
+  test("byte-range splits: a plain file read in ranges of every size from " +
+      "1 byte up equals the Column reader") {
+    spark.sparkContext // the scan reads SparkSession.active
+    val path = writeFile(tmpDir, "ranges.csv", rangeCsv)
+    val want = canon(CsvVehicleReader.read(spark, path).collect().map(_.toSeq).toSeq)
+    assert(want.size == 7)
+    val len = rangeCsv.getBytes(StandardCharsets.UTF_8).length.toLong
+    // every size puts a range boundary inside, before and after each
+    // line ending, so each line straddles some boundary
+    for (size <- 1L to len + 1) withMaxPartitionBytes(size) {
+      val scan = plannedScan(path)
+      val parts = scan.planInputPartitions()
+      assert(parts.length == math.max(1L, (len + size - 1) / size), s"size $size")
+      val factory = scan.createReaderFactory()
+      val got = parts.toSeq.flatMap { p =>
+        val r = factory.createReader(p)
+        val buf = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
+        try while (r.next()) {
+          val row = r.get()
+          buf += Seq(row.getUTF8String(0).toString, row.getLong(1),
+            row.getDouble(2), row.getDouble(3), row.getLong(4))
+        } finally r.close()
+        buf
+      }
+      assert(canon(got) == want, s"ranges of $size bytes")
+    }
+    // the same through a real query: several read tasks, same rows
+    withMaxPartitionBytes(40) {
+      val df = viaDsv2(path)
+      assert(df.rdd.getNumPartitions == (len + 39) / 40)
+      assert(canon(df.collect().map(_.toSeq).toSeq) == want)
+    }
+  }
+
+  test("byte-range splits: .gz and .zip stay one partition per file, and " +
+      "micro-batches still read whole files") {
+    val dir = tmpDir
+    writeFile(dir, "a_plain.csv", rangeCsv)
+    val gz = new GZIPOutputStream(Files.newOutputStream(dir.resolve("b.csv.GZ")))
+    gz.write(rangeCsv.getBytes(StandardCharsets.UTF_8)); gz.close()
+    val zos = new ZipOutputStream(Files.newOutputStream(dir.resolve("c.zip")))
+    zos.putNextEntry(new ZipEntry("inner.csv"))
+    zos.write(rangeCsv.getBytes(StandardCharsets.UTF_8))
+    zos.closeEntry(); zos.close()
+    withMaxPartitionBytes(16) {
+      val parts = plannedScan(dir.toString).planInputPartitions()
+        .map(_.asInstanceOf[VehicleCsvPartition])
+      val perFile = parts.groupBy(p => p.file.substring(p.file.lastIndexOf('/') + 1))
+        .map { case (f, ps) => f -> ps.length }
+      val plainLen = rangeCsv.getBytes(StandardCharsets.UTF_8).length
+      assert(perFile == Map("a_plain.csv" -> (plainLen + 15) / 16,
+        "b.csv.GZ" -> 1, "c.zip" -> 1))
+      assert(parts.filter(_.file.endsWith(".GZ")).forall(p =>
+        p.start == 0 && p.end == Long.MaxValue))
+      val batch = canon(viaDsv2(dir.toString).collect().map(_.toSeq).toSeq)
+      assert(batch.size == 21)
+
+      // the streaming scan plans one whole-file partition per file
+      val seen = scala.collection.mutable.ArrayBuffer.empty[(Int, Seq[Seq[Any]])]
+      val q = spark.readStream.format("graft-vehicle-csv").load(dir.toString)
+        .writeStream
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .option("checkpointLocation",
+          Files.createTempDirectory("graft-ranges-ckpt").toString)
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          val rows = b.collect().map(_.toSeq).toSeq
+          seen.synchronized { seen += b.rdd.getNumPartitions -> rows }
+          ()
+        }.start()
+      q.awaitTermination()
+      assert(seen.filter(_._2.nonEmpty).map(_._1).toSeq == Seq(3))
+      assert(canon(seen.flatMap(_._2).toSeq) == batch)
+    }
+  }
 }
