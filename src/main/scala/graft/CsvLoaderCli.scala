@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.streaming.{HttpSink, VehicleLocation, VehicleMessage}
+import graft.streaming.HttpSink
 
 /** The reference's CLI surface (behavior of opentraffic/csv-loader
   * CsvLoader.java:31-70 `main`): `-f <csv>` (required) and `-u <url>`
@@ -57,10 +57,9 @@ object CsvLoaderCli {
       .select("vehicle_id_str", "vehicle_id", "lat", "lon", "ts_ms")
       .as[(String, Long, Double, Double, Long)]
       .mapPartitions { rows =>
-        sink.postThrough(rows) { case (_, id, lat, lon, ts) =>
-          // one single-location message per record (CsvLoader.java:152)
-          VehicleMessage(id, Seq(VehicleLocation(lat, lon, ts)))
-        }.map { case (str, id, _, _, _) => (str, id) }
+        // one single-location message per record (CsvLoader.java:152)
+        sink.postThrough(rows) { (chunk, r) => chunk.add(r._2, r._3, r._4, r._5) }
+          .map(r => (r._1, r._2))
       }
       .toDF("vehicle_id_str", "vehicle_id")
       .agg(

@@ -35,6 +35,16 @@ object Tables {
     spark.read.schema(sc).parquet(p)
   }
 
+  /** Forget the cached schemas of `dir` and of every path under it:
+    * a deleted scratch dir must not keep its entry, or the cache grows
+    * with every materialization of an iterative operator. */
+  private[graft] def evictSchemas(dir: java.nio.file.Path): Unit =
+    schemaCache.keySet.removeIf(k =>
+      java.nio.file.Paths.get(k).normalize().startsWith(dir))
+
+  /** Whether `p`'s schema is cached (for tests). */
+  private[graft] def schemaCached(p: String): Boolean = schemaCache.containsKey(p)
+
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     name match {
       case "events" => events(spark, sfDir)

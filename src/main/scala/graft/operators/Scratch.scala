@@ -105,10 +105,12 @@ object Scratch {
     * needs a storage lifecycle/TTL policy on the scratch prefix). A
     * long-lived driver looping iterative queries must release per-loop
     * dirs here or disk grows unboundedly. Only paths under this JVM's
-    * scratch root are deleted — anything else is refused. */
+    * scratch root are deleted — anything else is refused. The path's
+    * cached parquet schema ([[graft.Tables.parquet]]) goes with it. */
   def release(path: String): Unit = {
     val p = java.nio.file.Paths.get(path).normalize()
     require(p.startsWith(root), s"refusing to delete non-scratch path $path")
     deleteTree(p)
+    graft.Tables.evictSchemas(p)
   }
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{DoubleType, LongType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.streaming.{HttpSink, VehicleLocation, VehicleMessage}
+import graft.streaming.HttpSink
 
 /** The reference's HTTP delivery (CsvLoader.java:160-166, 196-235) as a
   * first-class DataSourceV2 SINK — `pings.writeStream.format(
@@ -233,8 +233,8 @@ private[sources] class HttpSinkDataWriter(sink: HttpSink, idx: PingIndices)
     require(!row.isNullAt(idx.vid) && !row.isNullAt(idx.lat) &&
         !row.isNullAt(idx.lon) && !row.isNullAt(idx.ts),
       "graft-http-sink: null ping field (upstream must drop malformed rows)")
-    chunk.add(VehicleMessage(row.getLong(idx.vid), Seq(VehicleLocation(
-      row.getDouble(idx.lat), row.getDouble(idx.lon), row.getLong(idx.ts)))))
+    chunk.add(row.getLong(idx.vid), row.getDouble(idx.lat),
+      row.getDouble(idx.lon), row.getLong(idx.ts))
     rows += 1
   }
 

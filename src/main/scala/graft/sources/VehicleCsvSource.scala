@@ -13,6 +13,7 @@ import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.{And, DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Not, Or}
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.{BigIntLow64, FlexTimestamp}
@@ -26,11 +27,13 @@ import graft.ingest.{CsvFields, IngestFiles}
   * decompression, per-record arity dispatch (narrow `(ts,vid,lat,lon)`
   * vs wide taxi rows reading lat/lon from cols 9,10), permissive drops
   * for bad arity / unparseable doubles / unparseable timestamps / bad
-  * vehicle ids, and the BigInteger-low-64 id wrap. Parsing calls the
-  * SAME JVM functions as the Column pipeline ([[CsvFields.split]],
-  * [[BigIntLow64.low64]], [[FlexTimestamp.parseToMillis]]), and
-  * VehicleCsvSourceSpec pins row-for-row equality against
-  * `CsvVehicleReader.read` on every fixture class.
+  * vehicle ids, and the BigInteger-low-64 id wrap. Parsing has a byte
+  * fast path for plain ASCII lines and otherwise calls the SAME JVM
+  * functions as the Column pipeline ([[CsvFields.split]],
+  * [[BigIntLow64.low64]], [[FlexTimestamp.parseToMillis]]; see
+  * [[VehicleCsvSource.parseLine]]), and VehicleCsvSourceSpec pins
+  * row-for-row equality against `CsvVehicleReader.read` on every
+  * fixture class.
   *
   * Why a DSv2 source when the Column pipeline exists: it makes the
   * ingest a CATALOG-LEVEL citizen — usable from SQL (`CREATE TABLE …
@@ -201,18 +204,71 @@ object VehicleCsvSource {
 
   /** One parsed record in schema order; null = drop. Shared by the
     * reader so the dispatch/drop logic lives in exactly one place. The
-    * record holds copies: `line` may be a reused buffer. */
+    * record holds copies: `line` may be a reused buffer.
+    *
+    * Fast path: a line of ASCII bytes with no `"` is cut into fields at
+    * its commas, found as byte offsets, with no decode (without quotes
+    * every comma ends a field, as in [[CsvFields.split]]). lat/lon are
+    * read, after `String.trim`'s trim, as `[+-]digits[.digits]`: with m
+    * the digits as one integer and k the digits after the dot, the value
+    * is m / 10^k when m <= 2^53 and k <= 22. Both operands are then exact
+    * doubles, so the one division is the correctly rounded value of the
+    * decimal, which is what `Double.valueOf` returns. The id goes through
+    * [[BigIntLow64.low64]] and the timestamp through
+    * [[FlexTimestamp.parseToMillis]], each with its own fast path. A
+    * lat/lon the fast path declines (an exponent, `NaN`, `Infinity`, hex,
+    * a `d`/`f` suffix, a longer mantissa, junk) goes through the
+    * fallback's `Double.valueOf`, and a line with a quote or a non-ASCII
+    * byte goes whole through [[parseLineFallback]], the [[CsvFields.split]]
+    * path, unchanged. `VehicleCsvSourceSpec` pins the two paths equal. */
   private[sources] def parseLine(line: UTF8String): Array[Any] = {
+    val base = line.getBaseObject
+    val off = line.getBaseOffset
+    val len = line.numBytes()
+    // offsets of the first commas: fields 0-3 and 9-10 end at or before them
+    val commas = new Array[Int](MaxCommas)
+    var nc = 0
+    var i = 0
+    while (i < len) {
+      val b = Platform.getByte(base, off + i)
+      if (b < 0 || b == '"') return parseLineFallback(line)
+      if (b == ',') {
+        if (nc < MaxCommas) commas(nc) = i
+        nc += 1
+      }
+      i += 1
+    }
+    val n = nc + 1
+    // a 10-field row has a lat in field 9 but no lon in field 10
+    if (n < 4 || n == 10) return null
+    def from(f: Int): Int = if (f == 0) 0 else commas(f - 1) + 1
+    def until(f: Int): Int = if (f < nc) commas(f) else len
+    def field(f: Int): UTF8String =
+      UTF8String.fromAddress(base, off + from(f), until(f) - from(f))
+    def coord(f: Int): java.lang.Double = {
+      val d = asciiDouble(base, off, from(f), until(f))
+      if (java.lang.Double.isNaN(d)) toDouble(field(f)) else java.lang.Double.valueOf(d)
+    }
+    val lat = coord(if (n > 9) 9 else 2)
+    if (lat == null) return null
+    val lon = coord(if (n > 9) 10 else 3)
+    if (lon == null) return null
+    val vidStr = field(1).copy()
+    val vid = BigIntLow64.low64(vidStr)
+    if (vid == null) return null
+    val ts = FlexTimestamp.parseToMillis(field(0))
+    if (ts == null) null else Array[Any](vidStr, vid, lat, lon, ts)
+  }
+
+  /** [[parseLine]] with no fast path: every line through
+    * [[CsvFields.split]], every lat/lon through `Double.valueOf`. */
+  private[sources] def parseLineFallback(line: UTF8String): Array[Any] = {
     val f = CsvFields.split(line)
     if (f == null) return null
     val n = f.numElements()
     if (n < 4) return null
     def fld(i: Int): UTF8String =
       if (i < n) f.getUTF8String(i) else null
-    def toDouble(s: UTF8String): java.lang.Double =
-      if (s == null) null
-      else try java.lang.Double.valueOf(s.toString.trim)
-      catch { case _: NumberFormatException => null }
     val vidStr = fld(1)
     val vid = if (vidStr == null) null else BigIntLow64.low64(vidStr)
     val lat = toDouble(if (n > 9) fld(9) else fld(2))
@@ -220,6 +276,47 @@ object VehicleCsvSource {
     val ts = if (fld(0) == null) null else FlexTimestamp.parseToMillis(fld(0))
     if (vid == null || lat == null || lon == null || ts == null) null
     else Array[Any](vidStr, vid, lat, lon, ts)
+  }
+
+  private def toDouble(s: UTF8String): java.lang.Double =
+    if (s == null) null
+    else try java.lang.Double.valueOf(s.toString.trim)
+    catch { case _: NumberFormatException => null }
+
+  private final val MaxCommas = 11
+  private final val MaxExactMantissa = 1L << 53
+  private final val MaxFracDigits = 22
+  /** 10^0 .. 10^22, each an exact double. */
+  private val pow10: Array[Double] = Array.iterate(1.0, MaxFracDigits + 1)(_ * 10)
+
+  /** The bytes [`from`, `until`) at `off` of `base` as a double (see
+    * [[parseLine]]), or NaN, which the fast path never yields, when they
+    * are not of its shape. */
+  private def asciiDouble(base: AnyRef, off: Long, from: Int, until: Int): Double = {
+    def at(i: Int): Int = Platform.getByte(base, off + i) & 0xff
+    var a = from
+    var b = until
+    while (a < b && at(a) <= ' ') a += 1
+    while (b > a && at(b - 1) <= ' ') b -= 1
+    val neg = a < b && at(a) == '-'
+    if (a < b && (at(a) == '-' || at(a) == '+')) a += 1
+    var m = 0L
+    var digits = 0
+    var frac = -1 // digits after the dot; -1 before it
+    while (a < b) {
+      val c = at(a)
+      if (c == '.' && frac < 0) frac = 0
+      else if (c >= '0' && c <= '9') {
+        m = m * 10 + (c - '0')
+        if (m > MaxExactMantissa) return Double.NaN
+        digits += 1
+        if (frac >= 0) frac += 1
+      } else return Double.NaN
+      a += 1
+    }
+    if (digits == 0 || frac > MaxFracDigits) return Double.NaN
+    val v = m / pow10(math.max(frac, 0))
+    if (neg) -v else v
   }
 }
 

@@ -35,36 +35,48 @@ class HttpSink(
   /** POST one envelope; retries on IOException per the contract above.
     * Returns the number of attempts made; throws after maxRetries. */
   def post(messages: Seq[VehicleMessage]): Int = {
-    val body = ProtoEnvelope.encodeEnvelope(sourceId, messages)
+    val w = new ProtoEnvelope.EnvelopeWriter(sourceId, messages.size)
+    messages.foreach(w.add)
+    post(w)
+  }
+
+  /** POST the envelope `w` holds, straight from its buffer. Each
+    * attempt's connection is released before the next one starts. */
+  private def post(w: ProtoEnvelope.EnvelopeWriter): Int = {
     var attempts = 0
     var sent = false
     while (!sent) {
       attempts += 1
-      try {
-        val conn = URI.create(url).toURL.openConnection()
+      var conn: HttpURLConnection = null
+      val failure: IOException = try {
+        conn = URI.create(url).toURL.openConnection()
           .asInstanceOf[HttpURLConnection]
         conn.setRequestMethod("POST")
         conn.setDoOutput(true)
         conn.setConnectTimeout(connectTimeoutMs)
         conn.setReadTimeout(connectTimeoutMs)
         conn.setRequestProperty("Content-Type", "application/octet-stream")
-        conn.setFixedLengthStreamingMode(body.length)
+        conn.setFixedLengthStreamingMode(w.size)
         val os = conn.getOutputStream
-        try { os.write(body); os.flush() } finally os.close()
+        try { w.writeTo(os); os.flush() } finally os.close()
         val code = conn.getResponseCode
         if (code < 200 || code >= 300) {
           // reference semantics: log, do NOT retry, count as sent
-          logWarning(s"HTTP $code from $url for batch of ${messages.size}; not retried")
+          logWarning(s"HTTP $code from $url for batch of ${w.messages}; not retried")
         }
-        conn.disconnect()
-        sent = true
+        null
       } catch {
-        case e: IOException =>
-          if (attempts > maxRetries)
-            throw new IOException(
-              s"giving up after $attempts attempts posting to $url", e)
-          logWarning(s"POST to $url failed (${e.getMessage}); retrying in ${backoffMs}ms")
-          Thread.sleep(backoffMs)
+        case e: IOException => e
+      } finally {
+        if (conn != null) conn.disconnect()
+      }
+      if (failure == null) sent = true
+      else {
+        if (attempts > maxRetries)
+          throw new IOException(
+            s"giving up after $attempts attempts posting to $url", failure)
+        logWarning(s"POST to $url failed (${failure.getMessage}); retrying in ${backoffMs}ms")
+        Thread.sleep(backoffMs)
       }
     }
     attempts
@@ -74,44 +86,50 @@ class HttpSink(
   def write(ds: Dataset[VehicleMessage]): Unit = {
     val sink = this
     ds.foreachPartition { (it: Iterator[VehicleMessage]) =>
-      sink.postThrough(it)(m => m).foreach(_ => ())
+      sink.postThrough(it)(_ add _).foreach(_ => ())
     }
   }
 
-  /** Deliver `rows` as they stream past and yield them unchanged: each
-    * row's message joins the current chunk, a full chunk of `batchSize`
-    * is POSTed before the next row is pulled (CsvLoader.java:160-166),
-    * and the partial tail is POSTed when `rows` runs out
-    * (CsvLoader.java:169). Memory holds one chunk; a consumer that stops
-    * early leaves the tail unsent. */
-  def postThrough[T](rows: Iterator[T])(message: T => VehicleMessage): Iterator[T] =
+  /** Deliver `rows` as they stream past and yield them unchanged: `add`
+    * puts each row's message into the current chunk, a full chunk of
+    * `batchSize` is POSTed before the next row is pulled
+    * (CsvLoader.java:160-166), and the partial tail is POSTed when `rows`
+    * runs out (CsvLoader.java:169). Memory holds one chunk; a consumer
+    * that stops early leaves the tail unsent. */
+  def postThrough[T](rows: Iterator[T])(add: (Chunk, T) => Unit): Iterator[T] =
     new Iterator[T] {
       private val chunk = new Chunk
       override def hasNext: Boolean = rows.hasNext || { chunk.flush(); false }
       override def next(): T = {
         val r = rows.next()
-        chunk.add(message(r))
+        add(chunk, r)
         r
       }
     }
 
-  /** The chunk-and-POST loop: `add` POSTs the chunk once it holds
-    * `batchSize` messages, `flush` POSTs what is left. */
+  /** The chunk-and-POST loop over one reused [[ProtoEnvelope.EnvelopeWriter]]:
+    * `add` encodes the message into the chunk's envelope and POSTs it once
+    * it holds `batchSize` messages, `flush` POSTs what is left. */
   final class Chunk {
-    private val buf = scala.collection.mutable.ArrayBuffer.empty[VehicleMessage]
+    private val envelope = new ProtoEnvelope.EnvelopeWriter(sourceId, batchSize)
     private var sent = 0L
     /** Envelopes POSTed so far. */
     def posts: Long = sent
-    def add(m: VehicleMessage): Unit = {
-      buf += m
-      if (buf.size >= batchSize) flush()
+    /** Add the one-location message of one record. */
+    def add(vehicleId: Long, lat: Double, lon: Double, timestamp: Long): Unit = {
+      envelope.add(vehicleId, lat, lon, timestamp)
+      if (envelope.messages >= batchSize) flush()
     }
-    def flush(): Unit = if (buf.nonEmpty) {
-      post(buf.toSeq)
+    def add(m: VehicleMessage): Unit = {
+      envelope.add(m)
+      if (envelope.messages >= batchSize) flush()
+    }
+    def flush(): Unit = if (envelope.messages > 0) {
+      post(envelope)
       sent += 1
-      buf.clear()
+      envelope.clear()
     }
     /** Drop the unsent tail. */
-    def clear(): Unit = buf.clear()
+    def clear(): Unit = envelope.clear()
   }
 }

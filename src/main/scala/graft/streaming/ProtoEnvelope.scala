@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.io.ByteArrayOutputStream
-
 /** Hand-rolled protobuf wire-format encoder for the two-message envelope
   * (shape from opentraffic/csv-loader CsvLoader.java:150-156, 206-211; the
   * reference delegates to a generated `ExchangeFormat` class — we mirror
@@ -15,62 +13,138 @@ import java.io.ByteArrayOutputStream
   *
   * Zero dependencies (the container has no protobuf-java / spark-protobuf
   * descriptor tooling); the wire format of varint + fixed64 + length-
-  * delimited fields is public protobuf spec. Encoding runs inside
-  * `foreachBatch` on executors — one byte array per ≤10k-message batch.
+  * delimited fields is public protobuf spec. Every field is written, in
+  * field order, defaults included.
+  *
+  * Encoding goes through one [[EnvelopeWriter]] per envelope: it appends
+  * each message to a single growable byte array, computing the nested
+  * length prefixes from the field values instead of buffering the inner
+  * messages, so a message costs no temporary arrays. The HTTP sink's
+  * chunk keeps one writer per task and POSTs straight from its buffer;
+  * [[encodeEnvelope]] is a thin wrapper over it. The bytes are those of
+  * the nested encoding (each message and location encoded on its own,
+  * then length-prefixed into its parent), which `EnvelopeWriterSpec`
+  * keeps as its oracle and compares byte for byte.
   */
 object ProtoEnvelope {
 
-  private def writeVarint(out: ByteArrayOutputStream, v0: Long): Unit = {
-    var v = v0
-    while ((v & ~0x7fL) != 0) {
-      out.write(((v & 0x7f) | 0x80).toInt)
-      v >>>= 7
+  /** Most bytes one single-location message adds to an envelope: tag,
+    * length and body, with 10-byte varints for a negative id and
+    * timestamp. */
+  private final val MaxSingleMessageBytes = 44
+
+  /** Bytes of `v` as a protobuf varint (a negative value takes 10). */
+  private def varintSize(v: Long): Int =
+    (63 - java.lang.Long.numberOfLeadingZeros(v | 1L)) / 7 + 1
+
+  /** Body length of one `VehicleLocation`: two fixed64 fields and a varint
+    * field, each behind a one-byte tag. */
+  private def locationSize(timestamp: Long): Int = 19 + varintSize(timestamp)
+
+  /** Appends envelopes to one growable, unsynchronized byte array. The
+    * envelope header (`sourceId`) is written once; each `add` appends one
+    * `messages` entry. The first buffer holds `expectedMessages`
+    * single-location messages without growing, so a one-message envelope
+    * gets a 55-byte array and a 10,000-message chunk never grows. Not
+    * thread-safe. */
+  final class EnvelopeWriter(sourceId: Long, expectedMessages: Int) {
+    private var buf = new Array[Byte](
+      11 + MaxSingleMessageBytes * math.max(expectedMessages, 1))
+    private var pos = 0
+    private var count = 0
+    // header: sourceId = 1 (varint)
+    putByte(0x08)
+    putVarint(sourceId)
+    private val headerBytes = pos
+
+    /** Messages appended since construction or the last [[clear]]. */
+    def messages: Int = count
+
+    /** Encoded length of the envelope so far. */
+    def size: Int = pos
+
+    /** Append `VehicleMessage{vehicleId, [VehicleLocation{lat, lon, ts}]}`,
+      * the reference's one-location message per record. */
+    def add(vehicleId: Long, lat: Double, lon: Double, timestamp: Long): Unit = {
+      val loc = locationSize(timestamp)
+      val msg = 1 + varintSize(vehicleId) + 2 + loc
+      ensure(MaxSingleMessageBytes)
+      putByte(0x12) // messages = 2 (length-delimited)
+      putVarint(msg)
+      putByte(0x08) // vehicleId = 1 (varint)
+      putVarint(vehicleId)
+      putLocation(loc, lat, lon, timestamp)
+      count += 1
     }
-    out.write(v.toInt)
-  }
 
-  private def writeTag(out: ByteArrayOutputStream, field: Int, wireType: Int): Unit =
-    writeVarint(out, (field.toLong << 3) | wireType)
+    /** Append a message with any number of locations. */
+    def add(m: VehicleMessage): Unit = {
+      var msg = 1 + varintSize(m.vehicleId)
+      m.locations.foreach { l =>
+        val loc = locationSize(l.timestamp)
+        msg += 1 + varintSize(loc) + loc
+      }
+      ensure(1 + varintSize(msg) + msg)
+      putByte(0x12)
+      putVarint(msg)
+      putByte(0x08)
+      putVarint(m.vehicleId)
+      m.locations.foreach(l => putLocation(locationSize(l.timestamp), l.lat, l.lon, l.timestamp))
+      count += 1
+    }
 
-  private def writeDouble(out: ByteArrayOutputStream, field: Int, d: Double): Unit = {
-    writeTag(out, field, 1) // fixed64
-    val bits = java.lang.Double.doubleToLongBits(d)
-    var i = 0
-    while (i < 8) { out.write(((bits >>> (8 * i)) & 0xff).toInt); i += 1 }
-  }
+    /** The envelope so far, as a new array. */
+    def toByteArray: Array[Byte] = java.util.Arrays.copyOf(buf, pos)
 
-  private def writeInt64(out: ByteArrayOutputStream, field: Int, v: Long): Unit = {
-    writeTag(out, field, 0) // varint
-    writeVarint(out, v)
-  }
+    /** Write the envelope so far to `out`, with no copy. */
+    def writeTo(out: java.io.OutputStream): Unit = out.write(buf, 0, pos)
 
-  private def writeBytes(out: ByteArrayOutputStream, field: Int, b: Array[Byte]): Unit = {
-    writeTag(out, field, 2) // length-delimited
-    writeVarint(out, b.length.toLong)
-    out.write(b, 0, b.length)
-  }
+    /** Drop every message, keep the header and the buffer. */
+    def clear(): Unit = {
+      pos = headerBytes
+      count = 0
+    }
 
-  def encodeLocation(l: VehicleLocation): Array[Byte] = {
-    val out = new ByteArrayOutputStream(32)
-    writeDouble(out, 1, l.lat)
-    writeDouble(out, 2, l.lon)
-    writeInt64(out, 3, l.timestamp)
-    out.toByteArray
-  }
+    private def putLocation(loc: Int, lat: Double, lon: Double, timestamp: Long): Unit = {
+      putByte(0x12) // locations = 2 (length-delimited); loc < 128
+      putByte(loc)
+      putByte(0x09) // lat = 1 (fixed64)
+      putFixed64(java.lang.Double.doubleToLongBits(lat))
+      putByte(0x11) // lon = 2 (fixed64)
+      putFixed64(java.lang.Double.doubleToLongBits(lon))
+      putByte(0x18) // timestamp = 3 (varint)
+      putVarint(timestamp)
+    }
 
-  def encodeMessage(m: VehicleMessage): Array[Byte] = {
-    val out = new ByteArrayOutputStream(64)
-    writeInt64(out, 1, m.vehicleId)
-    m.locations.foreach(l => writeBytes(out, 2, encodeLocation(l)))
-    out.toByteArray
+    private def ensure(more: Int): Unit =
+      if (buf.length - pos < more)
+        buf = java.util.Arrays.copyOf(buf, math.max(buf.length * 2, pos + more))
+
+    private def putByte(b: Int): Unit = { buf(pos) = b.toByte; pos += 1 }
+
+    private def putVarint(v0: Long): Unit = {
+      var v = v0
+      while ((v & ~0x7fL) != 0) {
+        buf(pos) = ((v & 0x7f) | 0x80).toByte
+        pos += 1
+        v >>>= 7
+      }
+      buf(pos) = v.toByte
+      pos += 1
+    }
+
+    private def putFixed64(bits: Long): Unit = {
+      var i = 0
+      while (i < 8) { buf(pos + i) = (bits >>> (8 * i)).toByte; i += 1 }
+      pos += 8
+    }
   }
 
   /** `VehicleMessageEnvelope{sourceId, messages}` → wire bytes. */
   def encodeEnvelope(sourceId: Long, messages: Seq[VehicleMessage]): Array[Byte] = {
-    val out = new ByteArrayOutputStream(64 * (messages.size + 1))
-    writeInt64(out, 1, sourceId)
-    messages.foreach(m => writeBytes(out, 2, encodeMessage(m)))
-    out.toByteArray
+    val w = new EnvelopeWriter(sourceId, messages.size)
+    messages.foreach(w.add)
+    w.toByteArray
   }
 
   // ---- minimal decoder (tests + receiver stubs) ----

@@ -127,6 +127,37 @@ class ExpressionsSpec extends SparkSpec {
     assert(rows.toSeq == Seq(Some(42L), Some(42L), Some(1L), Some(-7L), None))
   }
 
+  test("biginteger low-64: property — fast path equals the BigInteger parse") {
+    val digits18 = "123456789012345678"
+    val bodies = Seq("0", "7", "42", "00042", "-0", "+0", "-7", "+7",
+      digits18, "-" + digits18, "+" + digits18, "999999999999999999",
+      "-999999999999999999", "1" + digits18, "9" + digits18, // 19 digits
+      "9223372036854775807", "9223372036854775808", "-9223372036854775808",
+      "-9223372036854775809", "18446744073709551615", "18446744073709551616",
+      "12" + digits18, "000000000000000000042", "0" * 18, "0" * 19,
+      "", "+", "-", "+-1", "--1", "1-", "4 2", "4,2", "x42", "42x", "1e5",
+      "0x1F", "1.0", "٤٢", "４２", "42 ", " 42")
+    val pads = Seq("", " ", "\t", "\n", "\u0001", " \u001f", "\u007f", "\u0000 ")
+    val edges = for (b <- bodies; l <- pads; r <- pads) yield l + b + r
+    val rng = new scala.util.Random(64L)
+    val alphabet = "0123456789000+- \t\u0001x.é"
+    val fuzz = Seq.fill(20000) {
+      val s = Seq.fill(rng.nextInt(24))(alphabet(rng.nextInt(alphabet.length))).mkString
+      if (rng.nextBoolean()) s.filter(c => c.isDigit && c < 128) else s
+    }
+    val inputs = edges ++ fuzz
+    var parsed = 0
+    for (s <- inputs) {
+      val u = org.apache.spark.unsafe.types.UTF8String.fromString(s)
+      val fast = BigIntLow64.low64(u)
+      assert(fast == BigIntLow64.low64Fallback(u), s"input '$s'")
+      if (fast != null) parsed += 1
+    }
+    // the property is not vacuous: many inputs parse, many do not
+    assert(parsed > inputs.size / 10 && parsed < inputs.size * 9 / 10,
+      s"$parsed of ${inputs.size} parsed")
+  }
+
   test("cosine similarity: identical=1, orthogonal=0, opposite=-1, zero→0") {
     val df = Seq(
       (Array(1f, 2f, 3f), Array(1f, 2f, 3f)),

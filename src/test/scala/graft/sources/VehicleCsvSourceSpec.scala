@@ -774,4 +774,90 @@ class VehicleCsvSourceSpec extends SparkSpec {
       assert(canon(seen.flatMap(_._2).toSeq) == batch)
     }
   }
+
+  test("parseLine: property — the ASCII fast path equals the CsvFields.split " +
+      "fallback, drops included") {
+    import org.apache.spark.unsafe.types.UTF8String
+    val digits18 = "123456789012345678"
+    val stamps = Seq("2015-02-14 23:51:40+05", " 2015-02-14T18:51:42.123Z ",
+      "2015-02-14 23:51:41", "2015-02-14 23:51:43.500+05", "garbage", "")
+    val ids = Seq("42", " 00042 ", "-7", "+7", "-0", digits18, "-" + digits18,
+      "9" + digits18, "18446744073709551617", "000000000000000000042", "+", "-",
+      "", "x42", "\t42\u0001", "4 2")
+    val coords = Seq("23.7689", " 90.3886 ", "\t-90.5\n", "\u0001 12.5\u0007",
+      "+5", "-5", "5.", ".5", "-.5", ".", "-0", "-0.000", "+0.0", "0", "007.25",
+      "9007199254740992", "9007199254740993", "-9007199254740992",
+      "0.9007199254740992", "0.9007199254740993", "900719925474099.2",
+      "9007199254740992.0", "90071992547409920",
+      "0." + "0" * 21 + "1", "0." + "0" * 22 + "1", "1." + "0" * 22, "1." + "0" * 23,
+      "1.2345678901234567890123", "123.4567890123456789012",
+      "1e5", "1E-3", "-1.5e+2", "NaN", "-NaN", "Infinity", "-Infinity",
+      "+Infinity", "0x1p3", "0x1.8p1", "1.5d", "1.5f", "1.5D", "2F",
+      "", " ", "-", "+", "--1", "+-1", "1.2.3", "1 2", "1_0", "12\u007f")
+    val rng = new scala.util.Random(9007199254740993L)
+    def pick(xs: Seq[String]): String = xs(rng.nextInt(xs.size))
+    // a decimal with a mantissa on both sides of 2^53 and 0-24 fraction digits
+    def decimal(): String = {
+      val m = ((rng.nextLong() >>> 10) >>> rng.nextInt(54)).toString
+      val k = rng.nextInt(25)
+      val d = "0" * math.max(0, k + 1 - m.length) + m
+      val body = d.substring(0, d.length - k) + "." + d.substring(d.length - k)
+      (if (rng.nextBoolean()) "-" else "") +
+        (if (k == 0 && rng.nextBoolean()) body.dropRight(1) else body)
+    }
+    def narrow(ts: String, id: String, lat: String, lon: String): String =
+      Seq(ts, id, lat, lon).mkString(",")
+    def wide(n: Int, ts: String, id: String, lat: String, lon: String,
+        filler: String = "x"): String =
+      (Seq(ts, id) ++ Seq.fill(7)(filler) ++ Seq(lat, lon) ++
+        Seq.fill(n - 11)("extra")).take(n).mkString(",")
+    val edges = coords.flatMap(c => Seq(
+      narrow(stamps(0), "42", c, "90.1"), narrow(stamps(1), "7", "23.5", c),
+      wide(11, stamps(2), "42", c, "90.1"), wide(12, stamps(0), "9", "23.5", c))) ++
+      ids.flatMap(id => stamps.map(ts => narrow(ts, id, "23.5", "90.1"))) ++
+      Seq(
+        "", ",,,", "a,b,c", "2015-02-14 23:51:40,42,23.5", // too few fields
+        narrow(stamps(0), "42", "23.5", "90.1") + ",", // 5 fields, last empty
+        wide(10, stamps(0), "42", "23.5", "90.1"), // lat but no lon
+        wide(11, stamps(0), "42", "23.5", "90.1"),
+        wide(11, stamps(0), "42", "23.5", "90.1", filler = "caf\u00e9"),
+        wide(12, stamps(0), "42", "23.5", "90.1", filler = "\"q,u\""),
+        narrow(stamps(0), "\"42\"", "23.5", "90.1"),
+        narrow(stamps(0), "42", "\"23.5\"", "90.1"),
+        narrow(stamps(0), "42", "23\"5", "90.1"),
+        narrow(stamps(0), "42", "\"2,3\"", "90.1"),
+        narrow(stamps(0), "4\u00e92", "23.5", "90.1"),
+        narrow(stamps(0), "42", "\u0662\u0663", "90.1"))
+    val fuzz = Seq.fill(20000) {
+      val lat = if (rng.nextInt(3) == 0) pick(coords) else decimal()
+      val lon = if (rng.nextInt(3) == 0) pick(coords) else decimal()
+      val ts = pick(stamps)
+      val id = pick(ids)
+      rng.nextInt(10) match {
+        case 0 => wide(10 + rng.nextInt(3), ts, id, lat, lon)
+        case 1 => narrow(ts, id, lat, lon).patch(rng.nextInt(12), pick(Seq(",", "\"", "\u00e9")), 0)
+        case _ => narrow(ts, id, lat, lon)
+      }
+    }
+    def canonical(rec: Array[Any]): Seq[Any] =
+      if (rec == null) null
+      else rec.toSeq.map {
+        case d: java.lang.Double => ("bits", java.lang.Double.doubleToRawLongBits(d))
+        case x => x
+      }
+    val inputs = edges ++ fuzz
+    var kept = 0
+    for (line <- inputs) {
+      // the reader hands parseLine a view into its line buffer
+      val bytes = ("#" + line + "#").getBytes(StandardCharsets.UTF_8)
+      val view = UTF8String.fromBytes(bytes, 1, bytes.length - 2)
+      val fast = canonical(VehicleCsvSource.parseLine(view))
+      assert(fast == canonical(VehicleCsvSource.parseLineFallback(view)),
+        s"line '$line'")
+      if (fast != null) kept += 1
+    }
+    // the property is not vacuous: many lines parse, many drop
+    assert(kept > inputs.size / 10 && kept < inputs.size * 9 / 10,
+      s"$kept of ${inputs.size} kept")
+  }
 }
