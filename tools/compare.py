@@ -145,7 +145,8 @@ def main(sf_dir, out_dir, receipt_path=None):
         # dirty=True means the working tree had uncommitted changes when
         # the compare ran (the hash alone then under-identifies the tree).
         doc = {"commit": _git("rev-parse", "HEAD"),
-               "dirty": bool(_git("status", "--porcelain")),
+               # a clean tree prints nothing; a failed git call reads dirty
+               "dirty": _git("status", "--porcelain", allow_empty=True) != "",
                "ok": ok, "fail": fail, "oracled": len(oracle),
                "queries": receipt}
         json.dump(doc, open(receipt_path, "w"), indent=2, sort_keys=True)
@@ -154,7 +155,7 @@ def main(sf_dir, out_dir, receipt_path=None):
     return 1 if fail else 0
 
 
-def _git(*args):
+def _git(*args, allow_empty=False):
     import subprocess
     # r19 ADVICE fix: derive the repo dir from the absolute script path —
     # `python3 compare.py` from inside tools/ has no slash in __file__, so
@@ -163,10 +164,11 @@ def _git(*args):
     # self-binding anchor). Also warn loudly when that still happens.
     try:
         repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        out = subprocess.run(
+        p = subprocess.run(
             ["git", *args], capture_output=True, text=True, timeout=10,
-            cwd=repo).stdout.strip()
-        if not out:
+            cwd=repo)
+        out = p.stdout.strip()
+        if p.returncode != 0 or (not out and not allow_empty):
             print("WARN: git %s resolved empty — receipt will not be "
                   "self-binding" % " ".join(args), file=sys.stderr)
             return "unknown"
