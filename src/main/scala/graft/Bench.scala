@@ -69,6 +69,26 @@ object Bench {
     exec.orElse(headFile).getOrElse("unknown")
   }
 
+  /** The last stdout line: the run's totals without the per-query map, at
+    * most 1,500 characters however many queries ran or however long
+    * their names, so a reader that keeps only the tail of stdout still
+    * gets a whole JSON record. `full` names the file holding the full
+    * line. String fields longer than 200 characters keep their tail. */
+  private[graft] def compactLine(results: Seq[(String, Double)], calStart: Double,
+      calEnd: Double, commit: String, sf: String, full: String): String = {
+    def str(s: String): String = {
+      val clipped = if (s.length <= 200) s else "..." + s.takeRight(197)
+      "\"" + clipped.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    }
+    val total = results.map(_._2).sum
+    val positive = results.map(_._2).filter(_ > 0)
+    val geomean =
+      if (positive.isEmpty) 0.0 else math.exp(positive.map(math.log).sum / positive.size)
+    s"""{"metric":"total","value":$total,"unit":"sec","calibration":$calStart,""" +
+      s""""calibration_end":$calEnd,"commit":${str(commit)},"n":${results.size},""" +
+      s""""sf":${str(sf)},"geomean":$geomean,"full":${str(full)}}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -138,7 +158,8 @@ object Bench {
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","calibration":$calStart,"calibration_end":$calEnd,"commit":"$gitHead","queries":$qs,"sf":"$sfDir"}"""
+    val commit = gitHead
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","calibration":$calStart,"calibration_end":$calEnd,"commit":"$commit","queries":$qs,"sf":"$sfDir"}"""
     println(line)
     // the driver captures only a 2000-char tail of stdout, which truncates
     // the per-query map once the registry is large — persist the full line
@@ -156,6 +177,8 @@ object Bench {
       case scala.util.control.NonFatal(e) =>
         System.err.println(s"[bench] could not write $outPath: $e")
     }
+    // output only, after the timed sweep and the full line
+    println(compactLine(results, calStart, calEnd, commit, sfDir, outPath))
     spark.stop()
   }
 }

@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import scala.collection.mutable
+
+import org.apache.spark.Partitioner
+import org.apache.spark.sql.SparkSession
 
 import graft.streaming.HttpSink
 
@@ -21,51 +23,66 @@ import graft.streaming.HttpSink
   * stream out of the parser ([[HttpSink.postThrough]]); the same rows
   * then feed the run summary's count and dual distinct counts, so
   * nothing is cached and the first POST leaves after the first chunk's
-  * parse, not after the whole file's. Delivery is at-least-once, as in
-  * the reference: a chunk that is POSTed is not recalled, so a retried
-  * task or a recomputed stage POSTs its chunks again, as the reference's
-  * retry of a received-but-unacknowledged POST can.
+  * parse, not after the whole file's. The summary is a distributed,
+  * map-side-combined shuffle keyed on the low-64 id, in the same job as
+  * the scan (see [[load]]). Delivery is at-least-once, as in the
+  * reference: a chunk that is POSTed is not recalled, so a retried task
+  * or a recomputed stage POSTs its chunks again, as the reference's retry
+  * of a received-but-unacknowledged POST can.
   *
   * Differences from the reference, all deliberate: the load parallelizes
   * across cores/executors (the reference is a single-threaded loop; a
   * plain file is read in byte ranges, a `.gz`/`.zip` by one task per
   * file); a bad vehicle id drops the row instead of aborting the load;
   * the run summary reports the dual distinct counts from a distributed
-  * aggregate, not driver-side HashSets. The random per-run sourceId
-  * (CsvLoader.java:63) is minted here at the process boundary — never
-  * inside query logic, so all registered queries stay deterministic. */
+  * aggregate, not driver-side HashSets: each reducer holds the ids of its
+  * share of the key space, so no one set spans the input. The random
+  * per-run sourceId (CsvLoader.java:63) is minted here at the process
+  * boundary — never inside query logic, so all registered queries stay
+  * deterministic. */
 object CsvLoaderCli {
 
   /** The run summary: valid records delivered, distinct raw vehicle-id
     * strings, distinct low-64 vehicle ids (CsvLoader.java:105-106). */
   final case class Summary(records: Long, uniqueVehicles: Long, uniqueIds: Long)
 
-  /** POST every valid record of `csv` to `url` under `sourceId` and
-    * return the run summary, in one read of the input. */
-  def load(spark: SparkSession, csv: String, url: String, sourceId: Long): Summary = {
-    val row = summaryFrame(spark, csv, url, sourceId).collect()(0)
-    Summary(row.getLong(0), row.getLong(1), row.getLong(2))
+  /** Sends a `(vehicle_id_str, vehicle_id)` key to the partition of its
+    * low-64 id alone, so every alias string of an id meets that id's
+    * other strings in one reducer. */
+  private final case class IdPartitioner(numPartitions: Int) extends Partitioner {
+    override def getPartition(key: Any): Int = key match {
+      case (_, id: Long) => Math.floorMod(java.lang.Long.hashCode(id), numPartitions)
+    }
   }
 
-  /** The one-row summary whose execution is the whole load: scan, POST
-    * pass-through, then the count and distinct counts. */
-  private[graft] def summaryFrame(spark: SparkSession, csv: String, url: String,
-      sourceId: Long): DataFrame = {
+  /** POST every valid record of `csv` to `url` under `sourceId` and
+    * return the run summary, in one read of the input and one job: each
+    * scan task POSTs its rows and counts its `(vehicle_id_str,
+    * vehicle_id)` keys, combined map-side; one shuffle keyed on the
+    * low-64 id (`spark.sql.shuffle.partitions` reducers) brings each id
+    * with all its strings to one reducer, which folds its keys into
+    * (records, strings, ids); the driver adds the reducers' triples. */
+  def load(spark: SparkSession, csv: String, url: String, sourceId: Long): Summary = {
     import spark.implicits._
     val sink = new HttpSink(url, sourceId)
+    val byId = IdPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
     spark.read.format("graft-vehicle-csv").load(csv)
       .select("vehicle_id_str", "vehicle_id", "lat", "lon", "ts_ms")
-      .as[(String, Long, Double, Double, Long)]
+      .as[(String, Long, Double, Double, Long)].rdd
       .mapPartitions { rows =>
         // one single-location message per record (CsvLoader.java:152)
         sink.postThrough(rows) { (chunk, r) => chunk.add(r._2, r._3, r._4, r._5) }
-          .map(r => (r._1, r._2))
+          .map(r => ((r._1, r._2), 1L))
       }
-      .toDF("vehicle_id_str", "vehicle_id")
-      .agg(
-        count(lit(1)).as("n"),
-        countDistinct(col("vehicle_id_str")).as("uniq_str"),
-        countDistinct(col("vehicle_id")).as("uniq_id"))
+      .reduceByKey(byId, _ + _)
+      .mapPartitions { keys =>
+        var records, strings = 0L
+        val ids = mutable.HashSet.empty[Long]
+        keys.foreach { case ((_, id), n) => records += n; strings += 1; ids += id }
+        Iterator(Summary(records, strings, ids.size))
+      }
+      .reduce((a, b) => Summary(a.records + b.records,
+        a.uniqueVehicles + b.uniqueVehicles, a.uniqueIds + b.uniqueIds))
   }
 
   def main(args: Array[String]): Unit = {

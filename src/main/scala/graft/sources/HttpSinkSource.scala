@@ -39,8 +39,8 @@ import graft.streaming.HttpSink
   * OPT-IN effectively-once (r17 verdict ask #4): `option("ledgerDir",
   * …)` wires the same [[graft.streaming.BatchLedger]] the foreachBatch
   * path offers into the streaming write — the per-epoch writer factory
-  * ships the ledger's committed-id snapshot, writers for an
-  * already-committed (replayed) epoch accept rows but POST nothing, and
+  * ships the ledger's highest committed epoch, writers for an epoch at
+  * or below it (a replay) accept rows but POST nothing, and
   * the driver records each epoch in the ledger at `commit` (AFTER
   * delivery: a crash between the two still re-delivers — at-least-once
   * is the floor, never lost data). The [[graft.streaming.BatchLedger]]
@@ -168,13 +168,12 @@ private[sources] class HttpSinkStreamingWrite(sink: HttpSink,
     ledgerDir.map(new graft.streaming.FileBatchLedger(_))
 
   /** Called once per epoch (MicroBatchWrite wraps this write per
-    * micro-batch), so the shipped snapshot reflects every commit
+    * micro-batch), so the shipped high-water mark reflects every commit
     * recorded before this epoch planned — exactly the freshness the
     * replay decision needs. */
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    HttpSinkWriterFactory(sink, idx,
-      ledger.map(_.snapshot).getOrElse(Set.empty))
+    HttpSinkWriterFactory(sink, idx, ledger.fold(-1L)(_.committedThrough))
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
     ledger match {
@@ -193,18 +192,18 @@ private[sources] class HttpSinkStreamingWrite(sink: HttpSink,
 
 /** One factory for both modes ([[HttpSink]] is Serializable; ships the
   * url/sourceId/chunking config to executors, never message data back).
-  * `committedEpochs` is the ledger snapshot (empty without a ledger):
-  * a writer for a replayed epoch consumes its rows but POSTs nothing. */
+  * `committedThrough` is the ledger's highest committed epoch (-1 without
+  * a ledger or before its first commit): a writer for an epoch at or
+  * below it is a replay, and consumes its rows but POSTs nothing. */
 private[sources] case class HttpSinkWriterFactory(
-    sink: HttpSink, idx: PingIndices,
-    committedEpochs: Set[Long] = Set.empty)
+    sink: HttpSink, idx: PingIndices, committedThrough: Long = -1L)
     extends DataWriterFactory with StreamingDataWriterFactory {
   override def createWriter(partitionId: Int,
       taskId: Long): DataWriter[InternalRow] =
     new HttpSinkDataWriter(sink, idx)
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
-    if (committedEpochs.contains(epochId)) new SkippedEpochWriter
+    if (epochId <= committedThrough) new SkippedEpochWriter
     else new HttpSinkDataWriter(sink, idx)
 }
 

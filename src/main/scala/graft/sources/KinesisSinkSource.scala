@@ -33,9 +33,9 @@ import graft.streaming.{KinesisSink, KinesisTransport, VehicleLocation, VehicleM
   * [[HttpSinkSource]], which got the upgrade in r18 while this sink
   * silently kept weaker replay semantics): `option("ledgerDir", …)`
   * wires the same [[graft.streaming.BatchLedger]] into the streaming
-  * write — the per-epoch writer factory ships the ledger's
-  * committed-id snapshot, writers for an already-committed (replayed)
-  * epoch accept rows but put NO records, and the driver records each
+  * write — the per-epoch writer factory ships the ledger's highest
+  * committed epoch, writers for an epoch at or below it (a replay)
+  * accept rows but put NO records, and the driver records each
   * epoch at `commit` (AFTER delivery: a crash between the two still
   * re-delivers — at-least-once is the floor, never lost data). The
   * ledger must live and die with the query's checkpoint; batch writes
@@ -131,13 +131,12 @@ private[sources] class KinesisStreamingWrite(factory: KinesisWriterFactory,
     ledgerDir.map(new graft.streaming.FileBatchLedger(_))
 
   /** Called once per epoch (MicroBatchWrite wraps this write per
-    * micro-batch), so the shipped snapshot reflects every commit
+    * micro-batch), so the shipped high-water mark reflects every commit
     * recorded before this epoch planned — the [[HttpSinkStreamingWrite]]
     * replay discipline verbatim. */
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    factory.copy(committedEpochs =
-      ledger.map(_.snapshot).getOrElse(Set.empty))
+    factory.copy(committedThrough = ledger.fold(-1L)(_.committedThrough))
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = ledger match {
     case Some(l) if l.committed(epochId) =>
@@ -155,7 +154,7 @@ private[sources] class KinesisStreamingWrite(factory: KinesisWriterFactory,
 private[sources] case class KinesisWriterFactory(stream: String,
     sourceId: Long, transportFactory: () => KinesisTransport,
     maxBatch: Int, idx: PingIndices,
-    committedEpochs: Set[Long] = Set.empty)
+    committedThrough: Long = -1L)
     extends DataWriterFactory with StreamingDataWriterFactory {
   private def writer(): DataWriter[InternalRow] =
     new KinesisDataWriter(
@@ -165,7 +164,7 @@ private[sources] case class KinesisWriterFactory(stream: String,
       taskId: Long): DataWriter[InternalRow] = writer()
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
-    if (committedEpochs.contains(epochId)) new SkippedEpochWriter
+    if (epochId <= committedThrough) new SkippedEpochWriter
     else writer()
 }
 

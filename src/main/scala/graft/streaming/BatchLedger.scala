@@ -41,6 +41,8 @@ class FileBatchLedger(dir: String) extends BatchLedger {
     s
   }
 
+  private var through: Long = if (seen.isEmpty) -1L else seen.max
+
   override def committed(batchId: Long): Boolean =
     seen.synchronized(seen.contains(batchId))
 
@@ -48,12 +50,15 @@ class FileBatchLedger(dir: String) extends BatchLedger {
     Files.write(file, (batchId.toString + "\n").getBytes(StandardCharsets.UTF_8),
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)
     seen += batchId
+    through = math.max(through, batchId)
   }
 
-  /** Immutable driver-time view of the committed ids — what a DSv2 sink
-    * ships to its per-epoch writer factory (the factory is rebuilt each
-    * epoch, so the snapshot is as fresh as the replay decision needs;
-    * the ledger object itself holds a non-serializable Path and stays
-    * on the driver). */
-  def snapshot: Set[Long] = seen.synchronized(seen.toSet)
+  /** The highest committed id, -1 if none — what a DSv2 sink ships to its
+    * per-epoch writer factory, in constant size however long the stream
+    * has run. Skipping every epoch at or below it is exact: the
+    * micro-batch engine commits epoch k's sink before it plans k+1, so a
+    * replayed epoch is never above the ledger's maximum and a new one
+    * always is. (The ledger object itself holds a non-serializable Path
+    * and stays on the driver.) */
+  def committedThrough: Long = seen.synchronized(through)
 }

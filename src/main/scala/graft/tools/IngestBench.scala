@@ -7,6 +7,7 @@ import java.util.zip.GZIPOutputStream
 
 import org.apache.hadoop.io.Text
 import org.apache.hadoop.util.LineReader
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
 import graft.CsvLoaderCli
@@ -23,7 +24,8 @@ import graft.streaming.ProtoEnvelope
   *  - `encode`: the parsed rows through one
   *    [[ProtoEnvelope.EnvelopeWriter]] in 10,000-message envelopes, on
   *    one thread (a per-core rate; the other stages use every core);
-  *  - `e2e`: the CLI's one pass (parse, POST, summary).
+  *  - `e2e`: the CLI's one pass (parse, POST, summary), with the jobs,
+  *    stages and tasks it ran (`e2e_jobs`, `e2e_stages`, `e2e_tasks`).
   *
   * The reference is a single-threaded record loop; this pipeline
   * parallelizes the scan+parse across cores and posts per partition, so
@@ -135,10 +137,26 @@ object IngestBench {
     val encodedBytes = encodeAll()
     val tEncode = (System.nanoTime() - te) / 1e9
 
-    // the path users run: CsvLoaderCli's one pass (parse, POST, summary)
+    // the path users run: CsvLoaderCli's one pass (parse, POST, summary),
+    // with the jobs, stages and tasks it ran
+    val jobs, jobsEnded, stages, tasks = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = jobsEnded.incrementAndGet()
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        stages.incrementAndGet(); tasks.addAndGet(e.stageInfo.numTasks)
+      }
+    }
+    spark.sparkContext.addSparkListener(counter)
     val t1 = System.nanoTime()
     val summary = CsvLoaderCli.load(spark, glob, url, 1L)
     val tSink = (System.nanoTime() - t1) / 1e9
+    // listener events arrive asynchronously, each job's stages before
+    // its end: wait for the ends
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while ((jobs.get() == 0 || jobsEnded.get() < jobs.get()) && System.nanoTime() < deadline)
+      Thread.sleep(10)
+    spark.sparkContext.removeSparkListener(counter)
     require(summary.records == nParsed,
       s"CLI loaded ${summary.records} records, the source read $nParsed")
 
@@ -147,7 +165,7 @@ object IngestBench {
     // Bench.scala's driver-visible shape: one JSON line, "metric"/"value"/
     // "unit" first so round-over-round tooling can track the ST1-ST2 ingest
     // path (the reference's actual workload) like the relational surface
-    println(f"""{"metric":"ingest_rows_per_s","value":${nParsed / tSink}%.0f,"unit":"rows/s","rows":$nParsed,"lines":$nLines,"read_s":$tRead%.2f,"read_lines_per_s":${nLines / tRead}%.0f,"parse_s":$tParse%.2f,"parse_rows_per_s":${nParsed / tParse}%.0f,"encode_s":$tEncode%.3f,"encode_rows_per_s":${nParsed / tEncode}%.0f,"encode_mb_per_s":${encodedBytes / tEncode / 1e6}%.0f,"e2e_s":$tSink%.2f,"sink_bytes":${received.get()}}""")
+    println(f"""{"metric":"ingest_rows_per_s","value":${nParsed / tSink}%.0f,"unit":"rows/s","rows":$nParsed,"lines":$nLines,"read_s":$tRead%.2f,"read_lines_per_s":${nLines / tRead}%.0f,"parse_s":$tParse%.2f,"parse_rows_per_s":${nParsed / tParse}%.0f,"encode_s":$tEncode%.3f,"encode_rows_per_s":${nParsed / tEncode}%.0f,"encode_mb_per_s":${encodedBytes / tEncode / 1e6}%.0f,"e2e_s":$tSink%.2f,"e2e_jobs":${jobs.get},"e2e_stages":${stages.get},"e2e_tasks":${tasks.get},"sink_bytes":${received.get()}}""")
     spark.stop()
   }
 }

@@ -6,9 +6,7 @@ import java.util.zip.{GZIPOutputStream, ZipEntry, ZipOutputStream}
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageSubmitted, StageInfo}
 import org.apache.spark.sql.functions._
 
 import graft.ingest.CsvVehicleReader
@@ -16,8 +14,8 @@ import graft.streaming.ProtoEnvelope
 
 /** The CLI's one-pass load: what reaches the receiver and the printed
   * summary both match the Column reader on plain, gz and zip inputs, and
-  * the load reads its input once, without caching it. */
-class CsvLoaderCliSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+  * the load is one job that reads its input once, without caching it. */
+class CsvLoaderCliSpec extends SparkSpec {
 
   private val rows = 25000
 
@@ -107,16 +105,31 @@ class CsvLoaderCliSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(delivered == want, s"$file: delivered multiset differs from the reader's rows")
   }
 
+  /** The Column reader's count and dual distinct counts over `file`. */
+  private def readerSummary(file: String): CsvLoaderCli.Summary = {
+    val r = CsvVehicleReader.read(spark, file).agg(count(lit(1)),
+      countDistinct(col("vehicle_id_str")), countDistinct(col("vehicle_id")))
+      .collect()(0)
+    CsvLoaderCli.Summary(r.getLong(0), r.getLong(1), r.getLong(2))
+  }
+
+  /** Runs `body` with the session conf `key` set to `value`, then restores it. */
+  private def withConf[T](key: String, value: String)(body: => T): T = {
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally old match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
+
   test("load: summary and delivered messages equal the Column reader on " +
       "plain, gz and zip; envelopes hold at most 10,000 messages") {
     for (f <- fixtures()) {
       val file = f.toString
       val (summary, bodies) = received(url => CsvLoaderCli.load(spark, file, url, 42L))
-      val r = CsvVehicleReader.read(spark, file).agg(count(lit(1)),
-        countDistinct(col("vehicle_id_str")), countDistinct(col("vehicle_id")))
-        .collect()(0)
-      assert(summary == CsvLoaderCli.Summary(r.getLong(0), r.getLong(1), r.getLong(2)),
-        s"$file: summary")
+      assert(summary == readerSummary(file), s"$file: summary")
       assert(summary.records > rows * 9 / 10 && summary.records < rows)
       assert(summary.uniqueVehicles > summary.uniqueIds, "aliased ids collapse")
       checkDelivery(file, 42L, bodies)
@@ -128,32 +141,75 @@ class CsvLoaderCliSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   test("load over a plain file read in byte ranges: each task chunks its " +
       "own rows, nothing lost or duplicated") {
     val plain = fixtures().head.toString
-    val key = "spark.sql.files.maxPartitionBytes"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key, (200 * 1024).toString)
-    try {
+    withConf("spark.sql.files.maxPartitionBytes", (200 * 1024).toString) {
       val (summary, bodies) = received(url => CsvLoaderCli.load(spark, plain, url, -3L))
       assert(summary.records == CsvVehicleReader.read(spark, plain).count())
       assert(bodies.size > 3, "several read tasks, each with its partial tail")
       checkDelivery(plain, -3L, bodies)
-    } finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
     }
   }
 
-  test("load plan: one scan of the input, no cached relation") {
-    val gz = fixtures()(1).toString
-    val (plan, bodies) = received { url =>
-      val df = CsvLoaderCli.summaryFrame(spark, gz, url, 5L)
-      df.collect()
-      df.queryExecution.executedPlan
+  test("load summary is exact when one id's alias strings are split across " +
+      "byte-range tasks, at 1 and 7 shuffle partitions") {
+    val plain = fixtures().head.toString
+    val want = readerSummary(plain)
+    assert(want.uniqueVehicles > want.uniqueIds, "the fixture aliases ids")
+    withConf("spark.sql.files.maxPartitionBytes", (100 * 1024).toString) {
+      for (p <- Seq(1, 7)) withConf("spark.sql.shuffle.partitions", p.toString) {
+        val (summary, bodies) = received(url => CsvLoaderCli.load(spark, plain, url, 11L))
+        assert(summary == want, s"$p shuffle partitions")
+        assert(bodies.size > 3, "several read tasks")
+        checkDelivery(plain, 11L, bodies)
+      }
     }
-    val scans = collectWithSubqueries(plan) { case b: BatchScanExec => b }
-    assert(scans.size == 1 && scans.head.scan.description().startsWith("graft-vehicle-csv"),
-      s"expected one graft-vehicle-csv scan:\n$plan")
-    assert(collectWithSubqueries(plan) { case m: InMemoryTableScanExec => m }.isEmpty,
-      s"the load caches its input:\n$plan")
+  }
+
+  test("load over a file whose rows all drop: summary (0, 0, 0), nothing POSTed") {
+    val f = Files.createTempDirectory("graft-cli").resolve("dropped.csv")
+    Files.write(f, ("short,row\n2015-02-14 18:51:00,7,not_a_number,90.0\n" +
+      "garbage-ts,7,23.0,90.0\n2015-02-14 18:51:00,x7,23.0,90.0\n\n")
+      .getBytes(StandardCharsets.UTF_8))
+    val (summary, bodies) = received(url => CsvLoaderCli.load(spark, f.toString, url, 1L))
+    assert(summary == CsvLoaderCli.Summary(0L, 0L, 0L))
+    assert(summary == readerSummary(f.toString))
+    assert(bodies.isEmpty)
+  }
+
+  test("load plan: one scan of the input, no cached relation") {
+    // one load is one job of two stages (scan with map-side combine, then
+    // the reducers); its RDD scopes name exactly one graft-vehicle-csv
+    // scan and no in-memory relation
+    val gz = fixtures()(1).toString
+    val tag = "graft.spec.load"
+    val jobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]
+    val jobsEnded = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]
+    val listener = new SparkListener {
+      private def tagged(p: java.util.Properties) = p != null && p.getProperty(tag) != null
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (tagged(js.properties)) jobs.add(js.jobId)
+      override def onJobEnd(je: SparkListenerJobEnd): Unit = jobsEnded.add(je.jobId)
+      override def onStageSubmitted(ss: SparkListenerStageSubmitted): Unit =
+        if (tagged(ss.properties)) stages.add(ss.stageInfo)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setLocalProperty(tag, "1")
+    val (_, bodies) = try received(url => CsvLoaderCli.load(spark, gz, url, 5L))
+    finally spark.sparkContext.setLocalProperty(tag, null)
+    // listener events arrive asynchronously: wait for the job's end
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while ((jobs.isEmpty || !jobsEnded.containsAll(jobs)) && System.nanoTime() < deadline)
+      Thread.sleep(50)
+    spark.sparkContext.removeSparkListener(listener)
+    val infos = stages.toArray(Array.empty[StageInfo]).toSeq
+    val scopes = infos.flatMap(_.rddInfos).flatMap(_.scope).map(s => s.id -> s.name).distinct
+    assert(jobs.size == 1 && infos.size == 2,
+      s"${jobs.size} jobs, ${infos.size} stages: ${infos.map(_.name)}")
+    val scans = scopes.filter(_._2.startsWith("BatchScan"))
+    assert(scans.size == 1 && scans.head._2.contains("graft-vehicle-csv"),
+      s"expected one graft-vehicle-csv scan: $scopes")
+    assert(!scopes.exists(_._2.startsWith("InMemoryTableScan")),
+      s"the load caches its input: $scopes")
     checkDelivery(gz, 5L, bodies)
   }
 }

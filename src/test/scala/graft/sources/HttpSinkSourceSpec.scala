@@ -172,4 +172,36 @@ class HttpSinkSourceSpec extends SparkSpec {
         s"at-least-once arm should double-deliver on replay, got ${msgs.size}")
     }
   }
+
+  test("a ledger's per-epoch writer factory has one size for 1 and for " +
+      "100,000 committed epochs, in both DSv2 sinks; epochs at or below " +
+      "the ledger's maximum are skipped") {
+    def ledgerDir(epochs: Int): String = {
+      val dir = Files.createTempDirectory("graft-ledger-size").toString
+      val ledger = new graft.streaming.FileBatchLedger(dir)
+      (0 until epochs).foreach(e => ledger.commit(e.toLong))
+      dir
+    }
+    def serializedSize(o: AnyRef): Int = {
+      val bytes = new java.io.ByteArrayOutputStream
+      val out = new java.io.ObjectOutputStream(bytes)
+      out.writeObject(o); out.close()
+      bytes.size
+    }
+    val idx = PingIndices(0, 1, 2, 3)
+    val sink = new graft.streaming.HttpSink("http://127.0.0.1:1/u", 1L)
+    val kinesis = KinesisWriterFactory("s", 1L,
+      () => new graft.streaming.InMemoryKinesis(1, "t-ledger-size"), 500, idx)
+    val factories = Seq(ledgerDir(1), ledgerDir(100000)).map { dir =>
+      (new HttpSinkStreamingWrite(sink, idx, Some(dir)).createStreamingWriterFactory(null),
+        new KinesisStreamingWrite(kinesis, Some(dir)).createStreamingWriterFactory(null))
+    }
+    val Seq((http1, kin1), (httpMany, kinMany)) = factories
+    assert(serializedSize(http1) == serializedSize(httpMany))
+    assert(serializedSize(kin1) == serializedSize(kinMany))
+    for (f <- Seq(httpMany, kinMany)) {
+      assert(f.createWriter(0, 0L, 99999L).isInstanceOf[SkippedEpochWriter])
+      assert(!f.createWriter(0, 0L, 100000L).isInstanceOf[SkippedEpochWriter])
+    }
+  }
 }
