@@ -10,7 +10,7 @@ class BenchSpec extends AnyFunSuite {
     val results = (0 until 199).map(i => (f"q$i%03d_" + "x" * 300) -> (0.5 + i / 100.0))
     val full = "/data/" + "deep/" * 100 + "bench_full.json"
     val line = Bench.compactLine(results, 0.115, 0.12, "ab" * 20,
-      "/root/testdata/sf\"0.1\\", full)
+      "/data/sf\"0.1\\", full)
     assert(line.length <= 1500, s"${line.length} characters")
     assert(!line.contains("xxx"), "query names belong in the full line only")
     val total = results.map(_._2).sum
@@ -18,7 +18,7 @@ class BenchSpec extends AnyFunSuite {
     assert(line.startsWith(s"""{"metric":"total","value":$total,"unit":"sec","""))
     assert(line.contains(s""""n":199,"""))
     assert(line.contains(s""""geomean":$geomean,"""))
-    assert(line.contains(""""sf":"/root/testdata/sf\"0.1\\","""), line)
+    assert(line.contains(""""sf":"/data/sf\"0.1\\","""), line)
     assert(line.endsWith("""deep/bench_full.json"}"""))
   }
 
