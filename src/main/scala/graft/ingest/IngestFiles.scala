@@ -6,11 +6,12 @@ import java.util.zip.{GZIPInputStream, ZipInputStream}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataInputStream, FileSystem, Path => HPath}
 
-/** File-level plumbing shared by the two vehicle-CSV ingest paths (the
-  * [[CsvVehicleReader]] Column pipeline and the DataSourceV2
-  * [[graft.sources.VehicleCsvSource]]) so their glob/directory
-  * expansion, Hadoop-conf shipping, and decompression dispatch cannot
-  * drift apart (the r14 review found directory and empty-zip parity
+/** File-level plumbing of the vehicle-CSV ingest: glob/directory
+  * expansion, Hadoop-conf shipping and decompression dispatch for the
+  * DataSourceV2 [[graft.sources.VehicleCsvSource]] (batch and
+  * streaming), `tools/IngestBench`'s read stage, and the Column-pipeline
+  * oracle the tests compare the source against, so the oracle cannot
+  * drift from it (the r14 review found directory and empty-zip parity
   * breaks exactly where this logic was duplicated). */
 private[graft] object IngestFiles {
 
@@ -35,7 +36,7 @@ private[graft] object IngestFiles {
     * DIRECTORIES expanded one level to their visible files — the
     * `spark.read.text` flat-directory behavior (hidden `_`/`.` entries
     * skipped, FileInputFormat-style), so `load("/data/pings")` works
-    * the same through both ingest paths. */
+    * the same in the source and the oracle. */
   def listInputFiles(path: String, conf: Configuration): Seq[String] =
     listInputFileStatuses(path, conf).map(_._1)
 

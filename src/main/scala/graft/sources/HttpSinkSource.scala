@@ -1,10 +1,9 @@
 package graft.sources
 
-import org.apache.spark.internal.Logging
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{DoubleType, LongType, StructType}
@@ -31,22 +30,16 @@ import graft.streaming.HttpSink
   * Consistency contract, stated honestly: AT-LEAST-ONCE. A POST is a
   * side effect no coordinator can roll back, so `abort` cannot recall
   * delivered chunks and a replayed epoch re-posts — exactly the
-  * reference's contract, and the same one the `foreachBatch` path has.
-  * The epoch-level `commit` is therefore an audit point (it logs the
-  * delivered row/POST totals from every writer's commit message), not a
-  * transaction boundary.
+  * reference's contract. The epoch-level `commit` is therefore an audit
+  * point (it logs the delivered row/POST totals from every writer's
+  * commit message), not a transaction boundary.
   *
   * OPT-IN effectively-once (r17 verdict ask #4): `option("ledgerDir",
-  * …)` wires the same [[graft.streaming.BatchLedger]] the foreachBatch
-  * path offers into the streaming write — the per-epoch writer factory
-  * ships the ledger's highest committed epoch, writers for an epoch at
-  * or below it (a replay) accept rows but POST nothing, and
-  * the driver records each epoch in the ledger at `commit` (AFTER
-  * delivery: a crash between the two still re-delivers — at-least-once
-  * is the floor, never lost data). The [[graft.streaming.BatchLedger]]
-  * lifecycle contract applies verbatim: the ledger must live and die
-  * with the query's checkpoint. Batch writes ignore the option (no
-  * epoch identity to dedupe on). */
+  * …)` records each epoch in a [[graft.streaming.FileBatchLedger]] and
+  * skips replayed epochs, by the rule [[SinkStreamingWrite]] holds for
+  * both DSv2 sinks. The ledger's lifecycle contract applies verbatim: it
+  * must live and die with the query's checkpoint. Batch writes ignore
+  * the option (no epoch identity to dedupe on). */
 class HttpSinkSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-http-sink"
 
@@ -81,12 +74,15 @@ private[sources] class HttpSinkTable(
     val sink = HttpSinkSource.sinkFromOptions(merged)
     val idx = HttpSinkSource.pingIndices(info.schema)
     val ledgerDir = Option(merged.get("ledgerDir"))
+    val factory = HttpSinkWriterFactory(sink, idx)
+    val label = SinkLabel("graft-http-sink", "POSTs")
     new WriteBuilder {
       override def build(): Write = new Write {
         override def description(): String = "graft-http-sink"
-        override def toBatch: BatchWrite = new HttpSinkBatchWrite(sink, idx)
+        override def toBatch: BatchWrite =
+          new SinkBatchWrite(label, factory)
         override def toStreaming: StreamingWrite =
-          new HttpSinkStreamingWrite(sink, idx, ledgerDir)
+          new SinkStreamingWrite(label, factory, ledgerDir)
       }
     }
   }
@@ -133,88 +129,16 @@ private[sources] object HttpSinkSource {
 
 private[sources] case class PingIndices(vid: Int, lat: Int, lon: Int, ts: Int)
 
-private[sources] case class HttpSinkCommit(rows: Long, posts: Long)
-    extends WriterCommitMessage
-
-/** Shared epoch/job commit logging — the audit point of an
-  * at-least-once sink (see class doc): totals, not a transaction. */
-private[sources] trait HttpSinkCommitLog extends Logging {
-  protected def sinkLabel: String = "graft-http-sink"
-  protected def deliveryUnit: String = "POSTs"
-  protected def logDelivered(what: String, messages: Array[WriterCommitMessage]): Unit = {
-    val (rows, posts) = messages.foldLeft((0L, 0L)) {
-      case ((r, p), HttpSinkCommit(mr, mp)) => (r + mr, p + mp)
-      case (acc, _)                         => acc
-    }
-    logInfo(s"$sinkLabel $what delivered: $rows rows in $posts $deliveryUnit")
-  }
-}
-
-private[sources] class HttpSinkBatchWrite(sink: HttpSink, idx: PingIndices)
-    extends BatchWrite with HttpSinkCommitLog {
-  override def createBatchWriterFactory(
-      info: PhysicalWriteInfo): DataWriterFactory =
-    HttpSinkWriterFactory(sink, idx)
-  override def commit(messages: Array[WriterCommitMessage]): Unit =
-    logDelivered("batch job", messages)
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-private[sources] class HttpSinkStreamingWrite(sink: HttpSink,
-    idx: PingIndices, ledgerDir: Option[String])
-    extends StreamingWrite with HttpSinkCommitLog {
-  // driver-side; rebuilt lazily so a ledger-less sink pays nothing
-  private lazy val ledger =
-    ledgerDir.map(new graft.streaming.FileBatchLedger(_))
-
-  /** Called once per epoch (MicroBatchWrite wraps this write per
-    * micro-batch), so the shipped high-water mark reflects every commit
-    * recorded before this epoch planned — exactly the freshness the
-    * replay decision needs. */
-  override def createStreamingWriterFactory(
-      info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    HttpSinkWriterFactory(sink, idx, ledger.fold(-1L)(_.committedThrough))
-  override def commit(epochId: Long,
-      messages: Array[WriterCommitMessage]): Unit = {
-    ledger match {
-      case Some(l) if l.committed(epochId) =>
-        logInfo(s"graft-http-sink epoch $epochId replay skipped (ledger)")
-      case Some(l) =>
-        logDelivered(s"epoch $epochId", messages)
-        l.commit(epochId) // AFTER delivery: crash in between re-delivers
-      case None =>
-        logDelivered(s"epoch $epochId", messages)
-    }
-  }
-  override def abort(epochId: Long,
-      messages: Array[WriterCommitMessage]): Unit = ()
-}
-
 /** One factory for both modes ([[HttpSink]] is Serializable; ships the
-  * url/sourceId/chunking config to executors, never message data back).
-  * `committedThrough` is the ledger's highest committed epoch (-1 without
-  * a ledger or before its first commit): a writer for an epoch at or
-  * below it is a replay, and consumes its rows but POSTs nothing. */
-private[sources] case class HttpSinkWriterFactory(
-    sink: HttpSink, idx: PingIndices, committedThrough: Long = -1L)
+  * url/sourceId/chunking config to executors, never message data back). */
+private[sources] case class HttpSinkWriterFactory(sink: HttpSink, idx: PingIndices)
     extends DataWriterFactory with StreamingDataWriterFactory {
   override def createWriter(partitionId: Int,
       taskId: Long): DataWriter[InternalRow] =
     new HttpSinkDataWriter(sink, idx)
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
-    if (epochId <= committedThrough) new SkippedEpochWriter
-    else new HttpSinkDataWriter(sink, idx)
-}
-
-/** Writer for an epoch the ledger already recorded: the engine re-runs
-  * the epoch's plan on restart, but every row it feeds here was already
-  * delivered — accept and drop. */
-private[sources] class SkippedEpochWriter extends DataWriter[InternalRow] {
-  override def write(row: InternalRow): Unit = ()
-  override def commit(): WriterCommitMessage = HttpSinkCommit(0L, 0L)
-  override def abort(): Unit = ()
-  override def close(): Unit = ()
+    new HttpSinkDataWriter(sink, idx)
 }
 
 /** Per-task writer: buffer at most one `batchSize` chunk, POST when
@@ -239,7 +163,7 @@ private[sources] class HttpSinkDataWriter(sink: HttpSink, idx: PingIndices)
 
   override def commit(): WriterCommitMessage = {
     chunk.flush()
-    HttpSinkCommit(rows, chunk.posts)
+    SinkCommit(rows, chunk.posts)
   }
 
   // delivered chunks cannot be recalled (at-least-once); drop only the

@@ -21,22 +21,23 @@ import graft.ingest.{CsvFields, IngestFiles}
 
 /** The vehicle-ping CSV ingest as a first-class DataSourceV2
   * `TableProvider` — `spark.read.format("graft-vehicle-csv")
-  * .load(path)` — with the same record semantics as
-  * [[graft.ingest.CsvVehicleReader]] (behavior of opentraffic/csv-loader
+  * .load(path)`, the one ingest path — with the reference's record
+  * semantics (behavior of opentraffic/csv-loader
   * CsvLoader.java:84-148): transparent plain/.gz/.zip-first-entry
   * decompression, per-record arity dispatch (narrow `(ts,vid,lat,lon)`
   * vs wide taxi rows reading lat/lon from cols 9,10), permissive drops
   * for bad arity / unparseable doubles / unparseable timestamps / bad
   * vehicle ids, and the BigInteger-low-64 id wrap. Parsing has a byte
   * fast path for plain ASCII lines and otherwise calls the SAME JVM
-  * functions as the Column pipeline ([[CsvFields.split]],
+  * functions as the SQL expressions ([[CsvFields.split]],
   * [[BigIntLow64.low64]], [[FlexTimestamp.parseToMillis]]; see
-  * [[VehicleCsvSource.parseLine]]), and VehicleCsvSourceSpec pins
-  * row-for-row equality against `CsvVehicleReader.read` on every
-  * fixture class.
+  * [[VehicleCsvSource.parseLine]]). The Column pipeline this source
+  * replaced is kept in the tests as the oracle: VehicleCsvSourceSpec
+  * and IngestSpec pin row-for-row equality against it on every fixture
+  * class.
   *
-  * Why a DSv2 source when the Column pipeline exists: it makes the
-  * ingest a CATALOG-LEVEL citizen — usable from SQL (`CREATE TABLE …
+  * A DSv2 source makes the ingest a CATALOG-LEVEL citizen — usable
+  * from SQL (`CREATE TABLE …
   * USING graft-vehicle-csv`), composable with every reader option, and
   * it implements [[SupportsPushDownRequiredColumns]]: a query touching
   * 2 of the 5 output columns materializes exactly those (the scan's
@@ -116,7 +117,8 @@ object VehicleCsvSource {
     }
   }
 
-  /** Same output schema as CsvVehicleReader.read. */
+  /** vehicle_id_str, vehicle_id (low-64 wrap), lat, lon, ts_ms (epoch
+    * millis). */
   val Schema: StructType = StructType(Seq(
     StructField("vehicle_id_str", StringType),
     StructField("vehicle_id", LongType),
@@ -414,8 +416,7 @@ private[sources] class VehicleCsvScan(val path: String,
 
   /** Input files with their on-disk lengths. Shared glob/directory
     * expansion (graft.ingest.IngestFiles): a directory path expands to
-    * its visible files, matching CsvVehicleReader / spark.read.text
-    * semantics. */
+    * its visible files, matching spark.read.text semantics. */
   private lazy val files: Seq[(String, Long)] = {
     val conf = hadoopConf
     IngestFiles.listInputFiles(path, conf).map { f =>
@@ -461,7 +462,7 @@ private[sources] class VehicleCsvScan(val path: String,
 
   override def createReaderFactory(): PartitionReaderFactory =
     // ship the session's Hadoop conf (auth/filesystem settings) as
-    // serializable pairs — shared with the Column pipeline. Readers
+    // serializable pairs (IngestFiles.confProps). Readers
     // evaluate static pushed filters AND any injected runtime filters
     // (createReaderFactory runs after runtime-filter injection).
     VehicleCsvReaderFactory(required, pushed ++ runtime,
@@ -509,7 +510,7 @@ private[sources] class VehicleCsvPartitionReader(part: VehicleCsvPartition,
   private val reader: LineReader = {
     val conf = IngestFiles.taskConf(confProps)
     // shared decompression dispatch (plain/.gz/.zip-first-entry; an
-    // empty zip yields zero rows, the CsvVehicleReader parity); only a
+    // empty zip yields zero rows, like the reference's loop); only a
     // plain file has ranges that start past byte 0
     val in =
       if (part.start == 0) IngestFiles.openDecompressed(part.file, conf)

@@ -4,7 +4,6 @@ import java.io.IOException
 import java.net.{HttpURLConnection, URI}
 
 import org.apache.spark.internal.Logging
-import org.apache.spark.sql.Dataset
 
 /** Batched, retrying HTTP POST sink with the reference's delivery contract
   * (behavior of opentraffic/csv-loader CsvLoader.java:160-166, 196-235):
@@ -21,8 +20,8 @@ import org.apache.spark.sql.Dataset
   *
   * One connection per POST via the JDK client (the reference builds a new
   * pooled client per attempt, CsvLoader.java:202-204 — effectively the
-  * same). Runs inside executors via `foreachPartition`/`foreachBatch`;
-  * the driver never sees message data.
+  * same). Runs inside executors, in the `graft-http-sink` writer and in
+  * `CsvLoaderCli.load`'s scan tasks; the driver never sees message data.
   */
 class HttpSink(
     url: String,
@@ -82,14 +81,6 @@ class HttpSink(
     attempts
   }
 
-  /** Sink a (batch) Dataset: per partition, [[postThrough]] drained. */
-  def write(ds: Dataset[VehicleMessage]): Unit = {
-    val sink = this
-    ds.foreachPartition { (it: Iterator[VehicleMessage]) =>
-      sink.postThrough(it)(_ add _).foreach(_ => ())
-    }
-  }
-
   /** Deliver `rows` as they stream past and yield them unchanged: `add`
     * puts each row's message into the current chunk, a full chunk of
     * `batchSize` is POSTed before the next row is pulled
@@ -118,10 +109,6 @@ class HttpSink(
     /** Add the one-location message of one record. */
     def add(vehicleId: Long, lat: Double, lon: Double, timestamp: Long): Unit = {
       envelope.add(vehicleId, lat, lon, timestamp)
-      if (envelope.messages >= batchSize) flush()
-    }
-    def add(m: VehicleMessage): Unit = {
-      envelope.add(m)
       if (envelope.messages >= batchSize) flush()
     }
     def flush(): Unit = if (envelope.messages > 0) {

@@ -2,19 +2,6 @@ package graft.streaming
 
 import org.apache.spark.internal.Logging
 
-/** Record-batch sink abstraction: the reference *declares* a Kinesis path
-  * (README.md:2 "via HTTP or Kinesis"; unused aws-java-sdk dep,
-  * pom.xml:100-104) but never implements it. We implement the producer
-  * contract for real — batching, partial-failure retry, partition-key
-  * routing — behind a transport seam, because the environment is
-  * zero-egress: a deployment drops in an AWS-SDK transport; tests use
-  * [[InMemoryKinesis]], which mirrors the service's documented behavior.
-  */
-trait EnvelopeSink extends Serializable {
-  /** Deliver one encoded envelope; at-least-once contract. */
-  def send(envelope: Array[Byte]): Unit
-}
-
 /** One Kinesis record: routing key + opaque payload. */
 final case class KinesisRecord(partitionKey: String, data: Array[Byte])
 
@@ -57,7 +44,13 @@ trait KinesisConsumerTransport extends Serializable {
   def shardEnd(stream: String, shard: Int): Option[Long] = None
 }
 
-/** Kinesis producer with the service's real client contract:
+/** Kinesis producer. The reference *declares* a Kinesis path
+  * (README.md:2 "via HTTP or Kinesis"; unused aws-java-sdk dep,
+  * pom.xml:100-104) but never implements it. We implement the producer
+  * contract for real behind a transport seam, because the environment is
+  * zero-egress: a deployment drops in an AWS-SDK transport; tests use
+  * [[InMemoryKinesis]], which mirrors the service's documented behavior.
+  * The service's client contract:
   *
   *  - ≤500 records per PutRecords call (API limit) — larger inputs chunk;
   *  - partial failure resubmits ONLY the failed records, with bounded
@@ -75,18 +68,9 @@ class KinesisSink(
     transport: KinesisTransport,
     val maxBatch: Int = 500,
     maxRetries: Int = 10,
-    backoffMs: Long = 100) extends EnvelopeSink with Logging {
+    backoffMs: Long = 100) extends Serializable with Logging {
 
   require(maxBatch > 0 && maxBatch <= 500, "Kinesis PutRecords limit is 500")
-
-  /** Envelope-level send (the [[EnvelopeSink]] contract): the envelope's
-    * source id is the partition key — all of one source's envelopes stay
-    * ordered on one shard, mirroring the HTTP sink's one-stream-per-source
-    * shape. */
-  override def send(envelope: Array[Byte]): Unit = {
-    val (sourceId, _) = ProtoEnvelope.decodeEnvelope(envelope)
-    putAll(Seq(KinesisRecord(sourceId.toString, envelope)))
-  }
 
   /** Message-level send: one record per vehicle message, keyed by
     * vehicleId (per-vehicle shard affinity + ordering). Each record is a
@@ -352,28 +336,5 @@ object InMemoryKinesis {
     stored.remove(name); calls.remove(name)
     topo.filterInPlace { case ((n, _), _) => n != name }
     failers.synchronized(failers.remove(name))
-  }
-}
-
-/** Minimal stub standing in for a whole producer (kept for the envelope
-  * smoke path): collects envelopes in a process-local buffer keyed by
-  * stream name (test-observable). */
-class StubKinesisSink(streamName: String) extends EnvelopeSink {
-  override def send(envelope: Array[Byte]): Unit =
-    StubKinesisSink.record(streamName, envelope)
-}
-
-object StubKinesisSink {
-  import scala.collection.mutable
-  private val streams =
-    mutable.Map.empty[String, mutable.ArrayBuffer[Array[Byte]]]
-
-  private def record(stream: String, envelope: Array[Byte]): Unit =
-    streams.synchronized {
-      streams.getOrElseUpdate(stream, mutable.ArrayBuffer.empty) += envelope
-    }
-
-  def drain(stream: String): Seq[Array[Byte]] = streams.synchronized {
-    streams.remove(stream).map(_.toSeq).getOrElse(Seq.empty)
   }
 }

@@ -2,81 +2,19 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 import org.apache.spark.sql.Row
 
-/** Structured Streaming ingest (SURVEY.md §2.8): the reference's whole
-  * pipeline — CSV stream → project/cast/filter → micro-batch → HTTP sink
-  * (CsvLoader.java:72-194) — re-expressed as `readStream` → the same
-  * declarative transform used in batch → `foreachBatch(HttpSink)`.
-  * Micro-batching is the engine's trigger, not a hand-rolled buffer; the
-  * 10k-row chunking inside the sink preserves the reference's envelope
-  * sizing (CsvLoader.java:160).
+/** Structured Streaming operators over event and document streams
+  * (SURVEY.md §2.8): watermarked dedup and windows, stateful running
+  * distinct, and the admission, redaction and graph-delta paths. The
+  * reference's own pipeline (CsvLoader.java:72-194) needs nothing here:
+  * it is `readStream.format("graft-vehicle-csv")` →
+  * `writeStream.format("graft-http-sink")` (or `"graft-kinesis-sink"`),
+  * the DSv2 source and sinks in [[graft.sources]], whose `ledgerDir`
+  * option makes a replayed epoch deliver nothing.
   */
 object StreamIngest {
-
-  /** Streaming variant of [[graft.ingest.CsvVehicleReader.read]]: the DataSourceV2
-    * source's MICRO_BATCH_READ path, so batch and streaming ingest share
-    * ONE parse/drop/decompression implementation — including `.zip`
-    * archives, which the earlier `readStream.text` detour could not
-    * serve (zip is not a Hadoop line-reader codec; r16 verdict gap #2).
-    * `maxFilesPerTrigger` bounds micro-batch size at the source
-    * (admission control). */
-  def readStream(spark: SparkSession, dir: String, maxFilesPerTrigger: Int = 10): DataFrame =
-    spark.readStream
-      .format("graft-vehicle-csv")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .load(dir)
-
-  /** Wire pings into the HTTP sink; caller starts/stops the query. */
-  def toHttpSink(pings: DataFrame, sink: HttpSink): DataStreamWriter[Row] =
-    pings.writeStream
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink.write(VehicleMessages.fromPings(batch))
-      }
-
-  /** Effectively-once variant: Structured Streaming replays a micro-batch
-    * after a crash between sink write and checkpoint commit; recording the
-    * committed batchId in a durable ledger and skipping replays upgrades
-    * the sink from at-least-once (the reference's contract) to
-    * effectively-once — PROVIDED (a) the ledger shares the checkpoint's
-    * lifecycle (see [[BatchLedger]]: a reset checkpoint with a stale
-    * ledger would silently skip new data under recycled batch ids), and
-    * (b) ledger-write and delivery are atomic enough for the receiver
-    * (ledger after delivery ⇒ a crash between the two still re-delivers;
-    * true exactly-once needs a transactional receiver). */
-  def toHttpSinkIdempotent(
-      pings: DataFrame, sink: HttpSink, ledger: BatchLedger): DataStreamWriter[Row] =
-    pings.writeStream
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!ledger.committed(batchId)) {
-          sink.write(VehicleMessages.fromPings(batch))
-          ledger.commit(batchId)
-        }
-      }
-
-  /** Wire pings into a Kinesis-shaped record sink: per micro-batch, each
-    * partition groups its pings into per-vehicle messages and sends them
-    * as vehicleId-keyed records (per-shard ordering). The producer runs
-    * INSIDE the executors via foreachPartition — the driver never sees
-    * message data, and each partition's batch chunks at the PutRecords
-    * limit in [[KinesisSink.putAll]]. */
-  def toKinesisSink(
-      pings: DataFrame, sink: KinesisSink, sourceId: Long): DataStreamWriter[Row] =
-    pings.writeStream
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val msgs = VehicleMessages.fromPings(batch)
-        val chunk = sink.maxBatch // bound per-call memory at the sink's own knob
-        msgs.foreachPartition { (it: Iterator[VehicleMessage]) =>
-          it.grouped(chunk).foreach(c => sink.sendMessages(sourceId, c))
-        }
-      }
 
   /** ST6/ST7 — watermarked streaming dedup on event id with BOUNDED state:
     * `dropDuplicatesWithinWatermark` lets the watermark evict per-id state
@@ -104,11 +42,6 @@ object StreamIngest {
       .agg(count(lit(1)).as("n_events"))
       .select(col("session_window.start").as("ss"),
         col("session_window.end").as("se"), col("user_id"), col("n_events"))
-
-  /** Convenience: run an AvailableNow foreachBatch query to completion. */
-  def runToCompletion(q: StreamingQuery): Unit = {
-    q.awaitTermination()
-  }
 
   /** ST8 — stateful running exact-distinct per key on the Spark 4
     * `transformWithState` API (the supported stateful operator; the
@@ -217,7 +150,7 @@ object StreamIngest {
     * deterministic function of the batch, so a replay after a crash
     * between sink write and checkpoint commit rewrites identical files
     * instead of appending duplicates (the idempotent-output alternative
-    * to [[toHttpSinkIdempotent]]'s ledger; a duplicated delta row would
+    * to the DSv2 sinks' `ledgerDir` ledger; a duplicated delta row would
     * otherwise rank the same edge twice at the next compaction).
     *
     * LAYER 1 TOO (r19): a batch member on the layer-1 id grid

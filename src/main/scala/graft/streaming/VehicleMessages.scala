@@ -1,8 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
-
 /** Typed sink-boundary model mirroring the reference's protobuf shape
   * (behavior of opentraffic/csv-loader CsvLoader.java:150-156, 206-209):
   * `VehicleMessageEnvelope{sourceId, messages:[VehicleMessage{vehicleId,
@@ -11,20 +8,3 @@ import org.apache.spark.sql.functions._
   */
 case class VehicleLocation(lat: Double, lon: Double, timestamp: Long)
 case class VehicleMessage(vehicleId: Long, locations: Seq[VehicleLocation])
-
-object VehicleMessages {
-
-  /** Reader output → typed messages. Like the reference (single
-    * `addLocations` per record, CsvLoader.java:152), each input ping
-    * becomes one single-location message — no per-vehicle grouping. */
-  def fromPings(pings: DataFrame): Dataset[VehicleMessage] = {
-    val spark = pings.sparkSession
-    import spark.implicits._
-    pings.select(
-      col("vehicle_id").as("vehicleId"),
-      array(struct(
-        col("lat"), col("lon"),
-        col("ts_ms").as("timestamp"))).as("locations"))
-      .as[VehicleMessage]
-  }
-}

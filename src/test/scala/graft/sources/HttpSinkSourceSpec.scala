@@ -11,10 +11,12 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.SparkSpec
 import graft.streaming.ProtoEnvelope
 
-/** The DSv2 HTTP sink (`writeStream.format("graft-http-sink")`):
-  * delivery parity with the foreachBatch path (same HttpSink, same
-  * envelopes), reference chunking semantics, batch-mode write, and
-  * loud-at-start validation of options and input schema. */
+/** The DSv2 HTTP sink (`writeStream.format("graft-http-sink")`), the one
+  * streaming delivery path: the csv stream's messages on the wire under
+  * the declared sourceId, reference chunking semantics, batch-mode
+  * write, loud-at-start validation of options and input schema, and the
+  * `ledgerDir` replay rule both DSv2 sinks share ([[SinkStreamingWrite]],
+  * [[graft.streaming.FileBatchLedger]]). */
 class HttpSinkSourceSpec extends SparkSpec {
 
   private def withServer[T](body: (String, ArrayBuffer[Array[Byte]]) => T): T = {
@@ -189,12 +191,16 @@ class HttpSinkSourceSpec extends SparkSpec {
       bytes.size
     }
     val idx = PingIndices(0, 1, 2, 3)
-    val sink = new graft.streaming.HttpSink("http://127.0.0.1:1/u", 1L)
+    val http = HttpSinkWriterFactory(
+      new graft.streaming.HttpSink("http://127.0.0.1:1/u", 1L), idx)
     val kinesis = KinesisWriterFactory("s", 1L,
       () => new graft.streaming.InMemoryKinesis(1, "t-ledger-size"), 500, idx)
+    def perEpoch(factory: org.apache.spark.sql.connector.write.streaming
+        .StreamingDataWriterFactory, dir: String) =
+      new SinkStreamingWrite(SinkLabel("t", "sends"), factory, Some(dir))
+        .createStreamingWriterFactory(null)
     val factories = Seq(ledgerDir(1), ledgerDir(100000)).map { dir =>
-      (new HttpSinkStreamingWrite(sink, idx, Some(dir)).createStreamingWriterFactory(null),
-        new KinesisStreamingWrite(kinesis, Some(dir)).createStreamingWriterFactory(null))
+      (perEpoch(http, dir), perEpoch(kinesis, dir))
     }
     val Seq((http1, kin1), (httpMany, kinMany)) = factories
     assert(serializedSize(http1) == serializedSize(httpMany))
@@ -203,5 +209,20 @@ class HttpSinkSourceSpec extends SparkSpec {
       assert(f.createWriter(0, 0L, 99999L).isInstanceOf[SkippedEpochWriter])
       assert(!f.createWriter(0, 0L, 100000L).isInstanceOf[SkippedEpochWriter])
     }
+  }
+
+  test("a ledger reloaded from a file of epochs 0..N reports N as its " +
+      "high-water mark: N is committed, N+1 is not") {
+    val dir = Files.createTempDirectory("graft-ledger-reload")
+    val n = 41L
+    // the ledger's append-only file: one committed epoch id per line
+    Files.write(dir.resolve("committed_batches"),
+      (0L to n).map(_ + "\n").mkString.getBytes(StandardCharsets.UTF_8))
+    val reloaded = new graft.streaming.FileBatchLedger(dir.toString)
+    assert(reloaded.committedThrough == n)
+    assert(reloaded.committed(n) && reloaded.committed(0L))
+    assert(!reloaded.committed(n + 1))
+    assert(new graft.streaming.FileBatchLedger(
+      Files.createTempDirectory("graft-ledger-empty").toString).committedThrough == -1L)
   }
 }

@@ -10,8 +10,8 @@ import graft.SparkSpec
 import graft.streaming.{InMemoryKinesis, ProtoEnvelope}
 
 /** The DSv2 Kinesis sink (`writeStream.format("graft-kinesis-sink")`):
-  * per-vehicle keyed records with shard affinity (parity with the
-  * foreachBatch path — same KinesisSink), PutRecords chunking at
+  * the csv stream's pings as per-vehicle keyed records with shard
+  * affinity (the one KinesisSink producer), PutRecords chunking at
   * maxBatch, and plan-time failure for an unregistered transport. */
 class KinesisSinkSourceSpec extends SparkSpec {
 

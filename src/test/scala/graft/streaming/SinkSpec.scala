@@ -118,30 +118,6 @@ class SinkSpec extends SparkSpec {
     assert(sid == 5L && decoded == msgs)
   }
 
-  test("dataset write chunks into batchSize envelopes with final partial flush") {
-    withServer(200) { (url, received, _) =>
-      import spark.implicits._
-      val ds = spark.createDataset(
-        (1 to 25).map(i => VehicleMessage(i.toLong, Seq(VehicleLocation(0, 0, i.toLong)))))
-        .repartition(1)
-      new HttpSink(url, sourceId = 9L, batchSize = 10).write(ds)
-      // 25 rows / batch 10 → 3 POSTs (10+10+5), final partial flush included
-      assert(received.size == 3)
-      val sizes = received.map(b => ProtoEnvelope.decodeEnvelope(b)._2.size).sorted
-      assert(sizes == ArrayBuffer(5, 10, 10))
-      val total = received.flatMap(b => ProtoEnvelope.decodeEnvelope(b)._2).map(_.vehicleId).sorted
-      assert(total == (1 to 25).map(_.toLong))
-    }
-  }
-
-  test("kinesis stub sink records envelopes per stream") {
-    val sink: EnvelopeSink = new StubKinesisSink("vehicles")
-    sink.send(ProtoEnvelope.encodeEnvelope(5L, msgs))
-    val drained = StubKinesisSink.drain("vehicles")
-    assert(drained.size == 1)
-    assert(ProtoEnvelope.decodeEnvelope(drained.head)._1 == 5L)
-  }
-
   test("kinesis sink: per-vehicle shard affinity and PutRecords batching") {
     val kin = new InMemoryKinesis(numShards = 4, name = "t-affinity")
     val sink = new KinesisSink("vehicles", kin, maxBatch = 500)

@@ -1,12 +1,10 @@
 package graft.streaming
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 import java.sql.Timestamp
 
 import scala.jdk.CollectionConverters._
-
-import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -19,10 +17,12 @@ case class Ev(event_id: Long, ts: Timestamp, user_id: Long,
 
 case class CrawlDoc(doc_id: Long, url: String, ts: Timestamp)
 
-/** Structured Streaming semantics (SURVEY.md §2.8 ST1-ST8): micro-batch
-  * ingest → HTTP sink e2e, watermarked dedup, tumbling windows with
-  * late-data drop, stateful running distinct. Deterministic via
-  * MemoryStream + processAllAvailable. */
+/** Structured Streaming semantics (SURVEY.md §2.8 ST3-ST8): watermarked
+  * dedup, tumbling windows with late-data drop, stateful running
+  * distinct, checkpoint recovery of the `graft-vehicle-csv` stream.
+  * Deterministic via MemoryStream + processAllAvailable. The ingest →
+  * sink e2e and replay cases run on the DSv2 sinks, in
+  * HttpSinkSourceSpec and KinesisSinkSourceSpec. */
 class StreamingSpec extends SparkSpec {
 
   import spark.implicits._
@@ -50,57 +50,6 @@ class StreamingSpec extends SparkSpec {
       spark.conf.unset(
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
     }
-  }
-
-  test("ST1/ST2 e2e: csv file stream → transform → foreachBatch http sink") {
-    val dir = Files.createTempDirectory("graft-stream")
-    Files.write(dir.resolve("part1.csv"),
-      "2015-02-14 23:51:40+05,42,23.7689,90.3886\n2015-02-14 23:51:41+05,43,23.7690,90.3890\n"
-        .getBytes(StandardCharsets.UTF_8))
-
-    val received = ArrayBuffer.empty[Array[Byte]]
-    val server = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
-    server.createContext("/u", (ex: com.sun.net.httpserver.HttpExchange) => {
-      received.synchronized { received += ex.getRequestBody.readAllBytes() }
-      ex.sendResponseHeaders(200, -1); ex.close()
-    })
-    server.start()
-    try {
-      val url = s"http://127.0.0.1:${server.getAddress.getPort}/u"
-      val q = StreamIngest.toHttpSink(
-        StreamIngest.readStream(spark, dir.toString),
-        new HttpSink(url, sourceId = 7L)).start()
-      q.awaitTermination()
-      val all = received.flatMap(b => ProtoEnvelope.decodeEnvelope(b)._2)
-      assert(all.map(_.vehicleId).sorted == ArrayBuffer(42L, 43L))
-      assert(all.forall(_.locations.head.timestamp > 0))
-    } finally server.stop(0)
-  }
-
-  test("S7 e2e: csv file stream → per-vehicle records → kinesis sink") {
-    val dir = Files.createTempDirectory("graft-stream-kin")
-    Files.write(dir.resolve("part1.csv"),
-      ("2015-02-14 23:51:40+05,42,23.7689,90.3886\n" +
-        "2015-02-14 23:51:41+05,43,23.7690,90.3890\n" +
-        "2015-02-14 23:51:42+05,42,23.7691,90.3891\n")
-        .getBytes(StandardCharsets.UTF_8))
-    val kin = new InMemoryKinesis(numShards = 4, name = "t-stream-e2e")
-    val q = StreamIngest.toKinesisSink(
-      StreamIngest.readStream(spark, dir.toString),
-      new KinesisSink("vehicles", kin), sourceId = 7L).start()
-    q.awaitTermination()
-    // every record keyed by its vehicle id (several records per vehicle
-    // are fine — same key ⇒ same shard ⇒ ordered, the Kinesis contract)
-    val recs = kin.records
-    assert(recs.map(_._2.partitionKey).toSet == Set("42", "43"))
-    val decoded = recs.map(r => ProtoEnvelope.decodeEnvelope(r._2.data))
-    assert(decoded.forall(_._1 == 7L))
-    val byVehicle = decoded.flatMap(_._2).groupBy(_.vehicleId)
-      .view.mapValues(_.map(_.locations.size).sum).toMap
-    assert(byVehicle == Map(42L -> 2, 43L -> 1))
-    // same vehicle id always routes to the same shard
-    assert(recs.groupBy(_._2.partitionKey).values.forall(_.map(_._1).distinct.size == 1))
   }
 
   test("ST7: streaming dedup drops in-watermark duplicate event ids") {
@@ -429,7 +378,7 @@ class StreamingSpec extends SparkSpec {
     val out = Files.createTempDirectory("graft-ckpt-out")
     val ckpt = Files.createTempDirectory("graft-ckpt")
     def startQuery() =
-      StreamIngest.readStream(spark, in.toString)
+      spark.readStream.format("graft-vehicle-csv").load(in.toString)
         .writeStream.format("parquet")
         .option("path", out.toString)
         .option("checkpointLocation", ckpt.toString)
@@ -449,59 +398,6 @@ class StreamingSpec extends SparkSpec {
       .select("vehicle_id").collect().map(_.getLong(0)).sorted
     // a.csv NOT reprocessed after restart: each ping exactly once
     assert(ids.toSeq == Seq(1L, 2L, 3L))
-  }
-
-  test("idempotent sink: replayed micro-batch is delivered exactly once") {
-    val in = Files.createTempDirectory("graft-idem-in")
-    Files.write(in.resolve("a.csv"),
-      "2015-02-14 23:51:40+05,1,1.0,1.0\n".getBytes(StandardCharsets.UTF_8))
-    val ledgerDir = Files.createTempDirectory("graft-idem-ledger").toString
-    val ckpt = Files.createTempDirectory("graft-idem-ckpt").toString
-
-    val received = ArrayBuffer.empty[Array[Byte]]
-    val server = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
-    server.createContext("/u", (ex: com.sun.net.httpserver.HttpExchange) => {
-      received.synchronized { received += ex.getRequestBody.readAllBytes() }
-      ex.sendResponseHeaders(200, -1); ex.close()
-    })
-    server.start()
-    try {
-      val url = s"http://127.0.0.1:${server.getAddress.getPort}/u"
-      // run 1: crash INSIDE foreachBatch after delivery + ledger commit
-      // but before the engine writes the checkpoint commit marker — the
-      // exact window where Structured Streaming will replay the batch
-      val sink = new HttpSink(url, sourceId = 1L)
-      val crashing = StreamIngest.readStream(spark, in.toString)
-        .writeStream
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-          val ledger = new FileBatchLedger(ledgerDir)
-          if (!ledger.committed(batchId)) {
-            sink.write(graft.streaming.VehicleMessages.fromPings(batch))
-            ledger.commit(batchId)
-            throw new RuntimeException("injected crash before checkpoint commit")
-          }
-        }
-        .start()
-      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        crashing.awaitTermination()
-      }
-      assert(received.size == 1, "batch not delivered before the crash")
-      assert(!Files.exists(Paths.get(ckpt, "commits", "0")),
-        "crash was supposed to precede the checkpoint commit marker")
-      // run 2 (restart): engine replays batch 0 with the same id/content;
-      // the ledger recognizes it — no duplicate POST
-      val q2 = StreamIngest.toHttpSinkIdempotent(
-          StreamIngest.readStream(spark, in.toString),
-          sink, new FileBatchLedger(ledgerDir))
-        .option("checkpointLocation", ckpt).start()
-      q2.awaitTermination()
-      assert(received.size == 1, s"replayed batch was re-delivered (${received.size} posts)")
-      assert(Files.exists(Paths.get(ckpt, "commits", "0")),
-        "restart should have committed batch 0")
-    } finally server.stop(0)
   }
 
   test("incremental corpus dedup runs as a stream: cross-batch dups never land") {
