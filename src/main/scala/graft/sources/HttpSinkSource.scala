@@ -78,7 +78,7 @@ private[sources] class HttpSinkTable(
     val label = SinkLabel("graft-http-sink", "POSTs")
     new WriteBuilder {
       override def build(): Write = new Write {
-        override def description(): String = "graft-http-sink"
+        override def description(): String = label.name
         override def toBatch: BatchWrite =
           new SinkBatchWrite(label, factory)
         override def toStreaming: StreamingWrite =

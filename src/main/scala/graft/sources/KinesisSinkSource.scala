@@ -101,7 +101,7 @@ private[sources] class KinesisSinkTable(
     val label = SinkLabel("graft-kinesis-sink", "PutRecords sends")
     new WriteBuilder {
       override def build(): Write = new Write {
-        override def description(): String = "graft-kinesis-sink"
+        override def description(): String = label.name
         override def toBatch: BatchWrite = new SinkBatchWrite(label, factory)
         override def toStreaming: StreamingWrite =
           new SinkStreamingWrite(label, factory, ledgerDir)
