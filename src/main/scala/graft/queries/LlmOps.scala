@@ -1992,12 +1992,6 @@ object LlmOps {
     * connects two groups whose EVERY member cross-pair the full
     * relation would connect — so the closure's edge volume is LINEAR in
     * a duplicate flood instead of quadratic. */
-  /** Dev-tool probe ([[graft.tools.FloodStress]]): the spanning-edge
-    * relation on an arbitrary `hashes(media_id, h_hi, h_lo)` corpus, so
-    * the flood receipt measures the EXACT production chain. */
-  def floodProbeSpanningEdges(hashes: DataFrame): DataFrame =
-    hammingBandSpanningEdges(hashes)
-
   private[queries] def hammingBandSpanningEdges(hashes: DataFrame): DataFrame = {
     val mem = withFpRep(hashes)
     val reps = mem.filter(col("media_id") === col("rep"))
@@ -6426,11 +6420,6 @@ object LlmOps {
         .head.getSeq[Float](0)
       (l0, l1, entry, emb)
     }
-
-  /** Spec hook: drop the spliced-index artifacts (they derive from the
-    * landed graph, so regime-forcing tests must rebuild them too). */
-  private[graft] def invalidateSplicedIndex(): Unit =
-    splicedIndexCache.invalidateAll()
 
   /** q190 — HIERARCHICAL SERVE over the SPLICED index (r18 verdict ask
     * #2's "done" criterion): the q187 walk run against the

@@ -228,7 +228,7 @@ private[sources] case class VehicleCsvOffset(index: Long) extends Offset {
   * older than the age cutoff ([[expireBelow]]); the dedup map evicts on
   * the same cutoff. With `maxFileAge=off` nothing expires and both are
   * O(directory) — the documented bounded-directory trade. */
-private[graft] final class VehicleCsvFileLog(dir: HPath, conf: Configuration) {
+private[sources] final class VehicleCsvFileLog(dir: HPath, conf: Configuration) {
   private val fs = dir.getFileSystem(conf)
   /** retained(i) holds `(path, modTime)` for log index
     * `retainedBase + i`; [0, retainedBase) is expired — dropped from

@@ -35,12 +35,25 @@ object DumpPlans {
       for (k <- keys) {
         val df = SparkEntry.queries(k)(spark, d)
         sb.append(s"\n## $k\n\n```\n")
-        sb.append(df.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")).trim)
+        sb.append(stable(df.queryExecution.explainString(
+          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")).trim))
         sb.append("\n```\n")
       }
       Files.write(Paths.get("PLANS.md"), sb.toString.getBytes(StandardCharsets.UTF_8))
       println(s"wrote PLANS.md (${keys.size} plans)")
     } finally spark.stop()
   }
+
+  private val LambdaClass = """\$Lambda(?:\$\d+)?/0x[0-9a-f]+""".r
+  private val IdentityHash = """([A-Za-z_$][\w$]*(?:\.[\w$]+)+)@[0-9a-f]{1,8}\b""".r
+
+  /** A plan with the tokens that change from one JVM run to the next
+    * rewritten to fixed placeholders, so two dumps of unchanged plans are
+    * equal: lambda class names (`Foo$$$Lambda$7020/0x00007f58...`) lose
+    * their sequence number and address, and identity hashes
+    * (`graft.functions.GramMatrix@463e0b6a`) become `@<hash>`. Expression
+    * ids (`#123`) stay: they link attributes within a plan. */
+  def stable(plan: String): String =
+    IdentityHash.replaceAllIn(
+      LambdaClass.replaceAllIn(plan, "\\$Lambda"), "$1@<hash>")
 }

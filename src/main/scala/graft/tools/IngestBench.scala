@@ -8,9 +8,8 @@ import java.util.zip.GZIPOutputStream
 import org.apache.hadoop.io.Text
 import org.apache.hadoop.util.LineReader
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
-import graft.CsvLoaderCli
+import graft.{CsvLoaderCli, SparkEnv}
 import graft.ingest.IngestFiles
 import graft.streaming.ProtoEnvelope
 
@@ -38,14 +37,7 @@ import graft.streaming.ProtoEnvelope
 object IngestBench {
   def main(args: Array[String]): Unit = {
     val rows = if (args.nonEmpty) args(0).toInt else 1000000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEnv.local("ingest-bench")
 
     // deterministic synthetic pings across several files (parallel scan)
     val dir = Files.createTempDirectory("ingest-bench")

@@ -37,8 +37,8 @@ class HttpSinkSourceSpec extends SparkSpec {
       "2015-02-14 23:51:41+05,43,23.7690,90.3890\n" +
       "2015-02-14 23:51:42+05,42,23.7691,90.3891\n"
 
-  test("streaming e2e: csv stream → DSv2 http sink delivers the same " +
-      "messages as the foreachBatch path, under the declared sourceId") {
+  test("streaming e2e: csv stream → DSv2 http sink delivers one " +
+      "single-location message per ping, under the declared sourceId") {
     val dir = Files.createTempDirectory("graft-httpsink-in")
     Files.write(dir.resolve("part1.csv"), csv.getBytes(StandardCharsets.UTF_8))
     withServer { (url, received) =>
