@@ -44,16 +44,25 @@ object DumpPlans {
     } finally spark.stop()
   }
 
-  private val LambdaClass = """\$Lambda(?:\$\d+)?/0x[0-9a-f]+""".r
-  private val IdentityHash = """([A-Za-z_$][\w$]*(?:\.[\w$]+)+)@[0-9a-f]{1,8}\b""".r
+  /** Tokens that change from one JVM run to the next, each with the
+    * fixed placeholder it is rewritten to. */
+  private val RunTokens = Seq(
+    // lambda class names: `Foo$$$Lambda$7020/0x00007f589d88fb50`
+    """\$Lambda(?:\$\d+)?/0x[0-9a-f]+""".r -> "\\$Lambda",
+    // identity hashes: `graft.functions.GramMatrix@463e0b6a`
+    """([A-Za-z_$][\w$]*(?:\.[\w$]+)+)@[0-9a-f]{1,8}\b""".r -> "$1@<hash>",
+    // the random suffix of `Scratch`'s temporary directory
+    """graft-scratch\d+""".r -> "graft-scratch<n>",
+    // exchange and RDD ids: JVM-wide counters whose value at a given
+    // plan varies from run to run
+    """plan_id=\d+""".r -> "plan_id=<n>",
+    """RDD\[\d+\]""".r -> "RDD[<n>]")
 
-  /** A plan with the tokens that change from one JVM run to the next
-    * rewritten to fixed placeholders, so two dumps of unchanged plans are
-    * equal: lambda class names (`Foo$$$Lambda$7020/0x00007f58...`) lose
-    * their sequence number and address, and identity hashes
-    * (`graft.functions.GramMatrix@463e0b6a`) become `@<hash>`. Expression
-    * ids (`#123`) stay: they link attributes within a plan. */
+  /** A plan with [[RunTokens]] rewritten, so two dumps of unchanged
+    * plans are equal. Expression ids (`#123`) stay: they link attributes
+    * within a plan. */
   def stable(plan: String): String =
-    IdentityHash.replaceAllIn(
-      LambdaClass.replaceAllIn(plan, "\\$Lambda"), "$1@<hash>")
+    RunTokens.foldLeft(plan) { case (p, (token, placeholder)) =>
+      token.replaceAllIn(p, placeholder)
+    }
 }
