@@ -45,6 +45,9 @@ object Tables {
   /** Whether `p`'s schema is cached (for tests). */
   private[graft] def schemaCached(p: String): Boolean = schemaCache.containsKey(p)
 
+  /** How many schemas are cached (for tests). */
+  private[graft] def schemaCacheSize: Int = schemaCache.size
+
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     name match {
       case "events" => events(spark, sfDir)

@@ -5221,12 +5221,22 @@ object LlmOps {
     knnLayer1Cache.getOrCompute(d) { dir =>
       val path = graft.operators.Scratch.materializePath(
         knnLayer1Build(s, dir), "knn-l1")
-      val entry = Tables.parquet(s, path).agg(min(col("va"))).head.getLong(0)
-      val emb = Tables.embeddings(s, dir)
-        .filter(col("vec_id") === entry).select(col("embedding"))
-        .head.getSeq[Float](0)
+      val (entry, emb) = layerEntry(s, dir, path)
       (path, entry, emb)
     }
+
+  /** A landed layer's serve entry: its minimum owner id, and that
+    * vector's embedding. */
+  private def layerEntry(s: SparkSession, d: String,
+      path: String): (Long, Seq[Float]) = {
+    val entry = Tables.parquet(s, path).agg(min(col("va"))).head.getLong(0)
+    (entry, embeddingOf(s, d, entry))
+  }
+
+  /** The embedding of vector `id`: a pushed-down point fetch. */
+  private def embeddingOf(s: SparkSession, d: String, id: Long): Seq[Float] =
+    Tables.embeddings(s, d).filter(col("vec_id") === id)
+      .select(col("embedding")).head.getSeq[Float](0)
 
   /** Spec hook: drop the landed graph AND everything derived from it
     * (the layer-1 artifact, semdedup labels), so a regime-forcing test
@@ -5314,11 +5324,21 @@ object LlmOps {
       graft.operators.Scratch.materializePath(
         graphSpliceCandidates(s, dir, derivedGraphBatch(s, dir)),
         "splice-cand")))
-    val wN = Window.partitionBy(col("nid")).orderBy(col("sim").desc, col("vec_id"))
+    appendSplice(g, cand, "nid", "vec_id")
+  }
+
+  /** The two-sided APPEND splice of [[q171]] (layer 0) and [[q188]]
+    * (layer 1): `cand` holds (new node `nw`, old node `old`, sim) rows
+    * against the landed adjacency `g(va, vb, sim, rn)`. Each new node
+    * takes its top-3; every candidate old node merges the reverse edge
+    * into its adjacency and re-ranks its top-3. */
+  private def appendSplice(g: DataFrame, cand: DataFrame, nw: String,
+      old: String): DataFrame = {
+    val wN = Window.partitionBy(col(nw)).orderBy(col("sim").desc, col(old))
     val newEdges = cand.withColumn("rn", row_number().over(wN))
       .filter(col("rn") <= 3)
-      .select(col("nid").as("va"), col("vec_id").as("vb"), col("sim"), col("rn"))
-    val rev = cand.select(col("vec_id").as("va"), col("nid").as("vb"), col("sim"))
+      .select(col(nw).as("va"), col(old).as("vb"), col("sim"), col("rn"))
+    val rev = cand.select(col(old).as("va"), col(nw).as("vb"), col("sim"))
     // Only TOUCHED old nodes (members of the batch's probe cells — the
     // reverse-edge candidates) re-rank; everyone else's rows pass
     // through verbatim, so the corpus graph never reshuffles beyond the
@@ -5326,7 +5346,7 @@ object LlmOps {
     // Pass-through is exact: an untouched node's adjacency is unchanged
     // and rn's (sim desc, vb) order is deterministic. `touched` is
     // batch × probe-cell width — broadcastable by construction.
-    val touched = cand.select(col("vec_id").as("va")).distinct()
+    val touched = cand.select(col(old).as("va")).distinct()
     val keep = g.join(broadcast(touched), Seq("va"), "left_anti")
       .select(col("va"), col("vb"), col("sim"), col("rn"))
     val wO = Window.partitionBy(col("va")).orderBy(col("sim").desc, col("vb"))
@@ -5378,13 +5398,22 @@ object LlmOps {
       |ncand AS (SELECT np.nid, c.vec_id,
       |            round(list_cosine_similarity(np.ne, c.emb), 4) AS sim
       |          FROM np JOIN cellv c USING (cell)),
-      |nnew AS (SELECT nid AS va, vec_id AS vb, sim,
-      |           row_number() OVER (PARTITION BY nid
-      |             ORDER BY sim DESC, vec_id) AS rn
-      |         FROM ncand),
-      |mrg AS (SELECT va, vb, sim FROM gfin
+      |${appendSpliceSql("gfin", "ncand", "nid", "vec_id")}""".stripMargin)
+  }
+
+  /** The oracle's two-sided append ([[appendSplice]]'s mirror, q171 and
+    * q188): candidate CTE `cand` of (`nw`, `old`, sim) rows against
+    * graph CTE `g` — every new node's top-3 plus every node's top-3
+    * re-ranked over its edges ∪ its reverse candidates. */
+  private def appendSpliceSql(g: String, cand: String, nw: String,
+      old: String) =
+    s"""nnew AS (SELECT $nw AS va, $old AS vb, sim,
+      |           row_number() OVER (PARTITION BY $nw
+      |             ORDER BY sim DESC, $old) AS rn
+      |         FROM $cand),
+      |mrg AS (SELECT va, vb, sim FROM $g
       |        UNION ALL
-      |        SELECT vec_id AS va, nid AS vb, sim FROM ncand),
+      |        SELECT $old AS va, $nw AS vb, sim FROM $cand),
       |mrk AS (SELECT va, vb, sim,
       |          row_number() OVER (PARTITION BY va ORDER BY sim DESC, vb)
       |            AS rn
@@ -5392,8 +5421,7 @@ object LlmOps {
       |SELECT va, vb, sim, rn FROM mrk WHERE rn <= 3
       |UNION ALL
       |SELECT va, vb, sim, rn FROM nnew WHERE rn <= 3
-      |ORDER BY va, rn""".stripMargin)
-  }
+      |ORDER BY va, rn""".stripMargin
 
   /** q172 — kNN-graph DELETE: retire a tombstone batch from the LANDED
     * graph without rebuilding — the graph-side q160. Tombstones are
@@ -5418,73 +5446,117 @@ object LlmOps {
     * over the shared probe-2 relation `pp`. */
   def q172(s: SparkSession, d: String): DataFrame = {
     val g = Tables.parquet(s, knnGraphPath(s, d))
-    val (path, _) = ivf2Cache.getOrCompute(d)(ivf2Build(s, _))
-    val layout = Tables.parquet(s, path)
-    val tomb = Tables.embeddings(s, d)
-      .filter(col("vec_id") % 31 === 0).select(col("vec_id"))
+    val layout = landedLayout(s, d)
+    val tomb = graphTombstones(s, d)
+    deleteSplice(g, tomb) { (owned, affected, tombB) =>
+      val surv = owned.join(broadcast(affected), Seq("va"), "left_semi")
+        .join(tombB, Seq("vb"), "left_anti")
+        .select(col("va"), col("vb"), col("sim"))
+      val live = layout.join(broadcast(tomb), Seq("vec_id"), "left_anti")
+      val aProbes = widenProbes(
+        live.join(
+            broadcast(affected.select(col("va").as("vec_id"))), Seq("vec_id"))
+          .select(col("vec_id").as("va"), col("embedding").as("ea"),
+            col("cell"), col("cell2")),
+        Seq("va", "ea"))
+      val liveCand = live.select(col("vec_id").as("vb"),
+        col("embedding").as("eb"), col("cell"))
+      val cellCand = aProbes.join(liveCand, Seq("cell"))
+        .filter(col("va") =!= col("vb"))
+        .select(col("va"), col("vb"),
+          round(CosineSimilarityExpr(col("ea"), col("eb")), 4).as("sim"))
+      // UNION-dedup is exact: a pair in both arms carries the identical
+      // round-4 cosine (same expression over the same float vectors)
+      surv.unionByName(cellCand).distinct()
+    }
+  }
+
+  /** The graph lifecycle's tombstone class (q160's): vec_id % 31 == 0. */
+  private def graphTombstones(s: SparkSession, d: String): DataFrame =
+    Tables.embeddings(s, d).filter(col("vec_id") % 31 === 0)
+      .select(col("vec_id"))
+
+  /** The DELETE splice of [[q172]] (layer 0) and [[q189]] (layer 1) over
+    * the landed adjacency `g(va, vb, sim, rn)`: tombstoned owners drop,
+    * nodes whose top-3 referenced a tombstone are AFFECTED, everyone
+    * else passes through. `repair(owned, affected, tombB)` yields the
+    * affected nodes' candidate rows (va, vb, sim), which re-rank to a
+    * top-3; `tombB` is the broadcast tombstone set keyed `vb`. */
+  private def deleteSplice(g: DataFrame, tomb: DataFrame)(
+      repair: (DataFrame, DataFrame, DataFrame) => DataFrame): DataFrame = {
     val tombA = broadcast(tomb.select(col("vec_id").as("va")))
     val tombB = broadcast(tomb.select(col("vec_id").as("vb")))
     val owned = g.join(tombA, Seq("va"), "left_anti")
     val affected = owned.join(tombB, Seq("vb"), "left_semi")
       .select(col("va")).distinct()
     val keep = owned.join(broadcast(affected), Seq("va"), "left_anti")
-    val surv = owned.join(broadcast(affected), Seq("va"), "left_semi")
-      .join(tombB, Seq("vb"), "left_anti")
-      .select(col("va"), col("vb"), col("sim"))
-    val live = layout.join(broadcast(tomb), Seq("vec_id"), "left_anti")
-    val aProbes = widenProbes(
-      live.join(
-          broadcast(affected.select(col("va").as("vec_id"))), Seq("vec_id"))
-        .select(col("vec_id").as("va"), col("embedding").as("ea"),
-          col("cell"), col("cell2")),
-      Seq("va", "ea"))
-    val liveCand = live.select(col("vec_id").as("vb"),
-      col("embedding").as("eb"), col("cell"))
-    val cellCand = aProbes.join(liveCand, Seq("cell"))
-      .filter(col("va") =!= col("vb"))
-      .select(col("va"), col("vb"),
-        round(CosineSimilarityExpr(col("ea"), col("eb")), 4).as("sim"))
-    // UNION-dedup is exact: a pair in both arms carries the identical
-    // round-4 cosine (same expression over the same float vectors)
-    val cand = surv.unionByName(cellCand).distinct()
+      .select(col("va"), col("vb"), col("sim"), col("rn"))
     val w = Window.partitionBy(col("va")).orderBy(col("sim").desc, col("vb"))
-    val repaired = cand.withColumn("rn", row_number().over(w))
+    val repaired = repair(owned, affected, tombB)
+      .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= 3)
-    keep.select(col("va"), col("vb"), col("sim"), col("rn"))
-      .unionByName(repaired)
-      .orderBy(col("va"), col("rn"))
+    keep.unionByName(repaired).orderBy(col("va"), col("rn"))
   }
 
   private lazy val q172Sql =
     materializeCtes(s"""WITH $knnGraphCtesSql,
-      |tomb AS (SELECT vec_id FROM embeddings WHERE vec_id % 31 = 0),
-      |owned AS (SELECT va, vb, sim, rn FROM gfin
+      |$tombCteSql,
+      |${deleteCtes0("")}
+      |${deletedGraphSql("", "va, vb, sim, rn")}
+      |ORDER BY va, rn""".stripMargin)
+
+  private val tombCteSql =
+    "tomb AS (SELECT vec_id FROM embeddings WHERE vec_id % 31 = 0)"
+
+  /** The oracle's delete splice ([[deleteSplice]]'s mirror) over graph
+    * CTE `g` and the `tomb` CTE, every CTE name suffixed `x`: `repair`
+    * defines `cand$x(va, vb, sim)` for the affected nodes `aff$x`, and
+    * `rrk$x` ranks it. The spliced graph is [[deletedGraphSql]]. */
+  private def deleteCtes(x: String, g: String, repair: String) =
+    s"""owned$x AS (SELECT va, vb, sim, rn FROM $g
       |          WHERE va NOT IN (SELECT vec_id FROM tomb)),
-      |aff AS (SELECT DISTINCT va FROM owned
+      |aff$x AS (SELECT DISTINCT va FROM owned$x
       |        WHERE vb IN (SELECT vec_id FROM tomb)),
-      |keep AS (SELECT va, vb, sim, rn FROM owned
-      |         WHERE va NOT IN (SELECT va FROM aff)),
-      |surv AS (SELECT va, vb, sim FROM owned
-      |         WHERE va IN (SELECT va FROM aff)
-      |           AND vb NOT IN (SELECT vec_id FROM tomb)),
-      |livec AS (SELECT vec_id, emb, cell FROM cellv
-      |          WHERE vec_id NOT IN (SELECT vec_id FROM tomb)),
-      |acand AS (SELECT p.pid AS va, c.vec_id AS vb,
-      |            round(list_cosine_similarity(p.pe, c.emb), 4) AS sim
-      |          FROM pp p JOIN livec c USING (cell)
-      |          WHERE p.pid IN (SELECT va FROM aff)
-      |            AND p.pid <> c.vec_id),
-      |cand2 AS (SELECT va, vb, sim FROM surv
-      |          UNION
-      |          SELECT va, vb, sim FROM acand),
-      |rrk AS (SELECT va, vb, sim,
+      |keep$x AS (SELECT va, vb, sim, rn FROM owned$x
+      |         WHERE va NOT IN (SELECT va FROM aff$x)),
+      |$repair,
+      |rrk$x AS (SELECT va, vb, sim,
       |          row_number() OVER (PARTITION BY va ORDER BY sim DESC, vb)
       |            AS rn
-      |        FROM cand2)
-      |SELECT va, vb, sim, rn FROM keep
+      |        FROM cand$x)""".stripMargin
+
+  /** [[q172]]'s layer-0 delete: affected nodes re-rank over their
+    * surviving edges ∪ the live members of their probe cells (`pp`). */
+  private def deleteCtes0(x: String) = deleteCtes(x, "gfin",
+    s"""surv$x AS (SELECT va, vb, sim FROM owned$x
+      |         WHERE va IN (SELECT va FROM aff$x)
+      |           AND vb NOT IN (SELECT vec_id FROM tomb)),
+      |livec$x AS (SELECT vec_id, emb, cell FROM cellv
+      |          WHERE vec_id NOT IN (SELECT vec_id FROM tomb)),
+      |acand$x AS (SELECT p.pid AS va, c.vec_id AS vb,
+      |            round(list_cosine_similarity(p.pe, c.emb), 4) AS sim
+      |          FROM pp p JOIN livec$x c USING (cell)
+      |          WHERE p.pid IN (SELECT va FROM aff$x)
+      |            AND p.pid <> c.vec_id),
+      |cand$x AS (SELECT va, vb, sim FROM surv$x
+      |          UNION
+      |          SELECT va, vb, sim FROM acand$x)""".stripMargin)
+
+  /** [[q189]]'s layer-1 delete: affected members re-rank exactly over
+    * every live member. */
+  private def deleteCtes1(x: String) = deleteCtes(x, "l1g",
+    s"""livem$x AS (SELECT vec_id, emb FROM l1
+      |          WHERE vec_id NOT IN (SELECT vec_id FROM tomb)),
+      |cand$x AS (SELECT a.va, b.vec_id AS vb,
+      |           round(list_cosine_similarity(ae.emb, b.emb), 4) AS sim
+      |         FROM aff$x a JOIN e ae ON ae.vec_id = a.va
+      |              JOIN livem$x b ON b.vec_id <> a.va)""".stripMargin)
+
+  /** The spliced graph of [[deleteCtes]] `x`: kept rows ∪ re-ranked top-3. */
+  private def deletedGraphSql(x: String, cols: String) =
+    s"""SELECT $cols FROM keep$x
       |UNION ALL
-      |SELECT va, vb, sim, rn FROM rrk WHERE rn <= 3
-      |ORDER BY va, rn""".stripMargin)
+      |SELECT $cols FROM rrk$x WHERE rn <= 3""".stripMargin
 
   /** q173 — GRAPH-ANN SERVE: greedy beam search over the LANDED kNN
     * graph, entered through the LANDED quantizer — the production
@@ -5519,27 +5591,84 @@ object LlmOps {
     * CTEs, every tiebreak (sim desc, vid) shared. */
   def q173(s: SparkSession, d: String): DataFrame = {
     val g = Tables.parquet(s, knnGraphPath(s, d))
-    val e0 = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val (path, _) = ivf2Cache.getOrCompute(d)(ivf2Build(s, _))
-    val layout = Tables.parquet(s, path)
-    val probeRows = widenProbes(
-      layout.filter(col("vec_id") >= 16 && col("vec_id") < 26)
-        .select(col("vec_id").as("pid"), col("embedding").as("pe"),
-          col("cell"), col("cell2")),
-      Seq("pid", "pe"))
+    val e0 = vecEmbeddings(s, d)
+    val layout = landedLayout(s, d)
+    val p = probeSet(layout).select(col("vec_id").as("pid"),
+      col("embedding").as("pe"), col("cell"), col("cell2"))
     val cands = layout
       .select(col("vec_id").as("vid"), col("embedding").as("ve"), col("cell"))
-    val visited0 = cands.join(broadcast(probeRows), Seq("cell"))
-      .filter(col("pid") =!= col("vid"))
-      .select(col("pid"), col("pe"), col("vid"),
-        round(CosineSimilarityExpr(col("pe"), col("ve")), 4).as("sim"))
-    val wB = Window.partitionBy(col("pid")).orderBy(col("sim").desc, col("vid"))
-    beamWalk(visited0, g, e0)
-      .filter(col("pid") =!= col("vid"))
-      .withColumn("rn", row_number().over(wB))
-      .filter(col("rn") <= 3)
-      .select(col("pid"), col("vid"), col("sim"), col("rn"))
+    serveAnswer(beamWalk(probe2Entry(cands, p), g, e0))
+  }
+
+  /** The landed IVF2 layout (vec_id, embedding, label, cell, cell2). */
+  private def landedLayout(s: SparkSession, d: String): DataFrame =
+    Tables.parquet(s, ivf2Cache.getOrCompute(d)(ivf2Build(s, _))._1)
+
+  /** (vec_id, embedding): the walks' embedding-fetch side. */
+  private def vecEmbeddings(s: SparkSession, d: String): DataFrame =
+    Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
+
+  /** The serve family's probe set: vec_id 16..25, the q149 class. */
+  private def probeSet(df: DataFrame): DataFrame =
+    df.filter(col("vec_id") >= 16 && col("vec_id") < 26)
+
+  /** Scored (pid, pe, vid, sim) walk rows from a probe × candidate
+    * relation, the probe itself excluded. */
+  private def scoredPairs(j: DataFrame): DataFrame = j
+    .filter(col("pid") =!= col("vid"))
+    .select(col("pid"), col("pe"), col("vid"),
+      round(CosineSimilarityExpr(col("pe"), col("ve")), 4).as("sim"))
+
+  /** Round 0 of q173's production entry: each probe `p(pid, pe, cell,
+    * cell2)` scored against the members of its landed probe-1 ∪ probe-2
+    * cells in `cands(vid, ve, cell)`. */
+  private def probe2Entry(cands: DataFrame, p: DataFrame): DataFrame =
+    scoredPairs(cands.join(
+      broadcast(widenProbes(p, Seq("pid", "pe"))), Seq("cell")))
+
+  /** Round 0 entered at ONE persisted entry node: each (pid, pe) probe
+    * scored against the entry's embedding, a projection with no join. */
+  private def entryRows(probes: DataFrame, entryId: Long,
+      entryEmb: Seq[Float]): DataFrame =
+    probes.select(col("pid"), col("pe"), lit(entryId).as("vid"),
+      round(CosineSimilarityExpr(col("pe"), typedlit(entryEmb)), 4)
+        .as("sim"))
+
+  /** Top-3 rows per `keys` in (sim desc, vid) order, ranked `rn`. */
+  private def rankTop(df: DataFrame,
+      keys: Seq[String] = Seq("pid")): DataFrame = {
+    val w = Window.partitionBy(keys.map(col): _*)
+      .orderBy(col("sim").desc, col("vid"))
+    df.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
+  }
+
+  /** A walk's answer rows: the per-`keys` top-3 of the visited set, the
+    * probe itself excluded. */
+  private def serveTop(visited: DataFrame,
+      keys: Seq[String] = Seq("pid")): DataFrame =
+    rankTop(visited.filter(col("pid") =!= col("vid")), keys)
+
+  /** The serve relation (pid, vid, sim, rn) of a walk, in order. */
+  private def serveAnswer(visited: DataFrame): DataFrame =
+    serveTop(visited).select(col("pid"), col("vid"), col("sim"), col("rn"))
       .orderBy(col("pid"), col("rn"))
+
+  /** Per-probe recall pivot of the serve reports (q177, q179): answer
+    * rows `top(arm, pid, vid)` that hit the ground truth `exact(pid,
+    * vid)`, counted per probe into one column per arm (arm i → `arms(i)`),
+    * 0 where none hit; `base` holds one row per probe plus the `carry`
+    * columns. */
+  private def recallPivot(top: DataFrame, exact: DataFrame, base: DataFrame,
+      arms: Seq[String], carry: Seq[Column] = Nil): DataFrame = {
+    val counts = arms.zipWithIndex.map { case (a, i) =>
+      sum(when(col("arm") === i, 1L).otherwise(0L)).as(a)
+    }
+    val hits = top.join(exact, Seq("pid", "vid"))
+      .groupBy(col("pid")).agg(counts.head, counts.tail: _*)
+    base.join(hits, Seq("pid"), "left")
+      .select(col("pid") +: carry ++:
+        arms.map(a => coalesce(col(a), lit(0L)).as(a)): _*)
+      .orderBy(col("pid"))
   }
 
   /** The shared greedy beam walk over a landed graph (q173's rounds,
@@ -5619,43 +5748,49 @@ object LlmOps {
     visited
   }
 
-  private lazy val q173Sql = {
-    def roundCte(r: Int) =
-      s"""b$r AS (SELECT pid, vid FROM (
-        |        SELECT pid, vid, row_number() OVER (PARTITION BY pid
-        |            ORDER BY sim DESC, vid) AS rn
-        |        FROM v${r - 1}) WHERE rn <= 8),
-        |x$r AS (SELECT DISTINCT b.pid, u.vb AS vid
-        |        FROM b$r b JOIN und2 u ON u.va = b.vid),
-        |f$r AS (SELECT x.pid, round(list_cosine_similarity(p.pe, c.emb), 4)
-        |          AS sim, x.vid
-        |        FROM x$r x JOIN pr p USING (pid)
-        |             JOIN e c ON c.vec_id = x.vid
-        |        WHERE x.pid <> x.vid
-        |          AND NOT EXISTS (SELECT 1 FROM v${r - 1} v
-        |                          WHERE v.pid = x.pid AND v.vid = x.vid)),
-        |v$r AS (SELECT pid, vid, sim FROM v${r - 1}
-        |        UNION ALL
-        |        SELECT pid, vid, sim FROM f$r)""".stripMargin
+  private lazy val q173Sql =
     materializeCtes(s"""WITH $knnGraphCtesSql,
-      |und2 AS (SELECT va, vb FROM gfin
-      |         UNION
-      |         SELECT vb AS va, va AS vb FROM gfin),
-      |pr AS (SELECT vec_id AS pid, emb AS pe FROM e
-      |       WHERE vec_id >= 16 AND vec_id < 26),
-      |v0 AS (SELECT p.pid, c.vec_id AS vid,
+      |${undCte("und2", "gfin")},
+      |$probeCteSql,
+      |${probe2EntryCte("v0")},
+      |${walkCtes("", "und2", 8, 3)}
+      |${serveAnswerSql("v3")}""".stripMargin)
+
+  /** The oracle's probe CTE `pr(pid, pe)` over `e` ([[probeSet]]). */
+  private val probeCteSql =
+    """pr AS (SELECT vec_id AS pid, emb AS pe FROM e
+      |       WHERE vec_id >= 16 AND vec_id < 26)""".stripMargin
+
+  /** [[probe2Entry]]'s mirror: each probe's `pp` rows against `cellv`. */
+  private def probe2EntryCte(name: String) =
+    s"""$name AS (SELECT p.pid, c.vec_id AS vid,
       |         round(list_cosine_similarity(p.pe, c.emb), 4) AS sim
       |       FROM pp p JOIN cellv c USING (cell)
-      |       WHERE p.pid >= 16 AND p.pid < 26 AND p.pid <> c.vec_id),
-      |${roundCte(1)},
-      |${roundCte(2)},
-      |${roundCte(3)}
-      |SELECT pid, vid, sim, rn FROM (
-      |  SELECT pid, vid, sim, row_number() OVER (PARTITION BY pid
-      |      ORDER BY sim DESC, vid) AS rn
-      |  FROM v3 WHERE pid <> vid)
-      |WHERE rn <= 3 ORDER BY pid, rn""".stripMargin)
-  }
+      |       WHERE p.pid >= 16 AND p.pid < 26 AND p.pid <> c.vec_id)"""
+      .stripMargin
+
+  /** Per-probe top-3 `cols` of the walk rows `from`, in (sim desc, vid)
+    * order; `rn` appended to the output columns when `withRn`. */
+  private def top3Sql(cols: String, from: String, withRn: Boolean = false) =
+    s"""SELECT $cols${if (withRn) ", rn" else ""} FROM (
+      |        SELECT $cols, row_number() OVER (PARTITION BY pid
+      |            ORDER BY sim DESC, vid) AS rn
+      |        FROM $from) WHERE rn <= 3""".stripMargin
+
+  /** [[serveAnswer]]'s mirror over walk CTE `v`. */
+  private def serveAnswerSql(v: String) =
+    s"${top3Sql("pid, vid, sim", s"$v WHERE pid <> vid", withRn = true)}" +
+      "\nORDER BY pid, rn"
+
+  /** `${a}t3(pid, vid)`: the answer of walk `a` after 3 rounds. */
+  private def walkTop3Cte(a: String) =
+    s"${a}t3 AS (${top3Sql("pid, vid", s"${a}v3 WHERE pid <> vid")})"
+
+  /** `name(pid, n)`: per probe, how many of `t3`'s answers are in `ex`. */
+  private def recallCte(name: String, t3: String, ex: String, n: String) =
+    s"""$name AS (SELECT t.pid, CAST(count(*) AS BIGINT) AS $n
+      |       FROM $t3 t JOIN $ex ON t.pid = $ex.pid AND t.vid = $ex.vid
+      |       GROUP BY t.pid)""".stripMargin
 
   /** q177 — graph-serve ENTRY SENSITIVITY report (r13 verdict gap #5,
     * the q167 report shape applied to q173): the same 3-round beam walk
@@ -5688,26 +5823,14 @@ object LlmOps {
     * pattern. */
   def q177(s: SparkSession, d: String): DataFrame = {
     val g = Tables.parquet(s, knnGraphPath(s, d))
-    val e0 = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val (path, _) = ivf2Cache.getOrCompute(d)(ivf2Build(s, _))
-    val layout = Tables.parquet(s, path)
-    val p = layout.filter(col("vec_id") >= 16 && col("vec_id") < 26)
-      .select(col("vec_id").as("pid"), col("embedding").as("pe"),
-        col("cell"), col("cell2"))
+    val e0 = vecEmbeddings(s, d)
+    val layout = landedLayout(s, d)
+    val p = probeSet(layout).select(col("vec_id").as("pid"),
+      col("embedding").as("pe"), col("cell"), col("cell2"))
     val probes = p.select(col("pid"), col("pe"))
     val own = p.select(col("pid"), col("pe"), col("cell"))
-    val widened = widenProbes(p, Seq("pid", "pe"))
     val cands = layout
       .select(col("vec_id").as("vid"), col("embedding").as("ve"), col("cell"))
-    def scored(j: DataFrame): DataFrame = j
-      .filter(col("pid") =!= col("vid"))
-      .select(col("pid"), col("pe"), col("vid"),
-        round(CosineSimilarityExpr(col("pe"), col("ve")), 4).as("sim"))
-    val wB = Window.partitionBy(col("pid")).orderBy(col("sim").desc, col("vid"))
-    def top3(visited: DataFrame): DataFrame = visited
-      .filter(col("pid") =!= col("vid"))
-      .withColumn("rn", row_number().over(wB)).filter(col("rn") <= 3)
-      .select(col("pid"), col("vid"))
     val entries = e0.filter(col("vec_id") < 8)
       .select(col("vec_id").as("vid"), col("embedding").as("ve"))
     // r19 fourth arm — q187's hierarchical routing at the SAME layer-0
@@ -5717,14 +5840,8 @@ object LlmOps {
     // probe2's √(8n)-row cell join — the report measures what that
     // entry-cost saving costs in recall.
     val (l1Path, entryId, entryEmb) = knnLayer1State(s, d)
-    val l1g = Tables.parquet(s, l1Path).select(col("va"), col("vb"))
-    val v0h = probes.select(col("pid"), col("pe"), lit(entryId).as("vid"),
-      round(CosineSimilarityExpr(col("pe"), typedlit(entryEmb)), 4)
-        .as("sim"))
-    val wB2 = Window.partitionBy(col("pid")).orderBy(col("sim").desc, col("vid"))
-    val hEntries = beamWalk(v0h, l1g, e0, rounds = 3, beamWidth = 4)
-      .withColumn("rn", row_number().over(wB2)).filter(col("rn") <= 3)
-      .select(col("pid"), col("pe"), col("vid"), col("sim"))
+    val hEntries = hierEntries(probes, Tables.parquet(s, l1Path)
+      .select(col("va"), col("vb")), e0, entryId, entryEmb)
     // ONE layer-0 walk for all four arms (r20): the arms walk the SAME
     // landed graph with the same probes and budget, differing only in
     // their entry rows — tag those with `arm` and run the shared walk
@@ -5733,78 +5850,31 @@ object LlmOps {
     // per arm); Catalyst compiles 3 round plans instead of 12, and the
     // report's wall was ~entirely that planning (measured ~11 s plan vs
     // 0.1 s exec cold at sf0.1).
-    val v0all = scored(broadcast(probes).crossJoin(entries))
+    val v0all = scoredPairs(broadcast(probes).crossJoin(entries))
       .withColumn("arm", lit(0))
-      .unionByName(scored(cands.join(broadcast(own), Seq("cell")))
+      .unionByName(scoredPairs(cands.join(broadcast(own), Seq("cell")))
         .withColumn("arm", lit(1)))
-      .unionByName(scored(cands.join(broadcast(widened), Seq("cell")))
-        .withColumn("arm", lit(2)))
+      .unionByName(probe2Entry(cands, p).withColumn("arm", lit(2)))
       .unionByName(hEntries.withColumn("arm", lit(3)))
-    val wArm = Window.partitionBy(col("arm"), col("pid"))
-      .orderBy(col("sim").desc, col("vid"))
-    val top3All = beamWalk(v0all, g, e0, keys = Seq("arm", "pid"))
-      .filter(col("pid") =!= col("vid"))
-      .withColumn("rn", row_number().over(wArm)).filter(col("rn") <= 3)
-      .select(col("arm"), col("pid"), col("vid"))
-    val exact = top3(scored(cands.drop("cell")
-      .crossJoin(broadcast(probes))))
+    val top3All = serveTop(beamWalk(v0all, g, e0, keys = Seq("arm", "pid")),
+      Seq("arm", "pid")).select(col("arm"), col("pid"), col("vid"))
+    val exact = serveTop(scoredPairs(cands.drop("cell")
+      .crossJoin(broadcast(probes)))).select(col("pid"), col("vid"))
     // ONE hits join + a conditional-sum pivot (r21): the previous
     // four per-arm `hits(a)` joins referenced the WALK subtree and the
     // exact ground-truth subtree four times each — Catalyst copies the
     // subtree per reference, so the report re-planned (and AQE
     // re-materialized) four walks. Per-arm counts are identical: a
     // per-(arm,pid) count(1) is sum(arm = a) grouped by pid.
-    val hitsAll = top3All.join(exact, Seq("pid", "vid"))
-      .groupBy(col("pid"))
-      .agg(
-        sum(when(col("arm") === 0, 1L).otherwise(0L)).as("recall_fixed"),
-        sum(when(col("arm") === 1, 1L).otherwise(0L)).as("recall_probe1"),
-        sum(when(col("arm") === 2, 1L).otherwise(0L)).as("recall_probe2"),
-        sum(when(col("arm") === 3, 1L).otherwise(0L)).as("recall_hier"))
-    probes.select(col("pid"))
-      .join(hitsAll, Seq("pid"), "left")
-      .select(col("pid"),
-        coalesce(col("recall_fixed"), lit(0L)).as("recall_fixed"),
-        coalesce(col("recall_probe1"), lit(0L)).as("recall_probe1"),
-        coalesce(col("recall_probe2"), lit(0L)).as("recall_probe2"),
-        coalesce(col("recall_hier"), lit(0L)).as("recall_hier"))
-      .orderBy(col("pid"))
+    recallPivot(top3All, exact, probes.select(col("pid")), Seq(
+      "recall_fixed", "recall_probe1", "recall_probe2", "recall_hier"))
   }
 
   private lazy val q177Sql = {
-    // one unrolled walk round, CTE names prefixed per arm
-    def roundCte(a: String, r: Int) =
-      s"""${a}b$r AS (SELECT pid, vid FROM (
-        |        SELECT pid, vid, row_number() OVER (PARTITION BY pid
-        |            ORDER BY sim DESC, vid) AS rn
-        |        FROM ${a}v${r - 1}) WHERE rn <= 8),
-        |${a}x$r AS (SELECT DISTINCT b.pid, u.vb AS vid
-        |        FROM ${a}b$r b JOIN und2 u ON u.va = b.vid),
-        |${a}f$r AS (SELECT x.pid,
-        |          round(list_cosine_similarity(p.pe, c.emb), 4) AS sim,
-        |          x.vid
-        |        FROM ${a}x$r x JOIN pr p USING (pid)
-        |             JOIN e c ON c.vec_id = x.vid
-        |        WHERE x.pid <> x.vid
-        |          AND NOT EXISTS (SELECT 1 FROM ${a}v${r - 1} v
-        |                          WHERE v.pid = x.pid AND v.vid = x.vid)),
-        |${a}v$r AS (SELECT pid, vid, sim FROM ${a}v${r - 1}
-        |        UNION ALL
-        |        SELECT pid, vid, sim FROM ${a}f$r)""".stripMargin
-    def walk(a: String) =
-      s"""${roundCte(a, 1)},
-        |${roundCte(a, 2)},
-        |${roundCte(a, 3)},
-        |${a}t3 AS (SELECT pid, vid FROM (
-        |        SELECT pid, vid, row_number() OVER (PARTITION BY pid
-        |            ORDER BY sim DESC, vid) AS rn
-        |        FROM ${a}v3 WHERE pid <> vid) WHERE rn <= 3)""".stripMargin
+    def walk(a: String) = s"${walkCtes(a, "und2", 8, 3)},\n${walkTop3Cte(a)}"
     materializeCtes(s"""WITH $knnGraphCtesSql,
-      |und2 AS (SELECT va, vb FROM gfin
-      |         UNION
-      |         SELECT vb AS va, va AS vb FROM gfin),
-      |pr AS (SELECT vec_id AS pid, emb AS pe FROM e
-      |       WHERE vec_id >= 16 AND vec_id < 26),
+      |${undCte("und2", "gfin")},
+      |$probeCteSql,
       |fxv0 AS (SELECT p.pid, c.vec_id AS vid,
       |         round(list_cosine_similarity(p.pe, c.emb), 4) AS sim
       |       FROM pr p JOIN e c ON c.vec_id < 8 AND p.pid <> c.vec_id),
@@ -5812,53 +5882,25 @@ object LlmOps {
       |         round(list_cosine_similarity(p.pe, c.emb), 4) AS sim
       |       FROM pown p JOIN cellv c USING (cell)
       |       WHERE p.pid <> c.vec_id),
-      |p2v0 AS (SELECT p.pid, c.vec_id AS vid,
-      |         round(list_cosine_similarity(p.pe, c.emb), 4) AS sim
-      |       FROM pp p JOIN cellv c USING (cell)
-      |       WHERE p.pid >= 16 AND p.pid < 26 AND p.pid <> c.vec_id),
+      |${probe2EntryCte("p2v0")},
       |${walk("fx")},
       |${walk("p1")},
       |${walk("p2")},
       |$l1CtesSql,
-      |und1 AS (SELECT va, vb FROM l1g
-      |         UNION
-      |         SELECT vb AS va, va AS vb FROM l1g),
+      |${undCte("und1", "l1g")},
       |en AS (SELECT min(vec_id) AS vid FROM l1),
-      |hhv0 AS (SELECT p.pid, c.vec_id AS vid,
-      |         round(list_cosine_similarity(p.pe, c.emb), 4) AS sim
-      |       FROM pr p JOIN e c ON c.vec_id = (SELECT vid FROM en)),
-      |${walkRoundCte("hh", "und1", 4, 1)},
-      |${walkRoundCte("hh", "und1", 4, 2)},
-      |${walkRoundCte("hh", "und1", 4, 3)},
-      |hlv0 AS (SELECT pid, vid, sim FROM (
-      |        SELECT pid, vid, sim, row_number() OVER (PARTITION BY pid
-      |            ORDER BY sim DESC, vid) AS rn
-      |        FROM hhv3) WHERE rn <= 3),
-      |${walkRoundCte("hl", "und2", 8, 1)},
-      |${walkRoundCte("hl", "und2", 8, 2)},
-      |${walkRoundCte("hl", "und2", 8, 3)},
-      |hlt3 AS (SELECT pid, vid FROM (
-      |        SELECT pid, vid, row_number() OVER (PARTITION BY pid
-      |            ORDER BY sim DESC, vid) AS rn
-      |        FROM hlv3 WHERE pid <> vid) WHERE rn <= 3),
+      |${hierWalkCtes("h", 3)},
+      |${walkTop3Cte("hl")},
       |ex AS (SELECT pid, vid FROM (
       |        SELECT p.pid, c.vec_id AS vid, row_number() OVER (
       |            PARTITION BY p.pid
       |            ORDER BY round(list_cosine_similarity(p.pe, c.emb), 4)
       |              DESC, c.vec_id) AS rn
       |        FROM pr p, e c WHERE p.pid <> c.vec_id) WHERE rn <= 3),
-      |rfx AS (SELECT t.pid, CAST(count(*) AS BIGINT) AS recall_fixed
-      |        FROM fxt3 t JOIN ex ON t.pid = ex.pid AND t.vid = ex.vid
-      |        GROUP BY t.pid),
-      |rp1 AS (SELECT t.pid, CAST(count(*) AS BIGINT) AS recall_probe1
-      |        FROM p1t3 t JOIN ex ON t.pid = ex.pid AND t.vid = ex.vid
-      |        GROUP BY t.pid),
-      |rp2 AS (SELECT t.pid, CAST(count(*) AS BIGINT) AS recall_probe2
-      |        FROM p2t3 t JOIN ex ON t.pid = ex.pid AND t.vid = ex.vid
-      |        GROUP BY t.pid),
-      |rhh AS (SELECT t.pid, CAST(count(*) AS BIGINT) AS recall_hier
-      |        FROM hlt3 t JOIN ex ON t.pid = ex.pid AND t.vid = ex.vid
-      |        GROUP BY t.pid)
+      |${recallCte("rfx", "fxt3", "ex", "recall_fixed")},
+      |${recallCte("rp1", "p1t3", "ex", "recall_probe1")},
+      |${recallCte("rp2", "p2t3", "ex", "recall_probe2")},
+      |${recallCte("rhh", "hlt3", "ex", "recall_hier")}
       |SELECT pr.pid,
       |  COALESCE(rfx.recall_fixed, 0) AS recall_fixed,
       |  COALESCE(rp1.recall_probe1, 0) AS recall_probe1,
@@ -5902,50 +5944,36 @@ object LlmOps {
     * filtered-exact CTEs, every tiebreak shared. */
   def q179(s: SparkSession, d: String): DataFrame = {
     val g = Tables.parquet(s, knnGraphPath(s, d))
-    val e0 = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
+    val e0 = vecEmbeddings(s, d)
     val lab = Tables.embeddings(s, d)
       .select(col("vec_id").as("vid"), col("label"))
-    val (path, _) = ivf2Cache.getOrCompute(d)(ivf2Build(s, _))
-    val layout = Tables.parquet(s, path)
-    val p = layout.filter(col("vec_id") >= 16 && col("vec_id") < 26)
-      .select(col("vec_id").as("pid"), col("embedding").as("pe"),
-        col("label").as("plabel"), col("cell"), col("cell2"))
+    val layout = landedLayout(s, d)
+    val p = probeSet(layout).select(col("vec_id").as("pid"),
+      col("embedding").as("pe"), col("label").as("plabel"), col("cell"),
+      col("cell2"))
     val probes = p.select(col("pid"), col("pe"))
     val plab = p.select(col("pid"), col("plabel"))
-    val widened = widenProbes(p, Seq("pid", "pe"))
     val cands = layout
       .select(col("vec_id").as("vid"), col("embedding").as("ve"),
         col("label"), col("cell"))
-    def scored(j: DataFrame): DataFrame = j
-      .filter(col("pid") =!= col("vid"))
-      .select(col("pid"), col("pe"), col("vid"),
-        round(CosineSimilarityExpr(col("pe"), col("ve")), 4).as("sim"))
-    val wB = Window.partitionBy(col("pid")).orderBy(col("sim").desc, col("vid"))
-    // keep only same-label (pid, vid) rows — round 0 of the strawman arm
-    def labelMatch(df: DataFrame): DataFrame = df
-      .join(lab, Seq("vid"))
-      .join(broadcast(plab), Seq("pid"))
-      .filter(col("label") === col("plabel"))
-      .drop("label", "plabel")
-    def top3(visited: DataFrame): DataFrame = visited
-      .filter(col("pid") =!= col("vid"))
-      .withColumn("rn", row_number().over(wB)).filter(col("rn") <= 3)
-      .select(col("pid"), col("vid"))
-    val v0 = scored(cands.join(broadcast(widened), Seq("cell")))
+    // keep only same-label (pid, vid) rows, and every row of arm `pass`
+    def labelled(df: DataFrame, pass: Option[Int] = None): DataFrame = {
+      val same = col("label") === col("plabel")
+      df.join(lab, Seq("vid"))
+        .join(broadcast(plab), Seq("pid"))
+        .filter(pass.fold(same)(a => col("arm") === a || same))
+        .drop("label", "plabel")
+    }
+    val v0 = probe2Entry(cands, p)
     // ONE walk for both arms (r20, the q177 merge): arm 0 walks the
     // full graph, arm 1 label-restricts round 0 and every expansion.
     // The shared walk partitions by (arm, pid), and the expansion
     // filter passes arm-0 rows unconditionally — per-arm semantics are
     // identical to two separate walks while Catalyst compiles half the
     // round plans (the report's wall is planning, not execution).
-    val armFilter: DataFrame => DataFrame = df => df
-      .join(lab, Seq("vid"))
-      .join(broadcast(plab), Seq("pid"))
-      .filter(col("arm") === 0 || col("label") === col("plabel"))
-      .drop("label", "plabel")
     val v0all = v0.withColumn("arm", lit(0))
-      .unionByName(labelMatch(v0).withColumn("arm", lit(1)))
-    val walked = beamWalk(v0all, g, e0, expandFilter = armFilter,
+      .unionByName(labelled(v0).withColumn("arm", lit(1)))
+    val walked = beamWalk(v0all, g, e0, expandFilter = labelled(_, Some(0)),
       keys = Seq("arm", "pid"))
     // ONE post-walk ranking + ONE hits join (r21, the q177 pivot): the
     // per-arm top3/hits pipelines referenced the walk subtree (and the
@@ -5956,95 +5984,39 @@ object LlmOps {
     // (arm, pid) windows is identical to ranking each filtered arm by
     // pid. Every vid carries a label row, so the lab join stays
     // lossless for arm 1.
-    val wArm2 = Window.partitionBy(col("arm"), col("pid"))
-      .orderBy(col("sim").desc, col("vid"))
-    val top3Both = walked
-      .join(lab, Seq("vid"))
-      .join(broadcast(plab), Seq("pid"))
-      .filter(col("arm") === 1 || col("label") === col("plabel"))
-      .drop("label", "plabel")
-      .filter(col("pid") =!= col("vid"))
-      .withColumn("rn", row_number().over(wArm2)).filter(col("rn") <= 3)
+    val top3Both = serveTop(labelled(walked, Some(1)), Seq("arm", "pid"))
       .select(col("arm"), col("pid"), col("vid"))
-    val fex = top3(scored(
+    val fex = serveTop(scoredPairs(
       cands.drop("cell").crossJoin(broadcast(probes))
         .join(broadcast(p.select(col("pid"), col("plabel"))), Seq("pid"))
         .filter(col("label") === col("plabel"))))
-    val hitsAll = top3Both.join(fex, Seq("pid", "vid"))
-      .groupBy(col("pid"))
-      .agg(
-        sum(when(col("arm") === 0, 1L).otherwise(0L))
-          .as("recall_walk_filter"),
-        sum(when(col("arm") === 1, 1L).otherwise(0L))
-          .as("recall_expand_filter"))
-    plab
-      .join(hitsAll, Seq("pid"), "left")
-      .select(col("pid"), col("plabel").as("label"),
-        coalesce(col("recall_walk_filter"), lit(0L))
-          .as("recall_walk_filter"),
-        coalesce(col("recall_expand_filter"), lit(0L))
-          .as("recall_expand_filter"))
-      .orderBy(col("pid"))
+      .select(col("pid"), col("vid"))
+    recallPivot(top3Both, fex, plab,
+      Seq("recall_walk_filter", "recall_expand_filter"),
+      carry = Seq(col("plabel").as("label")))
   }
 
-  private lazy val q179Sql = {
-    // one unrolled walk round; `filtered` label-restricts the expansion
-    def roundCte(a: String, r: Int, filtered: Boolean) = {
-      val labJoin = if (filtered)
-        "\n             JOIN lab l ON l.vec_id = x.vid" +
-          "\n             JOIN plab pl ON pl.pid = x.pid" else ""
-      val labCond = if (filtered) "\n          AND l.label = pl.plabel" else ""
-      s"""${a}b$r AS (SELECT pid, vid FROM (
-        |        SELECT pid, vid, row_number() OVER (PARTITION BY pid
-        |            ORDER BY sim DESC, vid) AS rn
-        |        FROM ${a}v${r - 1}) WHERE rn <= 8),
-        |${a}x$r AS (SELECT DISTINCT b.pid, u.vb AS vid
-        |        FROM ${a}b$r b JOIN und2 u ON u.va = b.vid),
-        |${a}f$r AS (SELECT x.pid,
-        |          round(list_cosine_similarity(p.pe, c.emb), 4) AS sim,
-        |          x.vid
-        |        FROM ${a}x$r x JOIN pr p USING (pid)
-        |             JOIN e c ON c.vec_id = x.vid$labJoin
-        |        WHERE x.pid <> x.vid$labCond
-        |          AND NOT EXISTS (SELECT 1 FROM ${a}v${r - 1} v
-        |                          WHERE v.pid = x.pid AND v.vid = x.vid)),
-        |${a}v$r AS (SELECT pid, vid, sim FROM ${a}v${r - 1}
-        |        UNION ALL
-        |        SELECT pid, vid, sim FROM ${a}f$r)""".stripMargin
-    }
-    def walk(a: String, filtered: Boolean) =
-      s"""${roundCte(a, 1, filtered)},
-        |${roundCte(a, 2, filtered)},
-        |${roundCte(a, 3, filtered)}""".stripMargin
+  private lazy val q179Sql =
     materializeCtes(s"""WITH $knnGraphCtesSql,
-      |und2 AS (SELECT va, vb FROM gfin
-      |         UNION
-      |         SELECT vb AS va, va AS vb FROM gfin),
-      |pr AS (SELECT vec_id AS pid, emb AS pe FROM e
-      |       WHERE vec_id >= 16 AND vec_id < 26),
+      |${undCte("und2", "gfin")},
+      |$probeCteSql,
       |lab AS (SELECT vec_id, label FROM embeddings),
       |plab AS (SELECT p.pid, l.label AS plabel
       |         FROM pr p JOIN lab l ON l.vec_id = p.pid),
-      |wav0 AS (SELECT p.pid, c.vec_id AS vid,
-      |         round(list_cosine_similarity(p.pe, c.emb), 4) AS sim
-      |       FROM pp p JOIN cellv c USING (cell)
-      |       WHERE p.pid >= 16 AND p.pid < 26 AND p.pid <> c.vec_id),
+      |${probe2EntryCte("wav0")},
       |xbv0 AS (SELECT v.pid, v.vid, v.sim FROM wav0 v
       |         JOIN lab l ON l.vec_id = v.vid
       |         JOIN plab pl ON pl.pid = v.pid
       |         WHERE l.label = pl.plabel),
-      |${walk("wa", filtered = false)},
-      |${walk("xb", filtered = true)},
+      |${walkCtes("wa", "und2", 8, 3)},
+      |${walkCtes("xb", "und2", 8, 3, labelled = true)},
       |wat3 AS (SELECT pid, vid FROM (
       |        SELECT v.pid, v.vid, row_number() OVER (PARTITION BY v.pid
       |            ORDER BY v.sim DESC, v.vid) AS rn
       |        FROM wav3 v JOIN lab l ON l.vec_id = v.vid
       |             JOIN plab pl ON pl.pid = v.pid
       |        WHERE v.pid <> v.vid AND l.label = pl.plabel) WHERE rn <= 3),
-      |xbt3 AS (SELECT pid, vid FROM (
-      |        SELECT pid, vid, row_number() OVER (PARTITION BY pid
-      |            ORDER BY sim DESC, vid) AS rn
-      |        FROM xbv3 WHERE pid <> vid) WHERE rn <= 3),
+      |${walkTop3Cte("xb")},
       |fex AS (SELECT pid, vid FROM (
       |        SELECT p.pid, c.vec_id AS vid, row_number() OVER (
       |            PARTITION BY p.pid
@@ -6054,19 +6026,14 @@ object LlmOps {
       |             JOIN e c ON p.pid <> c.vec_id
       |             JOIN lab l ON l.vec_id = c.vec_id
       |        WHERE l.label = pl.plabel) WHERE rn <= 3),
-      |rw AS (SELECT t.pid, CAST(count(*) AS BIGINT) AS recall_walk_filter
-      |       FROM wat3 t JOIN fex ON t.pid = fex.pid AND t.vid = fex.vid
-      |       GROUP BY t.pid),
-      |rx AS (SELECT t.pid, CAST(count(*) AS BIGINT) AS recall_expand_filter
-      |       FROM xbt3 t JOIN fex ON t.pid = fex.pid AND t.vid = fex.vid
-      |       GROUP BY t.pid)
+      |${recallCte("rw", "wat3", "fex", "recall_walk_filter")},
+      |${recallCte("rx", "xbt3", "fex", "recall_expand_filter")}
       |SELECT pl.pid, pl.plabel AS label,
       |  COALESCE(rw.recall_walk_filter, 0) AS recall_walk_filter,
       |  COALESCE(rx.recall_expand_filter, 0) AS recall_expand_filter
       |FROM plab pl LEFT JOIN rw ON pl.pid = rw.pid
       |             LEFT JOIN rx ON pl.pid = rx.pid
       |ORDER BY pl.pid""".stripMargin)
-  }
 
   /** q187 — HIERARCHICAL ENTRY SERVE (HNSW's layered routing shape,
     * served GRAPH-ONLY — no IVF layout anywhere in the serve path):
@@ -6098,31 +6065,43 @@ object LlmOps {
   def q187(s: SparkSession, d: String): DataFrame = {
     val g = Tables.parquet(s, knnGraphPath(s, d))
     val (l1Path, entryId, entryEmb) = knnLayer1State(s, d)
-    val l1g = Tables.parquet(s, l1Path).select(col("va"), col("vb"))
-    val e0 = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val probes = e0.filter(col("vec_id") >= 16 && col("vec_id") < 26)
-      .select(col("vec_id").as("pid"), col("embedding").as("pe"))
-    val v0l1 = probes.select(col("pid"), col("pe"),
-      lit(entryId).as("vid"),
-      round(CosineSimilarityExpr(col("pe"), typedlit(entryEmb)), 4)
-        .as("sim"))
-    val l1visited = beamWalk(v0l1, l1g, e0, rounds = 3, beamWidth = 4)
-    val wB = Window.partitionBy(col("pid")).orderBy(col("sim").desc, col("vid"))
-    val entries0 = l1visited.withColumn("rn", row_number().over(wB))
-      .filter(col("rn") <= 3)
+    hierServe(s, d, g, Tables.parquet(s, l1Path).select(col("va"), col("vb")),
+      entryId, entryEmb)
+  }
+
+  /** The layer-1 half of the hierarchical serve: each (pid, pe) probe
+    * enters `g1` at the persisted entry and greedy-walks it (3 rounds,
+    * beam 4); its top-3 are the layer-0 entry rows (pid, pe, vid, sim). */
+  private def hierEntries(probes: DataFrame, g1: DataFrame, e0: DataFrame,
+      entryId: Long, entryEmb: Seq[Float]): DataFrame =
+    rankTop(beamWalk(entryRows(probes, entryId, entryEmb), g1, e0,
+      rounds = 3, beamWidth = 4))
       .select(col("pid"), col("pe"), col("vid"), col("sim"))
-    val visited = beamWalk(entries0, g, e0, rounds = 4)
-    visited.filter(col("pid") =!= col("vid"))
-      .withColumn("rn", row_number().over(wB)).filter(col("rn") <= 3)
-      .select(col("pid"), col("vid"), col("sim"), col("rn"))
-      .orderBy(col("pid"), col("rn"))
+
+  /** The hierarchical serve of [[q187]] (landed layers) and [[q190]]
+    * (spliced layers): [[hierEntries]] over layer 1 `g1`, then a 4-round
+    * layer-0 walk over `g0`; the answer is its per-probe top-3. */
+  private def hierServe(s: SparkSession, d: String, g0: DataFrame,
+      g1: DataFrame, entryId: Long, entryEmb: Seq[Float]): DataFrame = {
+    val e0 = vecEmbeddings(s, d)
+    val probes = probeSet(e0)
+      .select(col("vec_id").as("pid"), col("embedding").as("pe"))
+    serveAnswer(beamWalk(hierEntries(probes, g1, e0, entryId, entryEmb),
+      g0, e0, rounds = 4))
   }
 
   /** One unrolled oracle beam-walk round (the [[beamWalk]] contract):
     * arm prefix `a`, graph CTE `und`, beam `b`, reads `${a}v${r-1}` and
-    * the probe CTE `pr(pid, pe)`, defines `${a}v$r`. Shared by q187's
-    * two walks, q188's insert routing, and q190's spliced serve. */
-  private def walkRoundCte(a: String, und: String, b: Int, r: Int) =
+    * the probe CTE `pr(pid, pe)`, defines `${a}v$r`. `labelled` keeps
+    * only fresh candidates whose label (`lab`) is the probe's (`plab`):
+    * q179's constrained-expansion arm. */
+  private def walkRoundCte(a: String, und: String, b: Int, r: Int,
+      labelled: Boolean = false) = {
+    val (labJoin, labCond) =
+      if (labelled) ("\n             JOIN lab l ON l.vec_id = x.vid" +
+        "\n             JOIN plab pl ON pl.pid = x.pid",
+        "\n          AND l.label = pl.plabel")
+      else ("", "")
     s"""${a}b$r AS (SELECT pid, vid FROM (
       |        SELECT pid, vid, row_number() OVER (PARTITION BY pid
       |            ORDER BY sim DESC, vid) AS rn
@@ -6133,13 +6112,43 @@ object LlmOps {
       |          round(list_cosine_similarity(p.pe, c.emb), 4) AS sim,
       |          x.vid
       |        FROM ${a}x$r x JOIN pr p USING (pid)
-      |             JOIN e c ON c.vec_id = x.vid
-      |        WHERE x.pid <> x.vid
+      |             JOIN e c ON c.vec_id = x.vid$labJoin
+      |        WHERE x.pid <> x.vid$labCond
       |          AND NOT EXISTS (SELECT 1 FROM ${a}v${r - 1} v
       |                          WHERE v.pid = x.pid AND v.vid = x.vid)),
       |${a}v$r AS (SELECT pid, vid, sim FROM ${a}v${r - 1}
       |        UNION ALL
       |        SELECT pid, vid, sim FROM ${a}f$r)""".stripMargin
+  }
+
+  /** Rounds 1..`rounds` of walk `a` ([[walkRoundCte]]). */
+  private def walkCtes(a: String, und: String, b: Int, rounds: Int,
+      labelled: Boolean = false) =
+    (1 to rounds).map(walkRoundCte(a, und, b, _, labelled)).mkString(",\n")
+
+  /** `name(va, vb)`: graph CTE `g`'s edges both ways ([[beamWalk]]'s
+    * `und`). */
+  private def undCte(name: String, g: String) =
+    s"""$name AS (SELECT va, vb FROM $g
+      |         UNION
+      |         SELECT vb AS va, va AS vb FROM $g)""".stripMargin
+
+  /** [[entryRows]] + the layer-1 walk of [[hierEntries]] as walk `a`:
+    * `${a}v0` scores each probe against the entry `en(vid)`, then 3
+    * rounds at beam 4 over `und1`. */
+  private def layer1WalkCtes(a: String) =
+    s"""${a}v0 AS (SELECT p.pid, c.vec_id AS vid,
+      |         round(list_cosine_similarity(p.pe, c.emb), 4) AS sim
+      |       FROM pr p JOIN e c ON c.vec_id = (SELECT vid FROM en)),
+      |${walkCtes(a, "und1", 4, 3)}""".stripMargin
+
+  /** [[hierServe]]'s two walks under prefix `a`: the layer-1 walk
+    * `${a}h`, its top-3 as `${a}lv0`, then `rounds` layer-0 rounds of
+    * walk `${a}l` over `und2`. */
+  private def hierWalkCtes(a: String, rounds: Int) =
+    s"""${layer1WalkCtes(s"${a}h")},
+      |${a}lv0 AS (${top3Sql("pid, vid, sim", s"${a}hv3")}),
+      |${walkCtes(s"${a}l", "und2", 8, rounds)}""".stripMargin
 
   /** The layer-1 chain (mirrors [[knnLayer1Build]]'s exact arm):
     * members + ranked exact top-3 adjacency. Expects an `e(vec_id,
@@ -6158,35 +6167,16 @@ object LlmOps {
 
   private lazy val q187Sql =
     materializeCtes(s"""WITH $knnGraphCtesSql,
-      |und2 AS (SELECT va, vb FROM gfin
-      |         UNION
-      |         SELECT vb AS va, va AS vb FROM gfin),
-      |pr AS (SELECT vec_id AS pid, emb AS pe FROM e
-      |       WHERE vec_id >= 16 AND vec_id < 26),
+      |${undCte("und2", "gfin")},
+      |$probeCteSql,
       |$l1CtesSql,
-      |und1 AS (SELECT va, vb FROM l1g
-      |         UNION
-      |         SELECT vb AS va, va AS vb FROM l1g),
+      |${undCte("und1", "l1g")},
       |en AS (SELECT min(vec_id) AS vid FROM l1),
-      |hv0 AS (SELECT p.pid, c.vec_id AS vid,
-      |         round(list_cosine_similarity(p.pe, c.emb), 4) AS sim
-      |       FROM pr p JOIN e c ON c.vec_id = (SELECT vid FROM en)),
-      |${walkRoundCte("h", "und1", 4, 1)},
-      |${walkRoundCte("h", "und1", 4, 2)},
-      |${walkRoundCte("h", "und1", 4, 3)},
-      |lv0 AS (SELECT pid, vid, sim FROM (
-      |        SELECT pid, vid, sim, row_number() OVER (PARTITION BY pid
-      |            ORDER BY sim DESC, vid) AS rn
-      |        FROM hv3) WHERE rn <= 3),
-      |${walkRoundCte("l", "und2", 8, 1)},
-      |${walkRoundCte("l", "und2", 8, 2)},
-      |${walkRoundCte("l", "und2", 8, 3)},
-      |${walkRoundCte("l", "und2", 8, 4)}
-      |SELECT pid, vid, sim, rn FROM (
-      |  SELECT pid, vid, sim, row_number() OVER (PARTITION BY pid
-      |      ORDER BY sim DESC, vid) AS rn
-      |  FROM lv4 WHERE pid <> vid)
-      |WHERE rn <= 3 ORDER BY pid, rn""".stripMargin)
+      |$hierServeSql""".stripMargin)
+
+  /** [[hierServe]]'s oracle (q187, q190): both walks, then the answer. */
+  private lazy val hierServeSql =
+    s"${hierWalkCtes("", 4)}\n${serveAnswerSql("lv4")}"
 
   /** q188 — layer-1 APPEND (the q171 discipline applied to the landed
     * LAYER-1 graph, r18 verdict ask #2): fold the derived new-vector
@@ -6219,11 +6209,8 @@ object LlmOps {
       batch: DataFrame): DataFrame = {
     val (l1Path, entryId, entryEmb) = knnLayer1State(s, d)
     val g1 = Tables.parquet(s, l1Path)
-    val e0 = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val v0 = batch.select(col("pid"), col("pe"), lit(entryId).as("vid"),
-      round(CosineSimilarityExpr(col("pe"), typedlit(entryEmb)), 4)
-        .as("sim"))
-    beamWalk(v0, g1.select(col("va"), col("vb")), e0,
+    beamWalk(entryRows(batch, entryId, entryEmb),
+      g1.select(col("va"), col("vb")), vecEmbeddings(s, d),
       rounds = 3, beamWidth = 4)
   }
 
@@ -6231,24 +6218,7 @@ object LlmOps {
     val g1 = Tables.parquet(s, knnLayer1State(s, d)._1)
     val batch = derivedGraphBatch(s, d).filter(col("nid") % 8 === 0)
       .select(col("nid").as("pid"), col("ne").as("pe"))
-    val visited = layer1SpliceVisited(s, d, batch)
-    val wP = Window.partitionBy(col("pid")).orderBy(col("sim").desc, col("vid"))
-    val newEdges = visited.withColumn("rn", row_number().over(wP))
-      .filter(col("rn") <= 3)
-      .select(col("pid").as("va"), col("vid").as("vb"), col("sim"), col("rn"))
-    val rev = visited
-      .select(col("vid").as("va"), col("pid").as("vb"), col("sim"))
-    val touched = visited.select(col("vid").as("va")).distinct()
-    val keep = g1.join(broadcast(touched), Seq("va"), "left_anti")
-      .select(col("va"), col("vb"), col("sim"), col("rn"))
-    val wO = Window.partitionBy(col("va")).orderBy(col("sim").desc, col("vb"))
-    val merged = g1.join(broadcast(touched), Seq("va"), "left_semi")
-      .select(col("va"), col("vb"), col("sim"))
-      .unionByName(rev)
-      .withColumn("rn", row_number().over(wO))
-      .filter(col("rn") <= 3)
-    keep.unionByName(merged).unionByName(newEdges)
-      .orderBy(col("va"), col("rn"))
+    appendSplice(g1, layer1SpliceVisited(s, d, batch), "pid", "vid")
   }
 
   private lazy val q188Sql =
@@ -6260,31 +6230,10 @@ object LlmOps {
       |         list_transform(emb, x -> x + 0.0007) AS ne
       |       FROM e WHERE vec_id % 13 = 2 AND (-vec_id - 1) % 8 = 0),
       |pr AS (SELECT nid AS pid, ne AS pe FROM nb),
-      |und1 AS (SELECT va, vb FROM l1g
-      |         UNION
-      |         SELECT vb AS va, va AS vb FROM l1g),
+      |${undCte("und1", "l1g")},
       |en AS (SELECT min(vec_id) AS vid FROM l1),
-      |hv0 AS (SELECT p.pid, c.vec_id AS vid,
-      |         round(list_cosine_similarity(p.pe, c.emb), 4) AS sim
-      |       FROM pr p JOIN e c ON c.vec_id = (SELECT vid FROM en)),
-      |${walkRoundCte("h", "und1", 4, 1)},
-      |${walkRoundCte("h", "und1", 4, 2)},
-      |${walkRoundCte("h", "und1", 4, 3)},
-      |nnew AS (SELECT pid AS va, vid AS vb, sim,
-      |           row_number() OVER (PARTITION BY pid
-      |             ORDER BY sim DESC, vid) AS rn
-      |         FROM hv3),
-      |mrg AS (SELECT va, vb, sim FROM l1g
-      |        UNION ALL
-      |        SELECT vid AS va, pid AS vb, sim FROM hv3),
-      |mrk AS (SELECT va, vb, sim,
-      |          row_number() OVER (PARTITION BY va ORDER BY sim DESC, vb)
-      |            AS rn
-      |        FROM mrg)
-      |SELECT va, vb, sim, rn FROM mrk WHERE rn <= 3
-      |UNION ALL
-      |SELECT va, vb, sim, rn FROM nnew WHERE rn <= 3
-      |ORDER BY va, rn""".stripMargin)
+      |${layer1WalkCtes("h")},
+      |${appendSpliceSql("l1g", "hv3", "pid", "vid")}""".stripMargin)
 
   /** q189 — layer-1 DELETE (the q172 discipline applied to the landed
     * LAYER-1 graph): retire the q172 tombstone class (vec_id % 31 == 0
@@ -6313,26 +6262,18 @@ object LlmOps {
     val g1 = Tables.parquet(s, l1Path)
     val l1e = Tables.embeddings(s, d).filter(col("vec_id") % 8 === 0)
       .select(col("vec_id"), col("embedding"))
-    val tomb = Tables.embeddings(s, d).filter(col("vec_id") % 31 === 0)
-      .select(col("vec_id"))
-    val tombA = broadcast(tomb.select(col("vec_id").as("va")))
-    val tombB = broadcast(tomb.select(col("vec_id").as("vb")))
-    val owned = g1.join(tombA, Seq("va"), "left_anti")
-    val affected = owned.join(tombB, Seq("vb"), "left_semi")
-      .select(col("va")).distinct()
-    val keep = owned.join(broadcast(affected), Seq("va"), "left_anti")
-      .select(col("va"), col("vb"), col("sim"), col("rn"))
-    val live = l1e.join(broadcast(tomb), Seq("vec_id"), "left_anti")
-    val affE = live.join(
-        broadcast(affected.select(col("va").as("vec_id"))), Seq("vec_id"))
-      .select(col("vec_id").as("va"), col("embedding").as("ea"))
-    val regime = s.conf.get(KnnBuildKey, "auto") match {
-      case "auto" => knnGraphRegimeFor(l1LiveCount(s, d))
-      case forced @ ("cellblocked" | "nndescent") => forced
-      case bad => throw new IllegalArgumentException(
-        s"$KnnBuildKey must be auto|cellblocked|nndescent, got '$bad'")
-    }
-    val cand =
+    val tomb = graphTombstones(s, d)
+    deleteSplice(g1, tomb) { (owned, affected, tombB) =>
+      val live = l1e.join(broadcast(tomb), Seq("vec_id"), "left_anti")
+      val affE = live.join(
+          broadcast(affected.select(col("va").as("vec_id"))), Seq("vec_id"))
+        .select(col("vec_id").as("va"), col("embedding").as("ea"))
+      val regime = s.conf.get(KnnBuildKey, "auto") match {
+        case "auto" => knnGraphRegimeFor(l1LiveCount(s, d))
+        case forced @ ("cellblocked" | "nndescent") => forced
+        case bad => throw new IllegalArgumentException(
+          s"$KnnBuildKey must be auto|cellblocked|nndescent, got '$bad'")
+      }
       if (regime == "nndescent") {
         // walk-based repair (the q188 insert discipline applied at delete
         // time): each affected member re-enters the SURVIVING layer at the
@@ -6341,15 +6282,11 @@ object LlmOps {
         // scored rows, no membership-wide embedding broadcast.
         val surviving = owned.join(tombB, Seq("vb"), "left_anti")
         val entryId = live.agg(min(col("vec_id"))).head.getLong(0)
-        val entryEmb = Tables.embeddings(s, d)
-          .filter(col("vec_id") === entryId).select(col("embedding"))
-          .head.getSeq[Float](0)
-        val v0 = affE.select(col("va").as("pid"), col("ea").as("pe"),
-          lit(entryId).as("vid"),
-          round(CosineSimilarityExpr(col("ea"), typedlit(entryEmb)), 4)
-            .as("sim"))
-        val walked = beamWalk(v0, surviving.select(col("va"), col("vb")),
-            live, rounds = 3, beamWidth = 4)
+        val walked = beamWalk(
+            entryRows(affE.select(col("va").as("pid"), col("ea").as("pe")),
+              entryId, embeddingOf(s, d, entryId)),
+            surviving.select(col("va"), col("vb")), live,
+            rounds = 3, beamWidth = 4)
           .select(col("pid").as("va"), col("vid").as("vb"), col("sim"))
         // landed sims are the same round-4 cosine grid, so a pair seen
         // both ways dedups losslessly
@@ -6363,10 +6300,7 @@ object LlmOps {
           .filter(col("va") =!= col("vb"))
           .select(col("va"), col("vb"),
             round(CosineSimilarityExpr(col("ea"), col("eb")), 4).as("sim"))
-    val w = Window.partitionBy(col("va")).orderBy(col("sim").desc, col("vb"))
-    val repaired = cand.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
-    keep.unionByName(repaired).orderBy(col("va"), col("rn"))
+    }
   }
 
   private lazy val q189Sql =
@@ -6374,26 +6308,9 @@ object LlmOps {
       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
       |  FROM embeddings),
       |$l1CtesSql,
-      |tomb AS (SELECT vec_id FROM embeddings WHERE vec_id % 31 = 0),
-      |owned AS (SELECT va, vb, sim, rn FROM l1g
-      |          WHERE va NOT IN (SELECT vec_id FROM tomb)),
-      |aff AS (SELECT DISTINCT va FROM owned
-      |        WHERE vb IN (SELECT vec_id FROM tomb)),
-      |keep AS (SELECT va, vb, sim, rn FROM owned
-      |         WHERE va NOT IN (SELECT va FROM aff)),
-      |livem AS (SELECT vec_id, emb FROM l1
-      |          WHERE vec_id NOT IN (SELECT vec_id FROM tomb)),
-      |cand AS (SELECT a.va, b.vec_id AS vb,
-      |           round(list_cosine_similarity(ae.emb, b.emb), 4) AS sim
-      |         FROM aff a JOIN e ae ON ae.vec_id = a.va
-      |              JOIN livem b ON b.vec_id <> a.va),
-      |rrk AS (SELECT va, vb, sim,
-      |          row_number() OVER (PARTITION BY va ORDER BY sim DESC, vb)
-      |            AS rn
-      |        FROM cand)
-      |SELECT va, vb, sim, rn FROM keep
-      |UNION ALL
-      |SELECT va, vb, sim, rn FROM rrk WHERE rn <= 3
+      |$tombCteSql,
+      |${deleteCtes1("")}
+      |${deletedGraphSql("", "va, vb, sim, rn")}
       |ORDER BY va, rn""".stripMargin)
 
   /** The SPLICED index state — both layers after the delete splice
@@ -6414,10 +6331,7 @@ object LlmOps {
         q172(s, dir).select(col("va"), col("vb")), "knn-spliced-l0")
       val l1 = graft.operators.Scratch.materializePath(
         q189(s, dir).select(col("va"), col("vb")), "knn-spliced-l1")
-      val entry = Tables.parquet(s, l1).agg(min(col("va"))).head.getLong(0)
-      val emb = Tables.embeddings(s, dir)
-        .filter(col("vec_id") === entry).select(col("embedding"))
-        .head.getSeq[Float](0)
+      val (entry, emb) = layerEntry(s, dir, l1)
       (l0, l1, entry, emb)
     }
 
@@ -6434,103 +6348,23 @@ object LlmOps {
     * references a tombstone, so the walks never visit one. */
   def q190(s: SparkSession, d: String): DataFrame = {
     val (l0Path, l1Path, entryId, entryEmb) = splicedIndexState(s, d)
-    val g0 = Tables.parquet(s, l0Path)
-    val g1 = Tables.parquet(s, l1Path)
-    val e0 = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val probes = e0.filter(col("vec_id") >= 16 && col("vec_id") < 26)
-      .select(col("vec_id").as("pid"), col("embedding").as("pe"))
-    val v0 = probes.select(col("pid"), col("pe"), lit(entryId).as("vid"),
-      round(CosineSimilarityExpr(col("pe"), typedlit(entryEmb)), 4)
-        .as("sim"))
-    val l1visited = beamWalk(v0, g1, e0, rounds = 3, beamWidth = 4)
-    val wB = Window.partitionBy(col("pid")).orderBy(col("sim").desc, col("vid"))
-    val entries0 = l1visited.withColumn("rn", row_number().over(wB))
-      .filter(col("rn") <= 3)
-      .select(col("pid"), col("pe"), col("vid"), col("sim"))
-    val visited = beamWalk(entries0, g0, e0, rounds = 4)
-    visited.filter(col("pid") =!= col("vid"))
-      .withColumn("rn", row_number().over(wB)).filter(col("rn") <= 3)
-      .select(col("pid"), col("vid"), col("sim"), col("rn"))
-      .orderBy(col("pid"), col("rn"))
+    hierServe(s, d, Tables.parquet(s, l0Path), Tables.parquet(s, l1Path),
+      entryId, entryEmb)
   }
 
   private lazy val q190Sql =
     materializeCtes(s"""WITH $knnGraphCtesSql,
-      |tomb AS (SELECT vec_id FROM embeddings WHERE vec_id % 31 = 0),
-      |owned0 AS (SELECT va, vb, sim, rn FROM gfin
-      |           WHERE va NOT IN (SELECT vec_id FROM tomb)),
-      |aff0 AS (SELECT DISTINCT va FROM owned0
-      |         WHERE vb IN (SELECT vec_id FROM tomb)),
-      |keep0 AS (SELECT va, vb, sim, rn FROM owned0
-      |          WHERE va NOT IN (SELECT va FROM aff0)),
-      |surv0 AS (SELECT va, vb, sim FROM owned0
-      |          WHERE va IN (SELECT va FROM aff0)
-      |            AND vb NOT IN (SELECT vec_id FROM tomb)),
-      |livec0 AS (SELECT vec_id, emb, cell FROM cellv
-      |           WHERE vec_id NOT IN (SELECT vec_id FROM tomb)),
-      |acand0 AS (SELECT p.pid AS va, c.vec_id AS vb,
-      |             round(list_cosine_similarity(p.pe, c.emb), 4) AS sim
-      |           FROM pp p JOIN livec0 c USING (cell)
-      |           WHERE p.pid IN (SELECT va FROM aff0)
-      |             AND p.pid <> c.vec_id),
-      |cand0 AS (SELECT va, vb, sim FROM surv0
-      |          UNION
-      |          SELECT va, vb, sim FROM acand0),
-      |rrk0 AS (SELECT va, vb, sim,
-      |           row_number() OVER (PARTITION BY va ORDER BY sim DESC, vb)
-      |             AS rn
-      |         FROM cand0),
-      |g0s AS (SELECT va, vb FROM keep0
-      |        UNION ALL
-      |        SELECT va, vb FROM rrk0 WHERE rn <= 3),
+      |$tombCteSql,
+      |${deleteCtes0("0")},
+      |g0s AS (${deletedGraphSql("0", "va, vb")}),
       |$l1CtesSql,
-      |owned1 AS (SELECT va, vb, sim, rn FROM l1g
-      |           WHERE va NOT IN (SELECT vec_id FROM tomb)),
-      |aff1 AS (SELECT DISTINCT va FROM owned1
-      |         WHERE vb IN (SELECT vec_id FROM tomb)),
-      |keep1 AS (SELECT va, vb, sim, rn FROM owned1
-      |          WHERE va NOT IN (SELECT va FROM aff1)),
-      |livem AS (SELECT vec_id, emb FROM l1
-      |          WHERE vec_id NOT IN (SELECT vec_id FROM tomb)),
-      |cand1 AS (SELECT a.va, b.vec_id AS vb,
-      |            round(list_cosine_similarity(ae.emb, b.emb), 4) AS sim
-      |          FROM aff1 a JOIN e ae ON ae.vec_id = a.va
-      |               JOIN livem b ON b.vec_id <> a.va),
-      |rrk1 AS (SELECT va, vb, sim,
-      |           row_number() OVER (PARTITION BY va ORDER BY sim DESC, vb)
-      |             AS rn
-      |         FROM cand1),
-      |g1s AS (SELECT va, vb FROM keep1
-      |        UNION ALL
-      |        SELECT va, vb FROM rrk1 WHERE rn <= 3),
-      |und1 AS (SELECT va, vb FROM g1s
-      |         UNION
-      |         SELECT vb AS va, va AS vb FROM g1s),
-      |und2 AS (SELECT va, vb FROM g0s
-      |         UNION
-      |         SELECT vb AS va, va AS vb FROM g0s),
+      |${deleteCtes1("1")},
+      |g1s AS (${deletedGraphSql("1", "va, vb")}),
+      |${undCte("und1", "g1s")},
+      |${undCte("und2", "g0s")},
       |en AS (SELECT min(va) AS vid FROM g1s),
-      |pr AS (SELECT vec_id AS pid, emb AS pe FROM e
-      |       WHERE vec_id >= 16 AND vec_id < 26),
-      |hv0 AS (SELECT p.pid, c.vec_id AS vid,
-      |         round(list_cosine_similarity(p.pe, c.emb), 4) AS sim
-      |       FROM pr p JOIN e c ON c.vec_id = (SELECT vid FROM en)),
-      |${walkRoundCte("h", "und1", 4, 1)},
-      |${walkRoundCte("h", "und1", 4, 2)},
-      |${walkRoundCte("h", "und1", 4, 3)},
-      |lv0 AS (SELECT pid, vid, sim FROM (
-      |        SELECT pid, vid, sim, row_number() OVER (PARTITION BY pid
-      |            ORDER BY sim DESC, vid) AS rn
-      |        FROM hv3) WHERE rn <= 3),
-      |${walkRoundCte("l", "und2", 8, 1)},
-      |${walkRoundCte("l", "und2", 8, 2)},
-      |${walkRoundCte("l", "und2", 8, 3)},
-      |${walkRoundCte("l", "und2", 8, 4)}
-      |SELECT pid, vid, sim, rn FROM (
-      |  SELECT pid, vid, sim, row_number() OVER (PARTITION BY pid
-      |      ORDER BY sim DESC, vid) AS rn
-      |  FROM lv4 WHERE pid <> vid)
-      |WHERE rn <= 3 ORDER BY pid, rn""".stripMargin)
+      |$probeCteSql,
+      |$hierServeSql""".stripMargin)
 
   /** q174 — GRAPH-BASED semantic dedup: threshold the LANDED kNN graph
     * at [[CosineNearDupThreshold]] (the q34b/q99 near-dup grade),

@@ -9,7 +9,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.streaming.{KinesisSink, KinesisTransport, VehicleLocation, VehicleMessage}
+import graft.streaming.{KinesisRecord, KinesisRecordEncoder, KinesisSink, KinesisTransport}
 
 /** The declared-only Kinesis delivery (reference README.md:2 "via HTTP
   * or Kinesis"; unused aws-java-sdk dep) as a catalog-level DSv2 sink —
@@ -124,12 +124,13 @@ private[sources] case class KinesisWriterFactory(stream: String,
       epochId: Long): DataWriter[InternalRow] = writer()
 }
 
-/** Per-task writer: chunk pings at the PutRecords limit and send each
-  * chunk as vehicleId-keyed records ([[KinesisSink.sendMessages]] —
-  * per-shard ordering by vehicle). Memory bounded by one chunk. */
+/** Per-task writer: encode each ping once into its vehicleId-keyed
+  * record ([[KinesisRecordEncoder]] — per-shard ordering by vehicle),
+  * chunked at the PutRecords limit. Memory bounded by one chunk. */
 private[sources] class KinesisDataWriter(sink: KinesisSink, sourceId: Long,
     idx: PingIndices) extends DataWriter[InternalRow] {
-  private val buf = scala.collection.mutable.ArrayBuffer.empty[VehicleMessage]
+  private val enc = new KinesisRecordEncoder(sourceId)
+  private val buf = scala.collection.mutable.ArrayBuffer.empty[KinesisRecord]
   private var rows = 0L
   private var sends = 0L
 
@@ -137,14 +138,14 @@ private[sources] class KinesisDataWriter(sink: KinesisSink, sourceId: Long,
     require(!row.isNullAt(idx.vid) && !row.isNullAt(idx.lat) &&
         !row.isNullAt(idx.lon) && !row.isNullAt(idx.ts),
       "graft-kinesis-sink: null ping field (upstream must drop malformed rows)")
-    buf += VehicleMessage(row.getLong(idx.vid), Seq(VehicleLocation(
-      row.getDouble(idx.lat), row.getDouble(idx.lon), row.getLong(idx.ts))))
+    buf += enc.ping(row.getLong(idx.vid), row.getDouble(idx.lat),
+      row.getDouble(idx.lon), row.getLong(idx.ts))
     rows += 1
     if (buf.size >= sink.maxBatch) flush()
   }
 
   private def flush(): Unit = if (buf.nonEmpty) {
-    sink.sendMessages(sourceId, buf.toSeq)
+    sink.putAll(buf.toSeq)
     sends += 1
     buf.clear()
   }

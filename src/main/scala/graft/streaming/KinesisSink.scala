@@ -76,9 +76,10 @@ class KinesisSink(
     * vehicleId (per-vehicle shard affinity + ordering). Each record is a
     * self-contained single-message envelope so any shard consumer can
     * decode records independently. */
-  def sendMessages(sourceId: Long, msgs: Seq[VehicleMessage]): Unit =
-    putAll(msgs.map(m => KinesisRecord(m.vehicleId.toString,
-      ProtoEnvelope.encodeEnvelope(sourceId, Seq(m)))))
+  def sendMessages(sourceId: Long, msgs: Seq[VehicleMessage]): Unit = {
+    val enc = new KinesisRecordEncoder(sourceId)
+    putAll(msgs.map(enc.message))
+  }
 
   def putAll(records: Seq[KinesisRecord]): Unit =
     records.grouped(maxBatch).foreach(putWithRetry)
@@ -101,6 +102,29 @@ class KinesisSink(
         Thread.sleep(math.min(backoffMs << math.min(round - 1, 6), 5000L))
       }
     }
+  }
+}
+
+/** Encodes one Kinesis record per vehicle message, keyed by vehicleId:
+  * the message alone in an envelope, written through one reused
+  * [[ProtoEnvelope.EnvelopeWriter]], so a record costs only its key and
+  * its payload array. Not thread-safe. */
+private[graft] final class KinesisRecordEncoder(sourceId: Long) {
+  private val w = new ProtoEnvelope.EnvelopeWriter(sourceId, 1)
+
+  /** The record of `VehicleMessage{vehicleId, [VehicleLocation{lat, lon,
+    * timestamp}]}`, with no message object built. */
+  def ping(vehicleId: Long, lat: Double, lon: Double,
+      timestamp: Long): KinesisRecord = {
+    w.clear()
+    w.add(vehicleId, lat, lon, timestamp)
+    KinesisRecord(vehicleId.toString, w.toByteArray)
+  }
+
+  def message(m: VehicleMessage): KinesisRecord = {
+    w.clear()
+    w.add(m)
+    KinesisRecord(m.vehicleId.toString, w.toByteArray)
   }
 }
 

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
-import graft.streaming.{InMemoryKinesis, ProtoEnvelope}
+import graft.streaming.{InMemoryKinesis, ProtoEnvelope, VehicleLocation, VehicleMessage}
 
 /** The DSv2 Kinesis sink (`writeStream.format("graft-kinesis-sink")`):
   * the csv stream's pings as per-vehicle keyed records with shard
@@ -75,6 +75,30 @@ class KinesisSinkSourceSpec extends SparkSpec {
         .mode("append").save()
     }
     assert(e.getMessage.contains("never-registered"))
+  }
+
+  test("each row's record is its single-message envelope, keyed by its " +
+      "vehicle id") {
+    val name = "t-dsv2-kinesis-bytes"
+    InMemoryKinesis.reset(name)
+    val kin = new InMemoryKinesis(numShards = 2, name = name)
+    KinesisTransports.register(name, () => new InMemoryKinesis(2, name))
+    // negative ids and timestamps take 10-byte varints; 0 the shortest
+    val pings = Seq((42L, 23.7689, 90.3886, 1423939900000L),
+      (-7L, -0.5, 180.0, 0L), (Long.MaxValue, 1e-300, -1e300, -1L),
+      (42L, 23.7691, 90.3891, 1423939902000L))
+    import spark.implicits._
+    pings.toDF("vehicle_id", "lat", "lon", "ts_ms").repartition(1)
+      .write.format("graft-kinesis-sink")
+      .option("stream", "vehicles").option("sourceId", 5L)
+      .option("transport", name).option("maxBatch", 3)
+      .mode("append").save()
+    val expected = pings.map { case (vid, lat, lon, ts) =>
+      (vid.toString, ProtoEnvelope.encodeEnvelope(5L,
+        Seq(VehicleMessage(vid, Seq(VehicleLocation(lat, lon, ts))))).toSeq)
+    }
+    assert(kin.records.map(r => (r._2.partitionKey, r._2.data.toSeq))
+      .sortBy(_.toString) == expected.sortBy(_.toString))
   }
 
   /** Forces the exact window Structured Streaming replays (the
