@@ -5229,14 +5229,14 @@ object LlmOps {
     * vector's embedding. */
   private def layerEntry(s: SparkSession, d: String,
       path: String): (Long, Seq[Float]) = {
-    val entry = Tables.parquet(s, path).agg(min(col("va"))).head.getLong(0)
+    val entry = Tables.parquet(s, path).agg(min(col("va"))).head().getLong(0)
     (entry, embeddingOf(s, d, entry))
   }
 
   /** The embedding of vector `id`: a pushed-down point fetch. */
   private def embeddingOf(s: SparkSession, d: String, id: Long): Seq[Float] =
     Tables.embeddings(s, d).filter(col("vec_id") === id)
-      .select(col("embedding")).head.getSeq[Float](0)
+      .select(col("embedding")).head().getSeq[Float](0)
 
   /** Spec hook: drop the landed graph AND everything derived from it
     * (the layer-1 artifact, semdedup labels), so a regime-forcing test
@@ -6281,7 +6281,7 @@ object LlmOps {
         // edges is its candidate set — |affected| × rounds × beam × deg
         // scored rows, no membership-wide embedding broadcast.
         val surviving = owned.join(tombB, Seq("vb"), "left_anti")
-        val entryId = live.agg(min(col("vec_id"))).head.getLong(0)
+        val entryId = live.agg(min(col("vec_id"))).head().getLong(0)
         val walked = beamWalk(
             entryRows(affE.select(col("va").as("pid"), col("ea").as("pe")),
               entryId, embeddingOf(s, d, entryId)),
