@@ -5510,7 +5510,7 @@ object LlmOps {
 
   /** The oracle's delete splice ([[deleteSplice]]'s mirror) over graph
     * CTE `g` and the `tomb` CTE, every CTE name suffixed `x`: `repair`
-    * defines `cand$x(va, vb, sim)` for the affected nodes `aff$x`, and
+    * defines `rcand$x(va, vb, sim)` for the affected nodes `aff$x`, and
     * `rrk$x` ranks it. The spliced graph is [[deletedGraphSql]]. */
   private def deleteCtes(x: String, g: String, repair: String) =
     s"""owned$x AS (SELECT va, vb, sim, rn FROM $g
@@ -5523,7 +5523,7 @@ object LlmOps {
       |rrk$x AS (SELECT va, vb, sim,
       |          row_number() OVER (PARTITION BY va ORDER BY sim DESC, vb)
       |            AS rn
-      |        FROM cand$x)""".stripMargin
+      |        FROM rcand$x)""".stripMargin
 
   /** [[q172]]'s layer-0 delete: affected nodes re-rank over their
     * surviving edges ∪ the live members of their probe cells (`pp`). */
@@ -5538,7 +5538,7 @@ object LlmOps {
       |          FROM pp p JOIN livec$x c USING (cell)
       |          WHERE p.pid IN (SELECT va FROM aff$x)
       |            AND p.pid <> c.vec_id),
-      |cand$x AS (SELECT va, vb, sim FROM surv$x
+      |rcand$x AS (SELECT va, vb, sim FROM surv$x
       |          UNION
       |          SELECT va, vb, sim FROM acand$x)""".stripMargin)
 
@@ -5547,7 +5547,7 @@ object LlmOps {
   private def deleteCtes1(x: String) = deleteCtes(x, "l1g",
     s"""livem$x AS (SELECT vec_id, emb FROM l1
       |          WHERE vec_id NOT IN (SELECT vec_id FROM tomb)),
-      |cand$x AS (SELECT a.va, b.vec_id AS vb,
+      |rcand$x AS (SELECT a.va, b.vec_id AS vb,
       |           round(list_cosine_similarity(ae.emb, b.emb), 4) AS sim
       |         FROM aff$x a JOIN e ae ON ae.vec_id = a.va
       |              JOIN livem$x b ON b.vec_id <> a.va)""".stripMargin)
