@@ -97,6 +97,7 @@ object Bench {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(LocalFs.sparkConf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

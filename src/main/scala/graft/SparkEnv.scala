@@ -7,15 +7,19 @@ import org.apache.spark.sql.SparkSession
   * files are part of the harness contract and stay self-contained). */
 object SparkEnv {
   def local(appName: String = "graft"): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = SparkSession.builder().config(conf(appName)).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** The settings [[local]] builds its session from. */
+  private[graft] def conf(appName: String): Map[String, String] = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    Map(
+      "spark.master" -> sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"),
+      "spark.app.name" -> appName,
+      "spark.sql.shuffle.partitions" -> cpus,
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false") ++ LocalFs.sparkConf
   }
 }

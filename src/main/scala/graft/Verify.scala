@@ -16,6 +16,7 @@ object Verify {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(LocalFs.sparkConf)
       // Gate-time regime pin (r15 verdict fix #4): the q168 oracle (and
       // every landed-graph consumer's) mirrors the CELL-BLOCKED build
       // chain; the auto dispatch would silently switch the landed graph

@@ -5249,32 +5249,6 @@ object LlmOps {
     graphDedupCache.invalidateAll()
   }
 
-  /** q171 — kNN-graph APPEND: fold a new-vector batch into the LANDED
-    * graph ([[knnGraphPath]]) without rebuilding — the graph-side q154:
-    * production ANN graphs (HNSW/Vamana inserts, NN-Descent online
-    * updates) absorb a crawl increment by ROUTING each new vector
-    * through the index and splicing edges locally, never re-running the
-    * build. The batch is q154's derived increment (vec_id % 13 == 2,
-    * fresh ids in the negative namespace; routing key `vq` shifted +7
-    * on the quantized grid, cosine side shifted +0.0007 — the same
-    * displacement in float space). Each new vector runs the bounded
-    * two-level argmin against the landed quantizer
-    * ([[ivf2AssignCells]] + [[ivf2SecondProbeCell]]: driver-bounded
-    * serve state, map-side codegen, zero shuffles), and its candidates
-    * are the LIVE members of its probe-1 ∪ probe-2 cells — the exact
-    * q149 serve discipline at insert time. Edges spliced BOTH ways:
-    * the new node takes its top-3, and every candidate old node merges
-    * the reverse edge into its existing adjacency (re-ranked top-3 —
-    * an old node drops its rank-3 edge only when the newcomer beats
-    * it). Intra-batch edges are deliberately deferred to the next
-    * NN-Descent refinement round (q166's operator over the appended
-    * graph), the standard online-update split. Cost at scale: batch ×
-    * probe-cell width for candidates + one bounded re-rank over
-    * (affected adjacency ∪ reverse edges) — the corpus graph is read
-    * once and never reshuffled beyond the touched nodes' partitions.
-    * Oracle: the full landed-graph chain ([[knnGraphCtesSql]]) + the
-    * q154-shape routing argmins for the batch + the same two-sided
-    * merge. */
   /** The splice-candidate relation for a new-vector batch against the
     * LANDED graph artifacts — shared verbatim by [[q171]] (batch
     * append+merge) and the streaming delta sink
@@ -5318,6 +5292,32 @@ object LlmOps {
   private val spliceCandCache =
     new graft.operators.DatasetCache[String]("splice-cand", Seq(_))
 
+  /** q171 — kNN-graph APPEND: fold a new-vector batch into the LANDED
+    * graph ([[knnGraphPath]]) without rebuilding — the graph-side q154:
+    * production ANN graphs (HNSW/Vamana inserts, NN-Descent online
+    * updates) absorb a crawl increment by ROUTING each new vector
+    * through the index and splicing edges locally, never re-running the
+    * build. The batch is q154's derived increment (vec_id % 13 == 2,
+    * fresh ids in the negative namespace; routing key `vq` shifted +7
+    * on the quantized grid, cosine side shifted +0.0007 — the same
+    * displacement in float space). Each new vector runs the bounded
+    * two-level argmin against the landed quantizer
+    * ([[ivf2AssignCells]] + [[ivf2SecondProbeCell]]: driver-bounded
+    * serve state, map-side codegen, zero shuffles), and its candidates
+    * are the LIVE members of its probe-1 ∪ probe-2 cells — the exact
+    * q149 serve discipline at insert time. Edges spliced BOTH ways:
+    * the new node takes its top-3, and every candidate old node merges
+    * the reverse edge into its existing adjacency (re-ranked top-3 —
+    * an old node drops its rank-3 edge only when the newcomer beats
+    * it). Intra-batch edges are deliberately deferred to the next
+    * NN-Descent refinement round (q166's operator over the appended
+    * graph), the standard online-update split. Cost at scale: batch ×
+    * probe-cell width for candidates + one bounded re-rank over
+    * (affected adjacency ∪ reverse edges) — the corpus graph is read
+    * once and never reshuffled beyond the touched nodes' partitions.
+    * Oracle: the full landed-graph chain ([[knnGraphCtesSql]]) + the
+    * q154-shape routing argmins for the batch + the same two-sided
+    * merge. */
   def q171(s: SparkSession, d: String): DataFrame = {
     val g = Tables.parquet(s, knnGraphPath(s, d))
     val cand = Tables.parquet(s, spliceCandCache.getOrCompute(d)(dir =>
@@ -6178,23 +6178,6 @@ object LlmOps {
   private lazy val hierServeSql =
     s"${hierWalkCtes("", 4)}\n${serveAnswerSql("lv4")}"
 
-  /** q188 — layer-1 APPEND (the q171 discipline applied to the landed
-    * LAYER-1 graph, r18 verdict ask #2): fold the derived new-vector
-    * batch's layer-1 MEMBERS (nid % 8 == 0 — the same id rule that
-    * forms the layer) into the landed layer-1 adjacency
-    * ([[knnLayer1State]]) without rebuilding it. Routing is HNSW's own
-    * insert algorithm: each new member enters at the persisted global
-    * entry and greedy-walks the landed layer-1 graph (q187's coarse
-    * walk — 3 rounds, beam 4), its visited set is its candidate set,
-    * its top-3 become its edges, and every member it scored merges the
-    * reverse edge into its own adjacency (re-ranked top-3 — exactly
-    * [[q171]]'s two-sided splice, with the beam walk in place of the
-    * probe-cell join because layer 1 has no quantizer above it).
-    * Intra-batch edges defer to the next descent round, the q171 rule.
-    * Scale shape: rounds × beam × deg scored rows per insert — the
-    * SERVE cost, not the (n/8)² build cost; touched members re-rank
-    * over ≤ (landed 3 + reverses) rows. Oracle: the exact layer chain +
-    * the same unrolled walk + the same two-sided merge. */
   /** The layer-1 splice VISITED relation for a `(pid, pe)` batch
     * against the LANDED layer-1 artifacts — shared verbatim by [[q188]]
     * (batch append) and the streaming delta sink
@@ -6214,6 +6197,23 @@ object LlmOps {
       rounds = 3, beamWidth = 4)
   }
 
+  /** q188 — layer-1 APPEND (the q171 discipline applied to the landed
+    * LAYER-1 graph, r18 verdict ask #2): fold the derived new-vector
+    * batch's layer-1 MEMBERS (nid % 8 == 0 — the same id rule that
+    * forms the layer) into the landed layer-1 adjacency
+    * ([[knnLayer1State]]) without rebuilding it. Routing is HNSW's own
+    * insert algorithm: each new member enters at the persisted global
+    * entry and greedy-walks the landed layer-1 graph (q187's coarse
+    * walk — 3 rounds, beam 4), its visited set is its candidate set,
+    * its top-3 become its edges, and every member it scored merges the
+    * reverse edge into its own adjacency (re-ranked top-3 — exactly
+    * [[q171]]'s two-sided splice, with the beam walk in place of the
+    * probe-cell join because layer 1 has no quantizer above it).
+    * Intra-batch edges defer to the next descent round, the q171 rule.
+    * Scale shape: rounds × beam × deg scored rows per insert — the
+    * SERVE cost, not the (n/8)² build cost; touched members re-rank
+    * over ≤ (landed 3 + reverses) rows. Oracle: the exact layer chain +
+    * the same unrolled walk + the same two-sided merge. */
   def q188(s: SparkSession, d: String): DataFrame = {
     val g1 = Tables.parquet(s, knnLayer1State(s, d)._1)
     val batch = derivedGraphBatch(s, d).filter(col("nid") % 8 === 0)

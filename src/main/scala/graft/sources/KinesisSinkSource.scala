@@ -24,10 +24,10 @@ import graft.streaming.{KinesisRecord, KinesisRecordEncoder, KinesisSink, Kinesi
   * ride a string option, so deployments register theirs in
   * [[KinesisTransports]] under a name and address it via
   * `option("transport", name)` (the stateStore-providerClass pattern,
-  * adapted for instances that need construction args; tests register an
-  * InMemoryKinesis). Same consistency contract as U7: AT-LEAST-ONCE —
-  * stored-but-reported-failed records duplicate on resubmit, epoch
-  * commit is an audit point.
+  * adapted for instances that need construction args; the specs register
+  * the `InMemoryKinesis` test double from `src/test`). Same consistency
+  * contract as U7: AT-LEAST-ONCE — stored-but-reported-failed records
+  * duplicate on resubmit, epoch commit is an audit point.
   *
   * OPT-IN effectively-once (r18 verdict ask #3 — parity with
   * [[HttpSinkSource]]): `option("ledgerDir", …)` records each epoch in a

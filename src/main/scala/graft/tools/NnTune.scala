@@ -31,6 +31,7 @@ object NnTune {
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(graft.LocalFs.sparkConf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val dir = if (factor <= 1) sfDir else {

@@ -13,6 +13,7 @@ object TestSpark {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(LocalFs.sparkConf)
       .withExtensions(new GraftExtensions) // also under test (SQL surface)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
