@@ -70,23 +70,89 @@ object Bench {
   }
 
   /** The last stdout line: the run's totals without the per-query map, at
-    * most 1,500 characters however many queries ran or however long
-    * their names, so a reader that keeps only the tail of stdout still
-    * gets a whole JSON record. `full` names the file holding the full
-    * line. String fields longer than 200 characters keep their tail. */
+    * most 1,500 characters however many queries ran or failed or however
+    * long their names, so a reader that keeps only the tail of stdout
+    * still gets a whole JSON record. `full` names the file holding the
+    * full line. String fields longer than 200 characters keep their tail.
+    * `results` holds the queries that ran; `failed` names the ones that
+    * threw, which `total`, `n` and `geomean` leave out: `failed_n` counts
+    * them and `failed` lists as many names as fit, in order. */
   private[graft] def compactLine(results: Seq[(String, Double)], calStart: Double,
-      calEnd: Double, commit: String, sf: String, full: String): String = {
-    def str(s: String): String = {
-      val clipped = if (s.length <= 200) s else "..." + s.takeRight(197)
-      "\"" + clipped.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    }
+      calEnd: Double, commit: String, sf: String, full: String,
+      failed: Seq[String] = Nil): String = {
     val total = results.map(_._2).sum
     val positive = results.map(_._2).filter(_ > 0)
     val geomean =
       if (positive.isEmpty) 0.0 else math.exp(positive.map(math.log).sum / positive.size)
-    s"""{"metric":"total","value":$total,"unit":"sec","calibration":$calStart,""" +
+    val head = s"""{"metric":"total","value":$total,"unit":"sec","calibration":$calStart,""" +
       s""""calibration_end":$calEnd,"commit":${str(commit)},"n":${results.size},""" +
-      s""""sf":${str(sf)},"geomean":$geomean,"full":${str(full)}}"""
+      s""""sf":${str(sf)},"geomean":$geomean,"full":${str(full)}"""
+    if (failed.isEmpty) head + "}"
+    else {
+      val prefix = head + s""","failed_n":${failed.size},"failed":["""
+      val room = CompactMax - prefix.length - "]}".length
+      var used = -1 // the first name has no comma before it
+      val names = failed.map(str).takeWhile { q => used += 1 + q.length; used <= room }
+      prefix + names.mkString(",") + "]}"
+    }
+  }
+
+  private final val CompactMax = 1500
+
+  /** `s` as a JSON string, at most 202 characters: a longer `s` keeps its
+    * tail. */
+  private def str(s: String): String =
+    quote(if (s.length <= 200) s else "..." + s.takeRight(197))
+
+  private def quote(s: String): String =
+    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+
+  /** The full stdout line: every query that ran with its time, and the
+    * names of the ones that threw. */
+  private[graft] def fullLine(results: Seq[(String, Double)], calStart: Double,
+      calEnd: Double, commit: String, sf: String, failed: Seq[String]): String = {
+    val qs = results.map { case (k, v) => quote(k) + ":" + v }.mkString("{", ",", "}")
+    val total = results.map(_._2).sum
+    s"""{"metric":"total","value":$total,"unit":"sec","calibration":$calStart,""" +
+      s""""calibration_end":$calEnd,"commit":"$commit","queries":$qs,""" +
+      s""""failed":${failed.map(quote).mkString("[", ",", "]")},"sf":"$sf"}"""
+  }
+
+  /** One timed run of `run`, or None when it throws: a query that
+    * failed must not read as a fast one. */
+  private def timeOnce(run: () => Any): Option[Double] = {
+    val t0 = System.nanoTime()
+    try { run(); Some((System.nanoTime() - t0) / 1e9) }
+    catch {
+      case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[bench] query failed: $e")
+        None
+    }
+  }
+
+  // min-of-2, escalating to min-of-3 when the min still looks hot, and
+  // to min-of-4 when it looks VERY hot: a sustained-contention run gets
+  // extra chances to catch a quiet slot. r17/r18 showed the failure
+  // mode this guards: a 7× contention window turns 0.3 s queries into
+  // 20-40 s phantoms in the driver artifact, and each extra pass of an
+  // expensive-LOOKING query is cheap relative to the adjudication cost
+  // of a false regression. A query that fails on any pass is failed and
+  // is not run again.
+  private def measure(run: () => Any): Option[Double] =
+    for {
+      a <- timeOnce(run)
+      b <- timeOnce(run)
+      m2 = math.min(a, b)
+      m3 <- if (m2 > 1.5) timeOnce(run).map(math.min(m2, _)) else Some(m2)
+      m4 <- if (m3 > 6.0) timeOnce(run).map(math.min(m3, _)) else Some(m3)
+    } yield m4
+
+  /** Each query's time, in order, and the names of the queries that
+    * failed, which have no time. */
+  private[graft] def sweep(queries: Seq[(String, () => Any)]): (Seq[(String, Double)], Seq[String]) = {
+    val measured = queries.map { case (name, run) => name -> measure(run) }
+    (measured.collect { case (name, Some(s)) => name -> s },
+      measured.collect { case (name, None) => name })
   }
 
   def main(args: Array[String]): Unit = {
@@ -122,11 +188,6 @@ object Bench {
     } catch { case _: Throwable => }
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.isEmpty || only.contains(n) }
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      (System.nanoTime() - t0) / 1e9
-    }
     // Machine-speed calibration: a fixed CPU-bound probe (1e8-row codegen'd
     // range aggregation, no IO, no shuffle) timed before and after the
     // sweep. Round-8 incident: SUSTAINED VM contention slowed both min-of-2
@@ -142,25 +203,11 @@ object Bench {
     }
     calibrate() // untimed codegen warmup for the probe itself
     val calStart = math.min(calibrate(), calibrate())
-    // min-of-2, escalating to min-of-3 when the min still looks hot, and
-    // to min-of-4 when it looks VERY hot: a sustained-contention run gets
-    // extra chances to catch a quiet slot. r17/r18 showed the failure
-    // mode this guards: a 7× contention window turns 0.3 s queries into
-    // 20-40 s phantoms in the driver artifact, and each extra pass of an
-    // expensive-LOOKING query is cheap relative to the adjudication cost
-    // of a false regression.
-    def measure(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val m2 = math.min(timeOnce(fn), timeOnce(fn))
-      val m3 = if (m2 > 1.5) math.min(m2, timeOnce(fn)) else m2
-      if (m3 > 6.0) math.min(m3, timeOnce(fn)) else m3
-    }
-    val results = selected.map { case (name, fn) => name -> measure(fn) }
+    val (results, failed) =
+      sweep(selected.map { case (name, fn) => name -> (() => fn(spark, sfDir).count()) })
     val calEnd = math.min(calibrate(), calibrate())
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     val commit = gitHead
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","calibration":$calStart,"calibration_end":$calEnd,"commit":"$commit","queries":$qs,"sf":"$sfDir"}"""
+    val line = fullLine(results, calStart, calEnd, commit, sfDir, failed)
     println(line)
     // the driver captures only a 2000-char tail of stdout, which truncates
     // the per-query map once the registry is large — persist the full line
@@ -179,7 +226,7 @@ object Bench {
         System.err.println(s"[bench] could not write $outPath: $e")
     }
     // output only, after the timed sweep and the full line
-    println(compactLine(results, calStart, calEnd, commit, sfDir, outPath))
+    println(compactLine(results, calStart, calEnd, commit, sfDir, outPath, failed))
     spark.stop()
   }
 }

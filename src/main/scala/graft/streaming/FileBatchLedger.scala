@@ -1,7 +1,7 @@
 package graft.streaming
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
@@ -17,8 +17,14 @@ import scala.jdk.CollectionConverters._
   * checkpoint intact is the safe, intended case: the engine replays the
   * same epoch id with the same content, and the ledger dedupes it.
   *
-  * The file is a driver-side append-only log (one id per line) read once
-  * at construction; only its maximum is kept. An epoch is committed when
+  * The file holds one line, the highest committed epoch id, and so stays
+  * one size however long the stream runs: [[commit]] writes the new line
+  * to a temporary sibling and renames it over the file (`ATOMIC_MOVE`), so
+  * a process that dies mid-commit leaves the old line or the new one,
+  * never a torn file. It is
+  * read once at construction, as the maximum over its lines, so a ledger
+  * written as one id per line by earlier versions loads unchanged; a
+  * stray temporary file is not read. An epoch is committed when
   * it is at or below that maximum. The rule is exact: the micro-batch
   * engine commits epoch k's sink before it plans k+1, so a replayed epoch
   * is never above the maximum and a new one always is. At scale the
@@ -46,8 +52,10 @@ class FileBatchLedger(dir: String) {
   def committed(epochId: Long): Boolean = epochId <= committedThrough
 
   def commit(epochId: Long): Unit = synchronized {
-    Files.write(file, (epochId.toString + "\n").getBytes(StandardCharsets.UTF_8),
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-    through = math.max(through, epochId)
+    val mark = math.max(through, epochId)
+    val tmp = file.resolveSibling(file.getFileName.toString + ".tmp")
+    Files.write(tmp, (mark.toString + "\n").getBytes(StandardCharsets.UTF_8))
+    Files.move(tmp, file, StandardCopyOption.ATOMIC_MOVE)
+    through = mark
   }
 }

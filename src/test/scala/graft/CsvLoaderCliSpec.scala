@@ -7,7 +7,11 @@ import java.util.zip.{GZIPOutputStream, ZipEntry, ZipOutputStream}
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageSubmitted, StageInfo}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.ingest.CsvVehicleReader
 import graft.streaming.ProtoEnvelope
@@ -211,5 +215,94 @@ class CsvLoaderCliSpec extends SparkSpec {
     assert(!scopes.exists(_._2.startsWith("InMemoryTableScan")),
       s"the load caches its input: $scopes")
     checkDelivery(gz, 5L, bodies)
+  }
+
+  /** A plain CSV of `lines` in a fresh directory. */
+  private def csvOf(lines: Seq[String]): String = {
+    val f = Files.createTempDirectory("graft-cli").resolve("ids.csv")
+    Files.write(f, lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+    f.toString
+  }
+
+  /** Records, distinct strings and distinct low-64 ids of `ids`, each
+    * string counted `times` times, by the reference's BigInteger rule. */
+  private def expected(ids: Seq[String], times: Int): CsvLoaderCli.Summary =
+    CsvLoaderCli.Summary(ids.size.toLong * times, ids.distinct.size.toLong,
+      ids.map(s => new java.math.BigInteger(s.trim).longValue).distinct.size.toLong)
+
+  private val two63 = BigInt(2).pow(63)
+  private val two64 = BigInt(2).pow(64)
+
+  /** Alias strings of 7 (a leading space and non-ASCII digits, which
+    * `new BigInteger(s.trim)` accepts: U+0667 ARABIC-INDIC and U+FF17
+    * FULLWIDTH DIGIT SEVEN), of -1 and of Long.MinValue, and ids at and
+    * past 2^63. */
+  private val aliasIds = Seq("7", "007", " 7", (two64 + 7).toString, "\u0667", "\uFF17",
+    two63.toString, (-two63).toString, (two63 + 5).toString, (two64 - 1).toString, "-1",
+    "12", "0012")
+
+  test("load summary: alias strings of one id count apart as vehicles and " +
+      "once as an id, for ids below, at and past 2^63 and non-ASCII digits") {
+    val lines = for (t <- 0 until 3; id <- aliasIds)
+      yield f"2015-02-14 18:51:${t}%02d,$id,23.5,90.25"
+    val file = csvOf(lines)
+    val want = readerSummary(file)
+    assert(want == expected(aliasIds, 3), "the reader keeps every alias row")
+    assert(want.uniqueIds == 5, "7, -1, Long.MinValue, 2^63 + 5 and 12")
+    val (summary, bodies) = received(url => CsvLoaderCli.load(spark, file, url, 9L))
+    assert(summary == want)
+    checkDelivery(file, 9L, bodies)
+  }
+
+  test("load summary is exact when one id's rows and alias strings are spread " +
+      "over several byte-range tasks, at 1 and 7 shuffle partitions") {
+    val ids = Seq("7", "007", " 7", (two64 + 7).toString, "\u0667", (two63 + 7).toString)
+    val lines = (0 until 6000).map(i => f"2015-02-14 18:${i / 60 % 60}%02d:${i % 60}%02d," +
+      s"${ids(i % ids.size)},23.5,90.25")
+    val file = csvOf(lines)
+    val want = readerSummary(file)
+    assert(want == CsvLoaderCli.Summary(6000, 6, 2))
+    withConf("spark.sql.files.maxPartitionBytes", (32 * 1024).toString) {
+      for (p <- Seq(1, 7)) withConf("spark.sql.shuffle.partitions", p.toString) {
+        val (summary, bodies) = received(url => CsvLoaderCli.load(spark, file, url, 13L))
+        assert(summary == want, s"$p shuffle partitions")
+        assert(bodies.size > 3, "several read tasks")
+        checkDelivery(file, 13L, bodies)
+      }
+    }
+  }
+
+  test("id table: past its flush cap and several resizes, the entries merged " +
+      "by id equal a plain count, though every input row reuses one buffer") {
+    // an UnsafeProjection returns the same row, rewritten, for each input
+    val proj = UnsafeProjection.create(Array[DataType](StringType, LongType))
+    val rng = new scala.util.Random(3L)
+    val input = (0 until 60000).map { _ =>
+      val k = rng.nextInt(20000)
+      val s = rng.nextInt(3) match {
+        case 0 => k.toString
+        case 1 => f"$k%07d"
+        case _ => (two64 + k).toString
+      }
+      (s, k.toLong)
+    }
+    val table = new CsvLoaderCli.IdTable(cap = 5000)
+    val rows = input.iterator.map { case (s, id) =>
+      proj(InternalRow(UTF8String.fromString(s), id))
+    }
+    val entries = CsvLoaderCli.countIds(rows, table).toVector
+    assert(table.size == 0, "the table is empty once drained")
+    // 16 slots at the start, doubled while at most half full up to the cap
+    assert(table.slots == 16384, s"${table.slots} slots")
+    assert(entries.size > 20000 && entries.size >= 3 * 5000,
+      s"${entries.size} entries: several flushes, ids repeat across them")
+    val merged = entries.groupMapReduce(_._1)(_._2)(_ merge _)
+    val want = input.groupBy(_._2).map { case (id, xs) => id -> (xs.size.toLong, xs.map(_._1).toSet) }
+    assert(merged.keySet == want.keySet)
+    for ((id, c) <- merged) {
+      assert(c.rows == want(id)._1, s"id $id")
+      assert(c.strings.map(_.toString).toSet == want(id)._2, s"id $id")
+      assert(c.strings.length == want(id)._2.size, s"id $id: a string twice")
+    }
   }
 }
