@@ -21,11 +21,10 @@ import scala.jdk.CollectionConverters._
   * one size however long the stream runs: [[commit]] writes the new line
   * to a temporary sibling and renames it over the file (`ATOMIC_MOVE`), so
   * a process that dies mid-commit leaves the old line or the new one,
-  * never a torn file. It is
-  * read once at construction, as the maximum over its lines, so a ledger
-  * written as one id per line by earlier versions loads unchanged; a
-  * stray temporary file is not read. An epoch is committed when
-  * it is at or below that maximum. The rule is exact: the micro-batch
+  * never a torn file. The file is read once at construction, as the
+  * maximum over its lines, so a ledger written as one id per line by
+  * earlier versions loads unchanged; a stray temporary file is not read.
+  * An epoch is committed when it is at or below that maximum. The rule is exact: the micro-batch
   * engine commits epoch k's sink before it plans k+1, so a replayed epoch
   * is never above the maximum and a new one always is. At scale the
   * ledger lives in the receiver's store (transactional insert keyed by
