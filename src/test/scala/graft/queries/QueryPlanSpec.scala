@@ -1,8 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 
 import graft.SparkSpec
 
@@ -13,16 +14,16 @@ import graft.SparkSpec
   * preserving change that regresses the plan fails here. */
 class QueryPlanSpec extends SparkSpec {
 
-  private def planString(df: DataFrame): String = {
-    val executed = df.queryExecution.executedPlan
-    val finalPlan = executed match {
+  private def finalPlan(df: DataFrame): SparkPlan =
+    df.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.executedPlan
       case p: SparkPlan             => p
     }
+
+  private def planString(df: DataFrame): String =
     // formatted mode prints PushedFilters/ReadSchema untruncated
-    finalPlan.toString + "\n" + df.queryExecution.explainString(
+    finalPlan(df).toString + "\n" + df.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-  }
 
   test("q01: shipdate filter pushes down to parquet scan; columns pruned") {
     val p = planString(Relational.q01(spark, sf0001))
@@ -283,6 +284,35 @@ class QueryPlanSpec extends SparkSpec {
       s"per-probe top-3 must plan as a group limit:\n$p")
     assert(!p.contains("SortMergeJoin"),
       s"cell join must not sort-merge (probes are broadcast-sized):\n$p")
+  }
+
+  test("ANN/IVF probe-set family: probes broadcast into the cell or " +
+      "signature join, no cartesian, every per-probe top-k a group limit") {
+    val family = Seq[(String, (SparkSession, String) => DataFrame)](
+      "q34c" -> LlmOps.q34c, "q34d" -> LlmOps.q34d, "q149" -> LlmOps.q149,
+      "q160" -> LlmOps.q160, "q167" -> LlmOps.q167, "q176" -> LlmOps.q176,
+      "q181" -> LlmOps.q181)
+    // the recall reports (q167/q176/q181) join their arms to the exact
+    // top-3 on (pid, id) by sort-merge; only the serves are SMJ-free
+    val reports = Set("q167", "q176", "q181")
+    val blockKey = "(cell|sig)#\\d+L?"
+    for ((name, q) <- family) {
+      val df = q(spark, sf0001)
+      val p = planString(df)
+      assert(s"BroadcastHashJoin \\[$blockKey\\], \\[$blockKey\\], Inner, BuildRight"
+        .r.findFirstIn(p).isDefined,
+        s"$name: probes must broadcast into the candidate join:\n$p")
+      assert(!p.contains("CartesianProduct"), s"$name: no cartesian:\n$p")
+      if (reports(name))
+        assert(s"SortMergeJoin \\[$blockKey".r.findFirstIn(p).isEmpty,
+          s"$name: the candidate join must not sort-merge:\n$p")
+      else
+        assert(!p.contains("SortMergeJoin"), s"$name: no sort-merge join:\n$p")
+      val windows = finalPlan(df).collect { case w: WindowExec => w }
+      assert(windows.nonEmpty && windows.forall(
+          _.child.isInstanceOf[WindowGroupLimitExec]),
+        s"$name: every per-probe top-k must plan as a WindowGroupLimit:\n$p")
+    }
   }
 
   test("q111: span corruption is pure map-side — no join, window, or aggregation") {
