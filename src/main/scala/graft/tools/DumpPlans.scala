@@ -3,6 +3,8 @@ package graft.tools
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import scala.util.matching.Regex
+
 import graft.{SparkEntry, SparkEnv}
 
 /** Dev tool: writes PLANS.md — formatted physical plans for flagship
@@ -35,8 +37,8 @@ object DumpPlans {
       for (k <- keys) {
         val df = SparkEntry.queries(k)(spark, d)
         sb.append(s"\n## $k\n\n```\n")
-        sb.append(stable(df.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")).trim))
+        sb.append(renumberIds(stable(df.queryExecution.explainString(
+          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")).trim)))
         sb.append("\n```\n")
       }
       Files.write(Paths.get("PLANS.md"), sb.toString.getBytes(StandardCharsets.UTF_8))
@@ -65,4 +67,19 @@ object DumpPlans {
     RunTokens.foldLeft(plan) { case (p, (token, placeholder)) =>
       token.replaceAllIn(p, placeholder)
     }
+
+  /** One query's plan text with its expression ids (`#123`) and lambda
+    * variable suffixes (`lambda x_7`) renumbered from 0 in order of first
+    * appearance. Both come from JVM-wide counters, so the same plan
+    * prints other numbers after another query or in another run; the
+    * renumbering keeps which attributes are the same attribute. */
+  def renumberIds(section: String): String =
+    Seq("""(#)(\d+)""".r, """(lambda [a-z]+_)(\d+)""".r)
+      .foldLeft(section)(renumber)
+
+  private def renumber(text: String, token: Regex): String = {
+    val ids = scala.collection.mutable.HashMap.empty[String, Int]
+    token.replaceAllIn(text, m => Regex.quoteReplacement(
+      m.group(1) + ids.getOrElseUpdate(m.group(2), ids.size)))
+  }
 }

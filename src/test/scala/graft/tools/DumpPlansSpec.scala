@@ -24,4 +24,24 @@ class DumpPlansSpec extends AnyFunSuite {
         "Arguments: [pid#7L], MapPartitionsRDD[<n>] at createDataFrame\n" +
         "Condition : rlike(text#17750, [a-z0-9]+@[a-z0-9]+\\.[a-z]+), @example.com")
   }
+
+  test("renumberIds: expression ids and lambda variables renumber in " +
+      "order of first appearance; equal ids stay equal") {
+    val section =
+      "Output [2]: [pid#7718L, sim#7721]\n" +
+        "Input [3]: [pid#7718L, vec_id#11708L, code_0#96]\n" +
+        "Condition : (pid#7718L <> vec_id#11708L)\n" +
+        "transform(embedding#12, lambdafunction(cast(lambda x_88#1937 as " +
+        "double), lambda x_88#1937, false)), zip_with(a#3, b#4, " +
+        "lambdafunction((lambda x_91#1940 * lambda y_92#1941), " +
+        "lambda x_91#1940, lambda y_92#1941, false))"
+    assert(DumpPlans.renumberIds(section) ==
+      "Output [2]: [pid#0L, sim#1]\n" +
+        "Input [3]: [pid#0L, vec_id#2L, code_0#3]\n" +
+        "Condition : (pid#0L <> vec_id#2L)\n" +
+        "transform(embedding#4, lambdafunction(cast(lambda x_0#5 as " +
+        "double), lambda x_0#5, false)), zip_with(a#6, b#7, " +
+        "lambdafunction((lambda x_1#8 * lambda y_2#9), " +
+        "lambda x_1#8, lambda y_2#9, false))")
+  }
 }
