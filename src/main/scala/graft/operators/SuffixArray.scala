@@ -476,59 +476,6 @@ object SuffixArray {
     * over the in-flight subset only, never all n pairs. */
   private[operators] val LcpBroadcastActiveMax: Long = 1L << 20
 
-  /** ACTIVE-SET LCP: bracket-up then refine-down over the hierarchy —
-    * BUILT FOR r15 verdict ask #2, MEASURED AND KEPT OFF (the q173
-    * cold-entry / seedWidth discipline: reject with numbers). The ask's
-    * premise — "a pair resolved at level p never needs deeper levels" —
-    * is true for join TRAFFIC but join traffic is not the cost driver:
-    * every level join pays a FIXED shuffle of the full n-row level
-    * relation regardless of how few pairs remain, and splitting the
-    * descent into two passes nearly doubles the count of those fixed
-    * shuffles. Measured at the 100× design point (27,070,400 tokens,
-    * local[8], same session shape as BASELINE's 255.9 s default):
-    *   - direct-compare K=16 Phase A + descent: 345.8 s (the rotated
-    *     siblings leave ~80% of pairs at LCP ≥ 16 — fat arrays, no
-    *     shrink);
-    *   - bracket-up/refine-down, per-level lands: 287.3 s;
-    *   - with 4-level UP chaining: 322.1 s (exited rows riding the
-    *     chain cost more than the saved lands);
-    *   - phase split (re-measure): up 228.8 s / down 135.1 s.
-    * All lose to the 255.9 s top-down default. The winning redesign —
-    * pivot the hierarchy into a per-position composite rank row so a
-    * lookup serves EVERY level at an offset and a pair finishes in
-    * popcount(lcp)+1 lookups — is recorded in BASELINE.md for a future
-    * round. Property coverage (both refine regimes) keeps this variant
-    * correct meanwhile.
-    *
-    * Semantics, both passes exact:
-    *
-    * UP (bracket): pairs join each level ASCENDING at their own
-    * STATIC positions — rank equality at level p ⟺ lcp ≥ p (the
-    * build's shorter-suffix sentinel makes a short suffix distinct
-    * from longer ones at any level past its end, so text ends need no
-    * special case). A pair leaves the pass at its FIRST mismatching
-    * level q, carrying the exact bracket lcp ∈ [M, q) (M = the level
-    * below q, its last match; M = 0 at level 1). The live set shrinks
-    * with the true LCP tail distribution; the top level empties it
-    * (the converged build ranks all suffixes distinct ⟹ every pair
-    * mismatches by then).
-    *
-    * DOWN (refine): greedy remainder capture — add level p whenever
-    * ranks at (a+lcp, b+lcp) match. Each bracket class (M, q) has
-    * remainder < q − M, so classes with q − M ≤ 1 are already EXACT
-    * (binary-ladder brackets [0,1) and [1,2)), and the rest INJECT at
-    * the first rep of the level TWO below q in the descending ladder —
-    * the level one below would always mismatch for them (adding M
-    * again overshoots the bracket), and the invariant there (remainder
-    * < level-below-q) holds because build ladders double everywhere
-    * except the bottom seed jump, where the inject target collapses to
-    * the bottom level and its `prev/p − 1` reps cover the hole (the
-    * seeded 8 → 1 ladder: level 1 applied 7 times). After the bottom
-    * level's reps the remainder is 0 for every pair.
-    *
-    * Caller owns `h` (NOT released here). `broadcastMax` is a test
-    * seam (specs pin both refine regimes); production callers take the
-    * default. */
   /** COMPOSITE-RANK LCP lookup descent — the redesign the bracket
     * variant's measurements point at (see [[lcpFromLevelsBracket]]):
     * kill the per-level relation shuffles entirely. MEASURED AND
@@ -704,6 +651,59 @@ object SuffixArray {
     }
   }
 
+  /** ACTIVE-SET LCP: bracket-up then refine-down over the hierarchy —
+    * BUILT FOR r15 verdict ask #2, MEASURED AND KEPT OFF (the q173
+    * cold-entry / seedWidth discipline: reject with numbers). The ask's
+    * premise — "a pair resolved at level p never needs deeper levels" —
+    * is true for join TRAFFIC but join traffic is not the cost driver:
+    * every level join pays a FIXED shuffle of the full n-row level
+    * relation regardless of how few pairs remain, and splitting the
+    * descent into two passes nearly doubles the count of those fixed
+    * shuffles. Measured at the 100× design point (27,070,400 tokens,
+    * local[8], same session shape as BASELINE's 255.9 s default):
+    *   - direct-compare K=16 Phase A + descent: 345.8 s (the rotated
+    *     siblings leave ~80% of pairs at LCP ≥ 16 — fat arrays, no
+    *     shrink);
+    *   - bracket-up/refine-down, per-level lands: 287.3 s;
+    *   - with 4-level UP chaining: 322.1 s (exited rows riding the
+    *     chain cost more than the saved lands);
+    *   - phase split (re-measure): up 228.8 s / down 135.1 s.
+    * All lose to the 255.9 s top-down default. The winning redesign —
+    * pivot the hierarchy into a per-position composite rank row so a
+    * lookup serves EVERY level at an offset and a pair finishes in
+    * popcount(lcp)+1 lookups — is recorded in BASELINE.md for a future
+    * round. Property coverage (both refine regimes) keeps this variant
+    * correct meanwhile.
+    *
+    * Semantics, both passes exact:
+    *
+    * UP (bracket): pairs join each level ASCENDING at their own
+    * STATIC positions — rank equality at level p ⟺ lcp ≥ p (the
+    * build's shorter-suffix sentinel makes a short suffix distinct
+    * from longer ones at any level past its end, so text ends need no
+    * special case). A pair leaves the pass at its FIRST mismatching
+    * level q, carrying the exact bracket lcp ∈ [M, q) (M = the level
+    * below q, its last match; M = 0 at level 1). The live set shrinks
+    * with the true LCP tail distribution; the top level empties it
+    * (the converged build ranks all suffixes distinct ⟹ every pair
+    * mismatches by then).
+    *
+    * DOWN (refine): greedy remainder capture — add level p whenever
+    * ranks at (a+lcp, b+lcp) match. Each bracket class (M, q) has
+    * remainder < q − M, so classes with q − M ≤ 1 are already EXACT
+    * (binary-ladder brackets [0,1) and [1,2)), and the rest INJECT at
+    * the first rep of the level TWO below q in the descending ladder —
+    * the level one below would always mismatch for them (adding M
+    * again overshoots the bracket), and the invariant there (remainder
+    * < level-below-q) holds because build ladders double everywhere
+    * except the bottom seed jump, where the inject target collapses to
+    * the bottom level and its `prev/p − 1` reps cover the hole (the
+    * seeded 8 → 1 ladder: level 1 applied 7 times). After the bottom
+    * level's reps the remainder is 0 for every pair.
+    *
+    * Caller owns `h` (NOT released here). `broadcastMax` is a test
+    * seam (specs pin both refine regimes); production callers take the
+    * default. */
   private[graft] def lcpFromLevelsBracket(spark: SparkSession, h: SaHierarchy,
       broadcastMax: Long = LcpBroadcastActiveMax,
       onPhase: (String, Double) => Unit = (_, _) => ()): String = {

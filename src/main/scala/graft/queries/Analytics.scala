@@ -127,17 +127,6 @@ object Analytics {
       |FROM ev JOIN f USING (user_id)
       |GROUP BY 1, 2 ORDER BY cohort_day, week_offset""".stripMargin
 
-  /** q103 — PageRank authority over the nation-level trade graph
-    * ([[graft.operators.PageRank]]): a directed edge supplier-nation →
-    * customer-nation for every distinct trading pair in
-    * lineitem⋈orders⋈supplier⋈customer (self-loops dropped), then 3
-    * integer-quantized iterations — the crawl/source authority signal a
-    * curation pipeline weights provenance by. The edge DERIVATION is the
-    * heavy part at 100 TB (one fact shuffle + distinct, all pushed-down
-    * column pruning); the iteration then works on the collapsed graph,
-    * each round one rank shuffle + one dst aggregation with the edge
-    * exchange planned once and reused. Bit-reproducible integer math →
-    * DuckDB-oracled as an unrolled 3-round CTE chain (q96 pattern). */
   /** The supplier-nation → customer-nation trade graph shared by the
     * link-analysis pair (q103 PageRank, q117 HITS): a directed edge for
     * every distinct trading pair in lineitem⋈orders⋈supplier⋈customer,
@@ -163,6 +152,17 @@ object Analytics {
       |  WHERE s_nationkey <> c_nationkey),
       |nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges)""".stripMargin
 
+  /** q103 — PageRank authority over the nation-level trade graph
+    * ([[graft.operators.PageRank]]): a directed edge supplier-nation →
+    * customer-nation for every distinct trading pair in
+    * lineitem⋈orders⋈supplier⋈customer (self-loops dropped), then 3
+    * integer-quantized iterations — the crawl/source authority signal a
+    * curation pipeline weights provenance by. The edge DERIVATION is the
+    * heavy part at 100 TB (one fact shuffle + distinct, all pushed-down
+    * column pruning); the iteration then works on the collapsed graph,
+    * each round one rank shuffle + one dst aggregation with the edge
+    * exchange planned once and reused. Bit-reproducible integer math →
+    * DuckDB-oracled as an unrolled 3-round CTE chain (q96 pattern). */
   def q103(s: SparkSession, d: String): DataFrame = {
     // NOTE(r20): re-basing the derived edge relation on its compiled RDD
     // (the q169 flattenPlan discipline) was tried and REVERTED: 1.23 →

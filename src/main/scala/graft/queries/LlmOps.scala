@@ -76,8 +76,9 @@ object LlmOps {
     * No distinct: min/collect_set are duplicate-insensitive, so
     * aggregating occurrences equals aggregating the shingle set with one
     * shuffle instead of two. The cap is a broadcast ANTI join against the
-    * memoized hot relation — the occurrence stream never shuffles for it. */
-  /** @param docGate optional small doc_id relation; when present it
+    * memoized hot relation — the occurrence stream never shuffles for it.
+    *
+    * @param docGate optional small doc_id relation; when present it
     *   broadcast-semi-gates the document scan BEFORE the explode (a
     *   semi-join placed after the Generate would not push below it, so
     *   the whole corpus would still explode — the gate must sit on the
@@ -718,18 +719,19 @@ object LlmOps {
       .orderBy(col("vec_id"))
   }
 
-  /** The Lloyd loop unrolled as a DuckDB CTE chain (shared by q96 and
-    * q99): c0 = k-lowest-id init; round n = assign (cross join with the
-    * k centroids, argmin by (dist2, cid)) + recenter (per-dim integer
-    * sums, floor(s/n), LEFT JOIN so empty clusters keep their previous
-    * centroid). Final assignment lands in `b3(vec_id, vq, cluster,
-    * dist2)`. */
   /** Integer squared-L2 between two DuckDB lists (the SQL mirror of
     * SquaredDistanceExpr). */
   private def sqDistSql(v: String, c: String) =
     s"list_sum(list_transform(range(1, len($v)+1), i -> ($v[i]-$c[i])*($v[i]-$c[i])))"
 
-  /** The Lloyd loop (2 training rounds + final assignment) unrolled as a
+  /** The Lloyd loop unrolled as a DuckDB CTE chain (shared by q96 and
+    * q99): c0 = k-lowest-id init; round n = assign (cross join with the
+    * k centroids, argmin by (dist2, cid)) + recenter (per-dim integer
+    * sums, floor(s/n), LEFT JOIN so empty clusters keep their previous
+    * centroid). Final assignment lands in `b3(vec_id, vq, cluster,
+    * dist2)`.
+    *
+    * The Lloyd loop (2 training rounds + final assignment) unrolled as a
     * DuckDB CTE chain, parameterized so q96/q99 (one full-dims chain)
     * and q104's product quantizer (one chain per sub-vector slice) share
     * the generator. `srcSql` must select `(vec_id, vq)`; every CTE name
@@ -937,20 +939,6 @@ object LlmOps {
       |FROM u a JOIN u b ON a.vec_id = b.vec_id AND a.p <= b.p
       |GROUP BY 1, 2 ORDER BY i, j""".stripMargin
 
-  /** q104 — product-quantized ANN (the compression half of the ANN
-    * story, next to q34c sign-LSH and q34d IVF which give the probe-set
-    * half): [[graft.operators.Pq]] learns m=8 per-subspace codebooks
-    * (k=64, 2 Lloyd rounds each — bit-reproducible KMeans over vector
-    * slices; recall@10 = 0.6 vs exact at this config, gated in PqSpec),
-    * encodes the corpus to 8 codes/vector map-side, and scores every
-    * code row against the lowest-id probe vector by asymmetric distance
-    * computation: the 8×64 probe→centroid distance table is
-    * driver-computed literals, so the scan does 8 array lookups + a sum
-    * per row and the top-10 is a distributed TakeOrderedAndProject. At
-    * 100 TB the float corpus (26 TB at 64-dim) becomes 8 bytes/vector of
-    * codes; ADC never touches floats. Every stage is integer-exact, so
-    * the whole quantize→train→encode→score pipeline is DuckDB-oracled
-    * (8 unrolled Lloyd CTE chains, one per subspace). */
   private val PqM = 8
   private val PqK = 64
   private val PqDims = 64
@@ -1002,6 +990,20 @@ object LlmOps {
       transform(col("embedding"),
         v => round(v.cast("double") * 10000, 0).cast("long")).as("vq"))
 
+  /** q104 — product-quantized ANN (the compression half of the ANN
+    * story, next to q34c sign-LSH and q34d IVF which give the probe-set
+    * half): [[graft.operators.Pq]] learns m=8 per-subspace codebooks
+    * (k=64, 2 Lloyd rounds each — bit-reproducible KMeans over vector
+    * slices; recall@10 = 0.6 vs exact at this config, gated in PqSpec),
+    * encodes the corpus to 8 codes/vector map-side, and scores every
+    * code row against the lowest-id probe vector by asymmetric distance
+    * computation: the 8×64 probe→centroid distance table is
+    * driver-computed literals, so the scan does 8 array lookups + a sum
+    * per row and the top-10 is a distributed TakeOrderedAndProject. At
+    * 100 TB the float corpus (26 TB at 64-dim) becomes 8 bytes/vector of
+    * codes; ADC never touches floats. Every stage is integer-exact, so
+    * the whole quantize→train→encode→score pipeline is DuckDB-oracled
+    * (8 unrolled Lloyd CTE chains, one per subspace). */
   def q104(s: SparkSession, d: String): DataFrame = {
     val art = pqIndex(s, d)
     val probeRow = pqQuantized(s, d).orderBy(col("vec_id")).limit(1)
@@ -2823,14 +2825,6 @@ object LlmOps {
       |  ((doc_id + rep * 747796405) * 1103515245 + 12345) % 2147483648 AS shuffle_key
       |FROM reps ORDER BY shuffle_key, doc_id, rep""".stripMargin
 
-  /** q65 — benchmark decontamination: flag corpus documents that share any
-    * word 8-gram with a held-out benchmark/eval set (the GPT-3/PaLM-style
-    * train-test overlap check every serious training pipeline runs). The
-    * eval set here is the deterministic doc_id%59 bucket (chosen so the synthetic corpus actually leaks into it at every SF — a %97-style bucket happened to be contamination-free at the gate SF, making the oracle vacuous); in production it
-    * is the actual benchmark suite — small by construction, so its distinct
-    * 8-gram set BROADCASTS and contamination becomes a map-side semi-join
-    * over the streamed corpus n-grams: no shuffle of the 100 TB side
-    * before the per-doc count. */
   /** DERIVED-CAP AUDIT of the decontamination gram gates (r12 verdict
     * ask #7), q65 + q75: the only constants in these paths are
     *   - the gram width 8 — SEMANTIC (the GPT-3/PaLM 8-to-13-gram
@@ -2858,6 +2852,14 @@ object LlmOps {
   private[queries] def benchGate(bench: DataFrame, benchRows: Long): DataFrame =
     if (benchRows <= BenchBroadcastMaxRows) broadcast(bench) else bench
 
+  /** q65 — benchmark decontamination: flag corpus documents that share any
+    * word 8-gram with a held-out benchmark/eval set (the GPT-3/PaLM-style
+    * train-test overlap check every serious training pipeline runs). The
+    * eval set here is the deterministic doc_id%59 bucket (chosen so the synthetic corpus actually leaks into it at every SF — a %97-style bucket happened to be contamination-free at the gate SF, making the oracle vacuous); in production it
+    * is the actual benchmark suite — small by construction, so its distinct
+    * 8-gram set BROADCASTS and contamination becomes a map-side semi-join
+    * over the streamed corpus n-grams: no shuffle of the 100 TB side
+    * before the per-doc count. */
   def q65(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     val isBench = col("doc_id") % 59 === 0
@@ -3263,20 +3265,6 @@ object LlmOps {
     new graft.operators.DatasetCache[(String, String)]("bm25-main-seg",
       { case (a, b) => Seq(a, b) })
 
-  /** q155 — SEGMENT-MERGED BM25 (the Lucene/NRT index shape): the main
-    * segment is a LANDED full inverted index (term-sorted postings +
-    * doc lengths, built once per dataset); the delta segment — the
-    * unindexed crawl tail (doc_id % 13 == 2, the q154 increment
-    * convention) — is scored fresh at query time; corpus statistics
-    * (ndocs, avgdl, df) derive from the MERGED relations. Exactness
-    * claim: because the segments partition the corpus, merged-segment
-    * scoring is IDENTICAL to a monolithic rebuild — the oracle is
-    * literally q70's full-corpus chain, so hash equality proves the
-    * merge loses nothing. Scale shape: the landed postings are the
-    * only big artifact (built once); query-time work is the broadcast
-    * term gate over main postings + a delta-only scan + the same
-    * bounded scoring joins as q70; a production system runs exactly
-    * this merge-on-read until the next segment compaction. */
   /** Build-or-serve the landed MAIN segment (term-sorted postings + doc
     * lengths over the non-delta corpus) — shared by q155 (merge-on-read)
     * and q161 (compaction input). */
@@ -3293,6 +3281,20 @@ object LlmOps {
         graft.operators.Scratch.materializePath(dl, "bm25-seg-dl"))
     }
 
+  /** q155 — SEGMENT-MERGED BM25 (the Lucene/NRT index shape): the main
+    * segment is a LANDED full inverted index (term-sorted postings +
+    * doc lengths, built once per dataset); the delta segment — the
+    * unindexed crawl tail (doc_id % 13 == 2, the q154 increment
+    * convention) — is scored fresh at query time; corpus statistics
+    * (ndocs, avgdl, df) derive from the MERGED relations. Exactness
+    * claim: because the segments partition the corpus, merged-segment
+    * scoring is IDENTICAL to a monolithic rebuild — the oracle is
+    * literally q70's full-corpus chain, so hash equality proves the
+    * merge loses nothing. Scale shape: the landed postings are the
+    * only big artifact (built once); query-time work is the broadcast
+    * term gate over main postings + a delta-only scan + the same
+    * bounded scoring joins as q70; a production system runs exactly
+    * this merge-on-read until the next segment compaction. */
   def q155(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val isDelta = col("doc_id") % 13 === 2
@@ -3496,20 +3498,6 @@ object LlmOps {
       |SELECT p, rnk, term, freq, n_docs FROM r WHERE rnk <= 3
       |ORDER BY p, rnk""".stripMargin
 
-  /** q119 — Matryoshka truncation-fidelity curve (the MRL serving
-    * question: how much ANN quality survives cutting embeddings to their
-    * prefix dims?): for the 10 probe vectors, exact cosine top-5 under
-    * each prefix width 48/32/16 vs the full-64 reference, reported as
-    * per-probe recall@5 (set overlap) and exact-rank agreement — the
-    * curve that decides "serve at d/4 memory, re-rank with full
-    * vectors". One pass computes all four arms: candidates explode ×4
-    * over a width literal array BEFORE the cosine (map-side; codegen'd
-    * cosine over `slice`d arrays), per-(probe, width) top-5 via a
-    * 40-partition window; ties broken on the 4dp-rounded score + id so
-    * ranks are engine-stable and the whole report hash-oracles. Measured
-    * here (synthetic, non-MRL-trained embeddings): recall@5 collapses
-    * 22/14/4 of 50 at 48/32/16 dims — exactly the "don't truncate
-    * untrained embeddings" verdict the report exists to catch. */
   private val mrlCache =
     new graft.operators.DatasetCache[String]("mrl-ranked", Seq(_))
 
@@ -3541,6 +3529,20 @@ object LlmOps {
     Tables.parquet(s, path)
   }
 
+  /** q119 — Matryoshka truncation-fidelity curve (the MRL serving
+    * question: how much ANN quality survives cutting embeddings to their
+    * prefix dims?): for the 10 probe vectors, exact cosine top-5 under
+    * each prefix width 48/32/16 vs the full-64 reference, reported as
+    * per-probe recall@5 (set overlap) and exact-rank agreement — the
+    * curve that decides "serve at d/4 memory, re-rank with full
+    * vectors". One pass computes all four arms: candidates explode ×4
+    * over a width literal array BEFORE the cosine (map-side; codegen'd
+    * cosine over `slice`d arrays), per-(probe, width) top-5 via a
+    * 40-partition window; ties broken on the 4dp-rounded score + id so
+    * ranks are engine-stable and the whole report hash-oracles. Measured
+    * here (synthetic, non-MRL-trained embeddings): recall@5 collapses
+    * 22/14/4 of 50 at 48/32/16 dims — exactly the "don't truncate
+    * untrained embeddings" verdict the report exists to catch. */
   def q119(s: SparkSession, d: String): DataFrame = {
     val ranked = mrlRanked(s, d)
     // the reference arm is renamed before joining: full and lvl share
@@ -6434,32 +6436,6 @@ object LlmOps {
       |  LEFT JOIN sz2 ON sz2.cluster_id = l.cluster_id
       |ORDER BY em.vec_id""".stripMargin
 
-  /** q149 — HIERARCHICAL (2-level) IVF ANN: the remaining log factor the
-    * q130 Scaladoc defers. Level 1: k₁=4 trained coarse cells (k-means,
-    * the q130/q34d discipline). Level 2: within each coarse cell, k₂
-    * trained sub-cells (k₂ = ⌈T/4⌉ where T = q130's √(n/8) total-cell
-    * target, so k₁·k₂ ≈ T effective cells). A probe finds its cell by
-    * comparing against k₁ + k₂ centroids instead of T — at T = √(n/8)
-    * that's the √T ≈ (n/8)^(1/4) centroid-scan saving per probed vector,
-    * the reason real IVF serving stacks (FAISS IMI, SPANN) quantize
-    * hierarchically. Search = rank within the winning sub-cell (probe's
-    * own assignment), q34d's exact discipline: 4dp-rounded cosine, id
-    * tiebreaks, top-3.
-    *
-    * Scale shape: both levels are map-side codegen'd argmins over
-    * driver-held centroid literals (no assignment shuffle at either
-    * level); the k₁ sub-trainings run as ONE combined job per Lloyd
-    * step ([[graft.operators.KMeans.lloydPartitioned]], the Pq.train
-    * discipline — bit-identical to per-cell lloyd runs, which is what
-    * the per-cell oracle chains verify); the candidate join blocks on
-    * the sub-cell key, so the pairwise cost is Σ n_sc² over k₁·k₂ cells
-    * — strictly finer blocking than q130's single level. The trained
-    * (vec_id, cell, cell2, embedding) layout LANDS once per dataset (the q110
-    * landed-code-table discipline: production serves from a built
-    * index, not a per-query retrain) and queries serve join-free from
-    * it. Oracle: the coarse Lloyd chain plus k₁ per-cell chains (the
-    * q104 multi-chain pattern), k₂ as a scalar subquery through the
-    * shared [[lloydCteChain]]. */
   private val Ivf2K1 = 4
 
   /** (assignment path, trained-quantizer path): the landed IVF2 index.
@@ -6522,7 +6498,34 @@ object LlmOps {
         centsDf.repartition(1), "ivf2-cents"))
   }
 
-  /** q149's serve is MULTI-PROBE (probe-2, r12 verdict ask #2): each
+  /** q149 — HIERARCHICAL (2-level) IVF ANN: the remaining log factor the
+    * q130 Scaladoc defers. Level 1: k₁=4 trained coarse cells (k-means,
+    * the q130/q34d discipline). Level 2: within each coarse cell, k₂
+    * trained sub-cells (k₂ = ⌈T/4⌉ where T = q130's √(n/8) total-cell
+    * target, so k₁·k₂ ≈ T effective cells). A probe finds its cell by
+    * comparing against k₁ + k₂ centroids instead of T — at T = √(n/8)
+    * that's the √T ≈ (n/8)^(1/4) centroid-scan saving per probed vector,
+    * the reason real IVF serving stacks (FAISS IMI, SPANN) quantize
+    * hierarchically. Search = rank within the winning sub-cell (probe's
+    * own assignment), q34d's exact discipline: 4dp-rounded cosine, id
+    * tiebreaks, top-3.
+    *
+    * Scale shape: both levels are map-side codegen'd argmins over
+    * driver-held centroid literals (no assignment shuffle at either
+    * level); the k₁ sub-trainings run as ONE combined job per Lloyd
+    * step ([[graft.operators.KMeans.lloydPartitioned]], the Pq.train
+    * discipline — bit-identical to per-cell lloyd runs, which is what
+    * the per-cell oracle chains verify); the candidate join blocks on
+    * the sub-cell key, so the pairwise cost is Σ n_sc² over k₁·k₂ cells
+    * — strictly finer blocking than q130's single level. The trained
+    * (vec_id, cell, cell2, embedding) layout LANDS once per dataset (the q110
+    * landed-code-table discipline: production serves from a built
+    * index, not a per-query retrain) and queries serve join-free from
+    * it. Oracle: the coarse Lloyd chain plus k₁ per-cell chains (the
+    * q104 multi-chain pattern), k₂ as a scalar subquery through the
+    * shared [[lloydCteChain]].
+    *
+    * q149's serve is MULTI-PROBE (probe-2, r12 verdict ask #2): each
     * probe searches its own cell PLUS the nearest sub-cell of its
     * runner-up coarse centroid ([[ivf2SecondProbeCell]]). The two cells
     * are always distinct (different coarse id ⇒ disjoint cell-id
@@ -6654,21 +6657,6 @@ object LlmOps {
       |$ivf2AsgCtesSql,
       |${ivf2ServeSql("cellv")}""".stripMargin
 
-  /** q154 — IVF2 index APPEND: the third leg of the index lifecycle
-    * (q149 builds and serves; this folds an incoming vector batch into
-    * the LANDED quantizer WITHOUT retraining — how a production ANN
-    * index absorbs a crawl increment between scheduled retrains). The
-    * batch derives from embeddings (vec_id % 13 == 2, components
-    * shifted by +7 on the quantized grid, fresh ids in the NEGATIVE
-    * -(vec_id+1) namespace — disjoint from live ids at any corpus
-    * size); each new
-    * vector runs the SAME two-level map-side argmin the index was built
-    * with, against the centroid relation landed by [[ivf2Build]] — a
-    * bounded driver collect (4 + 4·k₂ rows), then pure codegen'd
-    * projection, zero shuffles, zero retraining. Output: (new_id,
-    * coarse, cell). Oracle: the shared [[ivf2ChainsSql]] recomputes
-    * both quantizer levels and assigns the derived batch via windowed
-    * argmins with the same (distance, id) tiebreak. */
   /** The BOUNDED IVF2 serve state — (coarse centroids, per-coarse
     * sub-cell codebooks, cell-id stride k₂): 4 + 4·k₂ rows collected
     * once from the landed quantizer. The stride is landed explicitly —
@@ -6775,6 +6763,21 @@ object LlmOps {
   private def quantized(e: Column): Column =
     transform(e, v => round(v.cast("double") * 10000, 0).cast("long"))
 
+  /** q154 — IVF2 index APPEND: the third leg of the index lifecycle
+    * (q149 builds and serves; this folds an incoming vector batch into
+    * the LANDED quantizer WITHOUT retraining — how a production ANN
+    * index absorbs a crawl increment between scheduled retrains). The
+    * batch derives from embeddings (vec_id % 13 == 2, components
+    * shifted by +7 on the quantized grid, fresh ids in the NEGATIVE
+    * -(vec_id+1) namespace — disjoint from live ids at any corpus
+    * size); each new
+    * vector runs the SAME two-level map-side argmin the index was built
+    * with, against the centroid relation landed by [[ivf2Build]] — a
+    * bounded driver collect (4 + 4·k₂ rows), then pure codegen'd
+    * projection, zero shuffles, zero retraining. Output: (new_id,
+    * coarse, cell). Oracle: the shared [[ivf2ChainsSql]] recomputes
+    * both quantizer levels and assigns the derived batch via windowed
+    * argmins with the same (distance, id) tiebreak. */
   def q154(s: SparkSession, d: String): DataFrame = {
     val state = ivf2ServeState(s, d)
     val batch = Tables.embeddings(s, d)
@@ -7383,6 +7386,13 @@ object LlmOps {
       |SELECT pid, CAST(3 AS BIGINT), s3, mmr3 FROM s3
       |ORDER BY pid, round""".stripMargin
 
+  /** q139's round-1 feedback set is consumed twice (E-step term counts
+    * AND the final in-feedback flag) and costs a full corpus BM25 pass —
+    * scratch-landed + memoized per dataset (the §7.4 double-reference
+    * discipline; 10 rows on disk, one corpus pass saved per run). */
+  private val prfFeedbackCache =
+    new graft.operators.DatasetCache[String]("prf-feedback", Seq(_))
+
   /** q139 — pseudo-relevance-feedback query expansion (Rocchio's
     * blind-feedback shape): the fifth retrieval member (q70 BM25, q89
     * RRF, q114 phrase, q118 prefix — this one closes the loop from
@@ -7397,13 +7407,6 @@ object LlmOps {
     * shape: both rounds are the q70 posture (term set broadcast-gates
     * the posting stream before any aggregation); the feedback set is 10
     * rows; expansion scoring is vocab-bounded. */
-  /** q139's round-1 feedback set is consumed twice (E-step term counts
-    * AND the final in-feedback flag) and costs a full corpus BM25 pass —
-    * scratch-landed + memoized per dataset (the §7.4 double-reference
-    * discipline; 10 rows on disk, one corpus pass saved per run). */
-  private val prfFeedbackCache =
-    new graft.operators.DatasetCache[String]("prf-feedback", Seq(_))
-
   def q139(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val base = Bm25QueryTerms.toDF("term")

@@ -254,22 +254,6 @@ object StreamIngest {
     keep.unionByName(merged).unionByName(newRanked)
   }
 
-  /** Streaming line-level boilerplate rule (the q112 line rule on the
-    * admission path): incoming (doc_id, text, ts) docs split into
-    * [[LineLen]]-token lines MAP-SIDE (the q112 chunking, declarative so
-    * the event-time watermark column survives to the stateful operator),
-    * keyed by the raw line (at 100 TB: its 128-bit digest). Per-line
-    * state is (first_doc, flagged): a line arriving from a SECOND
-    * distinct doc flags — and stays flagged — so later occurrences are
-    * marked boilerplate on arrival; the admission layer drops or trims
-    * flagged lines. State is TTL-BOUNDED via EVENT-TIME timeout (the
-    * ST7b contract, data-driven — no busy re-trigger loop): a line key
-    * whose last occurrence falls `ttlMs` behind the watermark is
-    * REMOVED, so state size tracks the recently-seen line set, not the
-    * stream's lifetime; a recurrence after eviction re-admits as fresh.
-    * The batch q112 remains the exact retroactive rule — it also removes
-    * the FIRST occurrence, which a stream cannot retract. Output:
-    * (doc_id, line, is_boiler). */
   /** The per-line state machine behind [[lineDedupStream]], on the Spark
     * 4 `transformWithState` API (r11 migration off the legacy
     * flatMapGroupsWithState): ValueState (first_doc, flagged, lastSeenMs)
@@ -333,6 +317,22 @@ object StreamIngest {
     }
   }
 
+  /** Streaming line-level boilerplate rule (the q112 line rule on the
+    * admission path): incoming (doc_id, text, ts) docs split into
+    * [[LineLen]]-token lines MAP-SIDE (the q112 chunking, declarative so
+    * the event-time watermark column survives to the stateful operator),
+    * keyed by the raw line (at 100 TB: its 128-bit digest). Per-line
+    * state is (first_doc, flagged): a line arriving from a SECOND
+    * distinct doc flags — and stays flagged — so later occurrences are
+    * marked boilerplate on arrival; the admission layer drops or trims
+    * flagged lines. State is TTL-BOUNDED via EVENT-TIME timeout (the
+    * ST7b contract, data-driven — no busy re-trigger loop): a line key
+    * whose last occurrence falls `ttlMs` behind the watermark is
+    * REMOVED, so state size tracks the recently-seen line set, not the
+    * stream's lifetime; a recurrence after eviction re-admits as fresh.
+    * The batch q112 remains the exact retroactive rule — it also removes
+    * the FIRST occurrence, which a stream cannot retract. Output:
+    * (doc_id, line, is_boiler). */
   def lineDedupStream(
       spark: SparkSession,
       docs: DataFrame, // (doc_id, text, ts)
@@ -458,51 +458,74 @@ object StreamIngest {
     override def handleInputRows(
         cell: Long,
         rows: Iterator[(Long, Long, Array[Float], java.sql.Timestamp)],
-        timerValues: TimerValues): Iterator[(Long, Long, Boolean)] = {
-      val held = if (recent.exists()) recent.get().toList else Nil
-      // entries whose lastSeen fell TTL behind the watermark are dead:
-      // always EXCLUDED from dup-checks, but only physically pruned
-      // (full list rewrite) once they exceed PruneSlack of the list —
-      // the lazy-prune contract documented on the class
-      val cutoff = timerValues.getCurrentWatermarkInMs() - ttlMs
-      var live = held.filter(_._3 >= cutoff)
-      val stale = held.size - live.size
-      val prune = stale > 0 &&
-        (stale >= held.size * SemanticDedupProcessor.PruneSlack)
-      val fresh =
-        scala.collection.mutable.ArrayBuffer[(Long, Array[Float], Long)]()
-      val out = scala.collection.mutable.ArrayBuffer[(Long, Long, Boolean)]()
-      var maxTs = Long.MinValue
+        timerValues: TimerValues): Iterator[(Long, Long, Boolean)] =
       // group-iterator order after the shuffle is unspecified: sort
       // by (ts, vec_id) so in-batch admission order is deterministic
-      rows.toSeq.sortBy { case (_, id, _, ts) => (ts.getTime, id) }
-        .foreach { case (_, id, emb, ts) =>
-          maxTs = math.max(maxTs, ts.getTime)
+      TtlWindow.admit(recent, getHandle, timerValues, ttlMs)(_._3)(
+        rows.toSeq.sortBy { case (_, id, _, ts) => (ts.getTime, id) })(
+        _._4.getTime) { case (live, (_, id, emb, ts)) =>
           val dup = live.exists { case (_, e, _) => cosine(e, emb) >= threshold }
-          if (!dup) {
-            val entry = (id, emb, ts.getTime)
-            live = entry :: live
-            fresh += entry
-          }
-          out += ((id, cell, !dup))
+          (if (dup) None else Some((id, emb, ts.getTime)), (id, cell, !dup))
         }
-      if (prune) recent.put(live.toArray) // amortized rewrite drops stale rows
-      else fresh.foreach(recent.appendValue) // the common append-only path
-      getHandle.registerTimer(
-        math.max(maxTs + ttlMs, timerValues.getCurrentWatermarkInMs() + 1))
-      out.iterator
-    }
 
     override def handleExpiredTimer(
         cell: Long, timerValues: TimerValues,
         expiredTimerInfo: ExpiredTimerInfo): Iterator[(Long, Long, Boolean)] = {
-      if (recent.exists()) {
-        val newest = recent.get().map(_._3).foldLeft(Long.MinValue)(math.max)
-        if (newest + ttlMs <= expiredTimerInfo.getExpiryTimeInMs)
-          recent.clear() // TTL eviction — bounded state
-      }
+      TtlWindow.expire(recent, ttlMs, expiredTimerInfo)(_._3)
       Iterator.empty
     }
+  }
+
+  /** The TTL window of the two list-state admissions
+    * ([[SemanticDedupProcessor]], [[FingerprintBandProcessor]]): a
+    * `ListState` of entries stamped with their event time (`tsOf`).
+    * Entries whose time fell TTL behind the watermark are dead: always
+    * EXCLUDED from the checks, but only physically pruned (full list
+    * rewrite) once they reach [[SemanticDedupProcessor.PruneSlack]] of
+    * the list — the lazy-prune contract documented on the semantic
+    * processor. An event-time timer at the newest arrival + TTL clears
+    * the list on expiry, guarded by its newest entry because timers
+    * accumulate on this API. */
+  private object TtlWindow {
+    /** Folds the `arrivals` in order: `step(live, arrival)` returns the
+      * entry the arrival admits, if any (seen by the later arrivals),
+      * and its output row. */
+    def admit[T: scala.reflect.ClassTag, A, R](
+        recent: org.apache.spark.sql.streaming.ListState[T],
+        handle: org.apache.spark.sql.streaming.StatefulProcessorHandle,
+        timerValues: org.apache.spark.sql.streaming.TimerValues,
+        ttlMs: Long)(tsOf: T => Long)(arrivals: Seq[A])(arrivalTs: A => Long)(
+        step: (List[T], A) => (Option[T], R)): Iterator[R] = {
+      val held = if (recent.exists()) recent.get().toList else Nil
+      val cutoff = timerValues.getCurrentWatermarkInMs() - ttlMs
+      var live = held.filter(tsOf(_) >= cutoff)
+      val stale = held.size - live.size
+      val prune = stale > 0 &&
+        (stale >= held.size * SemanticDedupProcessor.PruneSlack)
+      val fresh = scala.collection.mutable.ArrayBuffer[T]()
+      val out = scala.collection.mutable.ArrayBuffer[R]()
+      var maxTs = Long.MinValue
+      arrivals.foreach { a =>
+        maxTs = math.max(maxTs, arrivalTs(a))
+        val (entry, row) = step(live, a)
+        entry.foreach { e => live = e :: live; fresh += e }
+        out += row
+      }
+      if (prune) recent.put(live.toArray) // amortized rewrite drops stale rows
+      else fresh.foreach(recent.appendValue) // the common append-only path
+      handle.registerTimer(
+        math.max(maxTs + ttlMs, timerValues.getCurrentWatermarkInMs() + 1))
+      out.iterator
+    }
+
+    def expire[T](recent: org.apache.spark.sql.streaming.ListState[T],
+        ttlMs: Long, timer: org.apache.spark.sql.streaming.ExpiredTimerInfo)(
+        tsOf: T => Long): Unit =
+      if (recent.exists()) {
+        val newest = recent.get().map(tsOf).foldLeft(Long.MinValue)(math.max)
+        if (newest + ttlMs <= timer.getExpiryTimeInMs)
+          recent.clear() // TTL eviction — bounded state
+      }
   }
 
   /** Exact-verify radius of [[fingerprintDedupStream]] — the batch
@@ -589,48 +612,24 @@ object StreamIngest {
         bucket: Long,
         rows: Iterator[(Long, Long, Long, Long, java.sql.Timestamp)],
         timerValues: TimerValues)
-        : Iterator[(Long, Long, java.sql.Timestamp)] = {
-      val held = if (recent.exists()) recent.get().toList else Nil
-      val cutoff = timerValues.getCurrentWatermarkInMs() - ttlMs
-      var live = held.filter(_._4 >= cutoff)
-      val stale = held.size - live.size
-      val prune = stale > 0 &&
-        (stale >= held.size * SemanticDedupProcessor.PruneSlack)
-      val fresh =
-        scala.collection.mutable.ArrayBuffer[(Long, Long, Long, Long)]()
-      val out = scala.collection.mutable
-        .ArrayBuffer[(Long, Long, java.sql.Timestamp)]()
-      var maxTs = Long.MinValue
+        : Iterator[(Long, Long, java.sql.Timestamp)] =
       // (ts, media_id)-sorted fold: in-batch flag order is deterministic
-      rows.toSeq.sortBy { case (_, id, _, _, ts) => (ts.getTime, id) }
-        .foreach { case (_, id, hi, lo, ts) =>
-          maxTs = math.max(maxTs, ts.getTime)
+      TtlWindow.admit(recent, getHandle, timerValues, ttlMs)(_._4)(
+        rows.toSeq.sortBy { case (_, id, _, _, ts) => (ts.getTime, id) })(
+        _._5.getTime) { case (live, (_, id, hi, lo, ts)) =>
           val m = live.iterator.filter { case (_, phi, plo, _) =>
             java.lang.Long.bitCount(phi ^ hi) +
               java.lang.Long.bitCount(plo ^ lo) <= FingerprintRadius
           }.map(_._1).foldLeft(-1L)((acc, x) =>
             if (acc < 0 || x < acc) x else acc)
-          val entry = (id, hi, lo, ts.getTime)
-          live = entry :: live
-          fresh += entry
-          out += ((id, m, ts))
+          (Some((id, hi, lo, ts.getTime)), (id, m, ts))
         }
-      if (prune) recent.put(live.toArray)
-      else fresh.foreach(recent.appendValue)
-      getHandle.registerTimer(
-        math.max(maxTs + ttlMs, timerValues.getCurrentWatermarkInMs() + 1))
-      out.iterator
-    }
 
     override def handleExpiredTimer(
         bucket: Long, timerValues: TimerValues,
         expiredTimerInfo: ExpiredTimerInfo)
         : Iterator[(Long, Long, java.sql.Timestamp)] = {
-      if (recent.exists()) {
-        val newest = recent.get().map(_._4).foldLeft(Long.MinValue)(math.max)
-        if (newest + ttlMs <= expiredTimerInfo.getExpiryTimeInMs)
-          recent.clear() // TTL eviction — bounded state
-      }
+      TtlWindow.expire(recent, ttlMs, expiredTimerInfo)(_._4)
       Iterator.empty
     }
   }
