@@ -223,27 +223,55 @@ object LlmOps {
     val e = Tables.embeddings(s, d)
     val probes = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("pid"), col("embedding").as("pe"))
-    val cands = e.select(col("vec_id").as("cid"), col("embedding").as("ce"))
-    val w = Window.partitionBy(col("pid")).orderBy(col("sim").desc, col("cid"))
-    cands.join(broadcast(probes), col("pid") =!= col("cid"))
-      .select(col("pid"), col("cid"),
-        round(CosineSimilarityExpr(col("pe"), col("ce")), 4).as("sim"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 5)
-      .select(col("pid"), col("cid"), col("sim"), col("rn"))
-      .orderBy(col("pid"), col("rn"))
+    probeAnswer(candRows(e).join(broadcast(probes)), k = 5)
   }
 
   private val q34Sql =
-    """WITH p AS (SELECT vec_id AS pid, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS pe
+    s"""WITH p AS (SELECT vec_id AS pid, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS pe
       |           FROM embeddings WHERE vec_id < 10),
-      |c AS (SELECT vec_id AS cid, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ce
+      |c AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
       |      FROM embeddings),
-      |s AS (SELECT pid, cid, round(list_cosine_similarity(pe, ce), 4) AS sim
-      |      FROM p CROSS JOIN c WHERE pid <> cid),
-      |r AS (SELECT pid, cid, sim, row_number() OVER (PARTITION BY pid ORDER BY sim DESC, cid) AS rn
-      |      FROM s)
-      |SELECT pid, cid, sim, rn FROM r WHERE rn <= 5 ORDER BY pid, rn""".stripMargin
+      |s AS (${probeScoresSql("p CROSS JOIN c")})
+      |${probeAnswerSql("s", k = 5)}""".stripMargin
+
+  /** (vid, ve, `extra`) candidate rows of a (vec_id, embedding, …)
+    * relation, the probe-set ANN family's candidate side. */
+  private def candRows(df: DataFrame, extra: String*): DataFrame =
+    df.select(col("vec_id").as("vid") +: col("embedding").as("ve") +:
+      extra.map(col): _*)
+
+  /** (pid, vid, `carry`, sim) rows of a probe × candidate relation
+    * `j(pid, pe, vid, ve)`, the probe itself excluded: the 4dp-rounded
+    * cosine the probe-set ANN family ranks on with [[rankTop]]. */
+  private def probeScores(j: DataFrame, carry: String*): DataFrame = j
+    .filter(col("pid") =!= col("vid"))
+    .select((Seq("pid", "vid") ++ carry).map(col) :+
+      round(CosineSimilarityExpr(col("pe"), col("ve")), 4).as("sim"): _*)
+
+  /** A probe-set ANN answer (pid, cid, sim, rn): each probe's top-`k`
+    * [[probeScores]] rows over `j`, in order. */
+  private def probeAnswer(j: DataFrame, k: Int = 3): DataFrame =
+    rankTop(probeScores(j), k = k)
+      .select(col("pid"), col("vid").as("cid"), col("sim"), col("rn"))
+      .orderBy(col("pid"), col("rn"))
+
+  /** [[probeScores]]'s mirror: (pid, vid, `carry`, sim) rows of probes
+    * `p(pid, pe)` × candidates `c(vec_id, emb)` joined by `from`, the
+    * probe excluded. */
+  private def probeScoresSql(from: String, carry: String = "") =
+    s"""SELECT p.pid, c.vec_id AS vid$carry,
+      |         round(list_cosine_similarity(p.pe, c.emb), 4) AS sim
+      |       FROM $from WHERE p.pid <> c.vec_id""".stripMargin
+
+  /** `name(pid, vid)`: each probe's top-3 [[probeScoresSql]] rows. */
+  private def probeTop3Cte(name: String, from: String) =
+    s"$name AS (${top3Sql("pid, vid", s"(${probeScoresSql(from)})")})"
+
+  /** [[probeAnswer]]'s mirror over the scored rows `from(pid, vid, sim)`. */
+  private def probeAnswerSql(from: String, k: Int = 3) =
+    s"""SELECT pid, vid AS cid, sim, rn FROM (
+      |  ${top3Sql("pid, vid, sim", from, withRn = true, k = k)})
+      |ORDER BY pid, rn""".stripMargin
 
   /** "Near-duplicate" cosine gate shared by q34b and q73 (Scala filter +
     * both oracle SQL strings interpolate this one constant). Calibrated to
@@ -296,49 +324,50 @@ object LlmOps {
     * exact baseline; an IVF variant would swap the signature for a
     * nearest-centroid id, same plan shape). */
   def q34c(s: SparkSession, d: String): DataFrame = {
-    val dbl = transform(col("embedding"), x => x.cast("double"))
+    val (probes, cands) = lshSides(s, d)
+    probeAnswer(cands.join(broadcast(probes), Seq("sig")))
+  }
+
+  /** The sign-LSH sides of q34c and q181, both as double vectors with
+    * their 8-bit signature `sig` (signs of the 8 [[lshPlanes]] dot
+    * products): probes (pid, pe, sig) are vec_id < 10, candidates
+    * (vid, ve, sig) the corpus. */
+  private def lshSides(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val sig = lshPlanes.zipWithIndex.map { case (plane, j) =>
-      val planeLit = array(plane.map(lit): _*)
       // codegen'd sequential fold — bit-identical to the
       // aggregate(zip_with(...)) HOF it replaces (same IEEE order)
-      val dot = DotProductExpr(col("dbl"), planeLit)
+      val dot = DotProductExpr(col("dbl"), array(plane.map(lit): _*))
       when(dot >= 0, lit(1 << j)).otherwise(lit(0))
     }.reduce(_ + _)
     val e = Tables.embeddings(s, d)
-      .withColumn("dbl", dbl)
+      .withColumn("dbl", transform(col("embedding"), x => x.cast("double")))
       .withColumn("sig", sig)
-    val probes = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("pid"), col("dbl").as("pe"), col("sig"))
-    val cands = e.select(col("vec_id").as("cid"), col("dbl").as("ce"), col("sig"))
-    val w = Window.partitionBy(col("pid")).orderBy(col("sim").desc, col("cid"))
-    cands.join(broadcast(probes), Seq("sig"))
-      .filter(col("pid") =!= col("cid"))
-      .select(col("pid"), col("cid"),
-        round(CosineSimilarityExpr(col("pe"), col("ce")), 4).as("sim"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
-      .orderBy(col("pid"), col("rn"))
+    (e.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("pid"), col("dbl").as("pe"), col("sig")),
+      e.select(col("vec_id").as("vid"), col("dbl").as("ve"), col("sig")))
   }
 
-  private val q34cSql = {
-    // same ±1 planes expanded as `±dbl[i]` chains (identical IEEE fold)
+  /** [[lshSides]]' mirror: `sg(vec_id, dbl, sig)`, the same ±1 planes
+    * expanded as `±dbl[i]` chains (identical IEEE fold), and the probes
+    * `p(pid, pe, sig)`. */
+  private lazy val lshCtesSql = {
     val sigExpr = lshPlanes.zipWithIndex.map { case (plane, j) =>
       val dot = plane.zipWithIndex.map { case (sgn, i) =>
         (if (sgn > 0) "+" else "-") + s"dbl[${i + 1}]"
       }.mkString("0.0", "", "")
       s"(CASE WHEN ($dot) >= 0 THEN ${1 << j} ELSE 0 END)"
     }.mkString(" + ")
-    s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS dbl
+    s"""e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS dbl
        |           FROM embeddings),
        |sg AS (SELECT vec_id, dbl, $sigExpr AS sig FROM e),
-       |p AS (SELECT vec_id AS pid, dbl AS pe, sig FROM sg WHERE vec_id < 10),
-       |c AS (SELECT vec_id AS cid, dbl AS ce, sig FROM sg),
-       |s AS (SELECT pid, cid, round(list_cosine_similarity(pe, ce), 4) AS sim
-       |      FROM p JOIN c USING (sig) WHERE pid <> cid),
-       |r AS (SELECT pid, cid, sim, row_number() OVER (PARTITION BY pid ORDER BY sim DESC, cid) AS rn
-       |      FROM s)
-       |SELECT pid, cid, sim, rn FROM r WHERE rn <= 3 ORDER BY pid, rn""".stripMargin
+       |p AS (SELECT vec_id AS pid, dbl AS pe, sig FROM sg WHERE vec_id < 10)""".stripMargin
   }
+
+  private lazy val q34cSql =
+    s"""WITH $lshCtesSql,
+       |c AS (SELECT vec_id, dbl AS emb, sig FROM sg),
+       |s AS (${probeScoresSql("p JOIN c USING (sig)")})
+       |${probeAnswerSql("s")}""".stripMargin
 
   /** q181 — MULTI-PROBE sign-LSH ANN (the classic Lv et al. multiprobe
     * technique: probe the query's own bucket PLUS every Hamming-1
@@ -363,99 +392,42 @@ object LlmOps {
     * q167/q176 offline-eval pattern. Oracle: the q34c signature CTEs +
     * an unnested flip list, both arms + counts mirrored. */
   def q181(s: SparkSession, d: String): DataFrame = {
-    val dbl = transform(col("embedding"), x => x.cast("double"))
-    val sig = lshPlanes.zipWithIndex.map { case (plane, j) =>
-      val planeLit = array(plane.map(lit): _*)
-      val dot = DotProductExpr(col("dbl"), planeLit)
-      when(dot >= 0, lit(1 << j)).otherwise(lit(0))
-    }.reduce(_ + _)
-    val e = Tables.embeddings(s, d)
-      .withColumn("dbl", dbl)
-      .withColumn("sig", sig)
-    val probes = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("pid"), col("dbl").as("pe"), col("sig"))
+    val (probes, cands) = lshSides(s, d)
     // flip 0 keeps the probe's own bucket; flips 1<<j are the Hamming-1
     // neighbors — one broadcastable 9-rows-per-probe relation
     val flips = 0 +: (0 until 8).map(1 << _)
     val multis = probes.select(col("pid"), col("pe"),
       explode(array(flips.map(f =>
         col("sig").bitwiseXOR(lit(f))): _*)).as("sig"))
-    val cands = e.select(col("vec_id").as("cid"), col("dbl").as("ce"),
-      col("sig"))
-    def scored(pr: DataFrame): DataFrame = cands
-      .join(broadcast(pr), Seq("sig"))
-      .filter(col("pid") =!= col("cid"))
-      .select(col("pid"), col("cid"),
-        round(CosineSimilarityExpr(col("pe"), col("ce")), 4).as("sim"))
-    val w = Window.partitionBy(col("pid")).orderBy(col("sim").desc, col("cid"))
-    def top3(df: DataFrame): DataFrame = df
-      .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
-      .select(col("pid"), col("cid"))
-    val single = scored(probes)
-    val multi = scored(multis)
-    val exact = top3(
-      cands.drop("sig").crossJoin(broadcast(probes.drop("sig")))
-        .filter(col("pid") =!= col("cid"))
-        .select(col("pid"), col("cid"),
-          round(CosineSimilarityExpr(col("pe"), col("ce")), 4).as("sim")))
-    def hits(arm: DataFrame, nm: String) = top3(arm)
-      .join(exact, Seq("pid", "cid"))
-      .groupBy(col("pid")).agg(count(lit(1)).as(nm))
-    def cnt(arm: DataFrame, nm: String) = arm
-      .groupBy(col("pid")).agg(count(lit(1)).as(nm))
-    probes.select(col("pid"))
-      .join(cnt(single, "cand_single"), Seq("pid"), "left")
-      .join(cnt(multi, "cand_multi"), Seq("pid"), "left")
-      .join(hits(single, "recall_single"), Seq("pid"), "left")
-      .join(hits(multi, "recall_multi"), Seq("pid"), "left")
-      .select(col("pid"),
-        coalesce(col("cand_single"), lit(0L)).as("cand_single"),
-        coalesce(col("cand_multi"), lit(0L)).as("cand_multi"),
-        coalesce(col("recall_single"), lit(0L)).as("recall_single"),
-        coalesce(col("recall_multi"), lit(0L)).as("recall_multi"))
-      .orderBy(col("pid"))
+    val arms = Seq(probes, multis)
+      .map(pr => probeScores(cands.join(broadcast(pr), Seq("sig"))))
+    def top3(df: DataFrame) = rankTop(df).select(col("pid"), col("vid"))
+    val exact = top3(probeScores(
+      cands.drop("sig").crossJoin(broadcast(probes.drop("sig")))))
+    recallPivot(byArm(arms.map(top3)), exact,
+      armPivot(byArm(arms), probes.select(col("pid")),
+        Seq("cand_single", "cand_multi")),
+      Seq("recall_single", "recall_multi"),
+      Seq(col("cand_single"), col("cand_multi")))
   }
 
   private lazy val q181Sql = {
-    val sigExpr = lshPlanes.zipWithIndex.map { case (plane, j) =>
-      val dot = plane.zipWithIndex.map { case (sgn, i) =>
-        (if (sgn > 0) "+" else "-") + s"dbl[${i + 1}]"
-      }.mkString("0.0", "", "")
-      s"(CASE WHEN ($dot) >= 0 THEN ${1 << j} ELSE 0 END)"
-    }.mkString(" + ")
     val flipList = (0 +: (0 until 8).map(1 << _)).mkString(", ")
-    s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS dbl
-       |           FROM embeddings),
-       |sg AS (SELECT vec_id, dbl, $sigExpr AS sig FROM e),
-       |p AS (SELECT vec_id AS pid, dbl AS pe, sig FROM sg WHERE vec_id < 10),
+    s"""WITH $lshCtesSql,
        |mp AS (SELECT pid, pe, xor(sig, f.f) AS sig
        |       FROM p CROSS JOIN (SELECT unnest([$flipList]) AS f) f),
-       |c AS (SELECT vec_id AS cid, dbl AS ce, sig FROM sg),
-       |ss AS (SELECT pid, cid, round(list_cosine_similarity(pe, ce), 4) AS sim
-       |       FROM p JOIN c USING (sig) WHERE pid <> cid),
-       |ms AS (SELECT pid, cid, round(list_cosine_similarity(pe, ce), 4) AS sim
-       |       FROM mp JOIN c USING (sig) WHERE pid <> cid),
-       |ex AS (SELECT pid, cid FROM (
-       |         SELECT p.pid, c.cid, row_number() OVER (PARTITION BY p.pid
-       |             ORDER BY round(list_cosine_similarity(p.pe, c.ce), 4)
-       |               DESC, c.cid) AS rn
-       |         FROM p, c WHERE p.pid <> c.cid) WHERE rn <= 3),
-       |st AS (SELECT pid, cid FROM (
-       |         SELECT pid, cid, row_number() OVER (PARTITION BY pid
-       |             ORDER BY sim DESC, cid) AS rn FROM ss) WHERE rn <= 3),
-       |mt AS (SELECT pid, cid FROM (
-       |         SELECT pid, cid, row_number() OVER (PARTITION BY pid
-       |             ORDER BY sim DESC, cid) AS rn FROM ms) WHERE rn <= 3),
+       |c AS (SELECT vec_id, dbl AS emb, sig FROM sg),
+       |ss AS (${probeScoresSql("p JOIN c USING (sig)")}),
+       |ms AS (${probeScoresSql("mp p JOIN c USING (sig)")}),
+       |${probeTop3Cte("ex", "p, c")},
+       |st AS (${top3Sql("pid, vid", "ss")}),
+       |mt AS (${top3Sql("pid, vid", "ms")}),
        |cs AS (SELECT pid, CAST(count(*) AS BIGINT) AS cand_single
        |       FROM ss GROUP BY pid),
        |cm AS (SELECT pid, CAST(count(*) AS BIGINT) AS cand_multi
        |       FROM ms GROUP BY pid),
-       |rs AS (SELECT st.pid, CAST(count(*) AS BIGINT) AS recall_single
-       |       FROM st JOIN ex ON st.pid = ex.pid AND st.cid = ex.cid
-       |       GROUP BY st.pid),
-       |rm AS (SELECT mt.pid, CAST(count(*) AS BIGINT) AS recall_multi
-       |       FROM mt JOIN ex ON mt.pid = ex.pid AND mt.cid = ex.cid
-       |       GROUP BY mt.pid)
+       |${recallCte("rs", "st", "ex", "recall_single")},
+       |${recallCte("rm", "mt", "ex", "recall_multi")}
        |SELECT p.pid,
        |  COALESCE(cs.cand_single, 0) AS cand_single,
        |  COALESCE(cm.cand_multi, 0) AS cand_multi,
@@ -712,8 +684,7 @@ object LlmOps {
     * ids as the blocking key. */
   def q96(s: SparkSession, d: String): DataFrame = {
     val vq = Tables.embeddings(s, d).select(col("vec_id"),
-      transform(col("embedding"),
-        v => round(v.cast("double") * 10000, 0).cast("long")).as("vq"))
+      quantized(col("embedding")).as("vq"))
     graft.operators.KMeans.lloyd(vq, "vec_id", "vq", k = 8, iters = 2)
       .select(col("vec_id"), col("cluster"), col("dist2"))
       .orderBy(col("vec_id"))
@@ -806,8 +777,7 @@ object LlmOps {
   def q99(s: SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d)
     val vq = e.select(col("vec_id"),
-      transform(col("embedding"),
-        v => round(v.cast("double") * 10000, 0).cast("long")).as("vq"))
+      quantized(col("embedding")).as("vq"))
     val clusters = graft.operators.KMeans.lloyd(vq, "vec_id", "vq", k = 8, iters = 2)
       .select(col("vec_id"), col("cluster"))
     val withC = e.join(clusters, "vec_id")
@@ -859,8 +829,7 @@ object LlmOps {
   def q151(s: SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d)
     val vq = e.select(col("vec_id"),
-      transform(col("embedding"),
-        v => round(v.cast("double") * 10000, 0).cast("long")).as("vq"))
+      quantized(col("embedding")).as("vq"))
     val clusters = graft.operators.KMeans.lloyd(vq, "vec_id", "vq", k = 8, iters = 2)
       .select(col("vec_id"), col("cluster"))
     val withC = e.join(clusters, "vec_id")
@@ -916,8 +885,7 @@ object LlmOps {
     import s.implicits._
     val dims = 64
     val vq = Tables.embeddings(s, d).select(
-      transform(col("embedding"),
-        v => round(v.cast("double") * 10000, 0).cast("long")).as("vq"))
+      quantized(col("embedding")).as("vq"))
     val entries = vq.agg(new graft.functions.GramMatrix(dims).agg(col("vq")).as("g"))
       .select(posexplode(col("g")).as(Seq("idx", "gram")))
     val pairs = (for { i <- 0 until dims; j <- i until dims }
@@ -987,8 +955,7 @@ object LlmOps {
   /** The corpus quantized to longs — shared base of the PQ/IVF family. */
   private def pqQuantized(s: SparkSession, d: String): DataFrame =
     Tables.embeddings(s, d).select(col("vec_id"),
-      transform(col("embedding"),
-        v => round(v.cast("double") * 10000, 0).cast("long")).as("vq"))
+      quantized(col("embedding")).as("vq"))
 
   /** q104 — product-quantized ANN (the compression half of the ANN
     * story, next to q34c sign-LSH and q34d IVF which give the probe-set
@@ -1017,23 +984,26 @@ object LlmOps {
       .limit(10)
   }
 
+  /** The PQ codebooks' Lloyd chains as CTEs (q104, q110): chain j over
+    * sub-vector slice j of `pqbase`, its CTEs prefixed `s${j}_`. */
+  private def pqChainsSql: String = (0 until PqM).map { j =>
+    val sub = PqDims / PqM
+    val lo = j * sub + 1; val hi = (j + 1) * sub
+    lloydCteChain(PqK.toString, s"SELECT vec_id, vq[$lo:$hi] AS vq FROM pqbase", s"s${j}_")
+  }.mkString(",\n")
+
   private val q104Sql = {
-    val (m, k, sub) = (8, 64, 8)
-    val chains = (0 until m).map { j =>
-      val lo = j * sub + 1; val hi = (j + 1) * sub
-      lloydCteChain(k.toString, s"SELECT vec_id, vq[$lo:$hi] AS vq FROM pqbase", s"s${j}_")
-    }
-    val scores = (0 until m).map { j =>
+    val scores = (0 until PqM).map { j =>
       s"""score$j AS (SELECT b.vec_id, ${sqDistSql("p.vq", "c.cent")} AS dj
          |  FROM s${j}_b3 b JOIN s${j}_c2 c ON b.cluster = c.cid,
          |       (SELECT vq FROM s${j}_q ORDER BY vec_id LIMIT 1) p)""".stripMargin
     }
     s"""WITH pqbase AS ($quantizedSrcSql),
-       |${chains.mkString(",\n")},
+       |$pqChainsSql,
        |${scores.mkString(",\n")}
        |SELECT score0.vec_id,
-       |       CAST(${(0 until m).map(j => s"score$j.dj").mkString(" + ")} AS BIGINT) AS adc
-       |FROM score0 ${(1 until m).map(j => s"JOIN score$j USING (vec_id)").mkString(" ")}
+       |       CAST(${(0 until PqM).map(j => s"score$j.dj").mkString(" + ")} AS BIGINT) AS adc
+       |FROM score0 ${(1 until PqM).map(j => s"JOIN score$j USING (vec_id)").mkString(" ")}
        |WHERE vec_id <> (SELECT min(vec_id) FROM pqbase)
        |ORDER BY adc, vec_id LIMIT 10""".stripMargin
   }
@@ -1062,8 +1032,7 @@ object LlmOps {
       s2
     }
     // 10 probes: bounded driver rows by design (per-query ADC state)
-    val probes = pqQuantized(s, d)
-      .filter(col("vec_id") >= 16 && col("vec_id") < 26)
+    val probes = probeSet(pqQuantized(s, d))
       .collect().map { r =>
         val pid = r.getLong(0)
         val pvq = r.getSeq[Long](1).toArray
@@ -1087,11 +1056,7 @@ object LlmOps {
   }
 
   private val q110Sql = {
-    val (m, k, sub) = (PqM, PqK, PqDims / PqM)
-    val chains = (0 until m).map { j =>
-      val lo = j * sub + 1; val hi = (j + 1) * sub
-      lloydCteChain(k.toString, s"SELECT vec_id, vq[$lo:$hi] AS vq FROM pqbase", s"s${j}_")
-    }
+    val (m, sub) = (PqM, PqDims / PqM)
     val sj = (0 until m).map { j =>
       val lo = j * sub + 1; val hi = (j + 1) * sub
       s"""sc$j AS (SELECT cand.pid, cand.cid,
@@ -1106,10 +1071,10 @@ object LlmOps {
        |             ORDER BY ${sqDistSql("b.vq", "c.cvq")}, c.ccid) AS rn
        |         FROM pqbase b CROSS JOIN cents c),
        |cell AS (SELECT vec_id, ccid AS cell FROM casg WHERE rn = 1),
-       |${chains.mkString(",\n")},
+       |$pqChainsSql,
        |pp AS (SELECT p.vec_id AS pid, p.vq AS pvq, pc.cell
        |       FROM pqbase p JOIN cell pc ON pc.vec_id = p.vec_id
-       |       WHERE p.vec_id >= 16 AND p.vec_id < 26),
+       |       WHERE ${probeSetSql("p.vec_id")}),
        |cand AS (SELECT pp.pid, cc.vec_id AS cid, pp.pvq
        |         FROM pp JOIN cell cc ON cc.cell = pp.cell AND cc.vec_id <> pp.pid),
        |${sj.mkString(",\n")},
@@ -2493,23 +2458,11 @@ object LlmOps {
   def q34d(s: SparkSession, d: String): DataFrame = {
     val vq = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding"),
-        transform(col("embedding"),
-          v => round(v.cast("double") * 10000, 0).cast("long")).as("vq"))
+        quantized(col("embedding")).as("vq"))
     val assign = graft.operators.KMeans.lloyd(vq, "vec_id", "vq", k = 16, iters = 2)
       .select(col("vec_id"), col("embedding"), col("cluster").as("cell"))
-    val probes = assign.filter(col("vec_id") >= 16 && col("vec_id") < 26)
-      .select(col("vec_id").as("pid"), col("embedding").as("pe"), col("cell"))
-    val cands = assign
-      .select(col("vec_id").as("cid"), col("embedding").as("ce"), col("cell"))
-    val w = Window.partitionBy(col("pid")).orderBy(col("sim").desc, col("cid"))
-    cands.join(broadcast(probes), Seq("cell"))
-      .filter(col("pid") =!= col("cid"))
-      .select(col("pid"), col("cid"),
-        round(CosineSimilarityExpr(col("pe"), col("ce")), 4).as("sim"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
-      .select(col("pid"), col("cid"), col("sim"), col("rn"))
-      .orderBy(col("pid"), col("rn"))
+    probeAnswer(candRows(assign, "cell")
+      .join(broadcast(probeRows(assign, col("cell"))), Seq("cell")))
   }
 
   private lazy val q34dSql =
@@ -2519,14 +2472,9 @@ object LlmOps {
       |      FROM embeddings),
       |cell AS (SELECT e.vec_id, emb, cl.cell FROM e JOIN cl USING (vec_id)),
       |p AS (SELECT vec_id AS pid, emb AS pe, cell FROM cell
-      |      WHERE vec_id >= 16 AND vec_id < 26),
-      |s AS (SELECT pid, c.vec_id AS cid,
-      |        round(list_cosine_similarity(pe, c.emb), 4) AS sim
-      |      FROM p JOIN cell c USING (cell) WHERE pid <> c.vec_id),
-      |r AS (SELECT pid, cid, sim,
-      |        row_number() OVER (PARTITION BY pid ORDER BY sim DESC, cid) AS rn
-      |      FROM s)
-      |SELECT pid, cid, sim, rn FROM r WHERE rn <= 3 ORDER BY pid, rn""".stripMargin
+      |      WHERE ${probeSetSql()}),
+      |s AS (${probeScoresSql("p JOIN cell c USING (cell)")})
+      |${probeAnswerSql("s")}""".stripMargin
 
   /** q61 — near-dup CLUSTERS: connected components over the q35 pair graph
     * (Jaccard ≥ 0.8), i.e. the step that turns pairwise near-dup hits into
@@ -3511,19 +3459,15 @@ object LlmOps {
       val e = Tables.embeddings(s, dir)
       val probes = e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("pid"), col("embedding").as("pe"))
-      val cands = e.select(col("vec_id").as("cid"), col("embedding").as("ce"))
-      val w = Window.partitionBy(col("pid"), col("dims"))
-        .orderBy(col("sim").desc, col("cid"))
-      val ranked = cands.join(broadcast(probes), col("pid") =!= col("cid"))
-        .select(col("pid"), col("cid"),
+      val scored = candRows(e).join(broadcast(probes), col("pid") =!= col("vid"))
+        .select(col("pid"), col("vid"),
           explode(array(lit(64), lit(48), lit(32), lit(16))).as("dims"),
-          col("pe"), col("ce"))
-        .select(col("pid"), col("cid"), col("dims"),
+          col("pe"), col("ve"))
+        .select(col("pid"), col("vid"), col("dims"),
           round(CosineSimilarityExpr(slice(col("pe"), lit(1), col("dims")),
-            slice(col("ce"), lit(1), col("dims"))), 4).as("sim"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
-        .select(col("pid"), col("dims"), col("rank"), col("cid"))
+            slice(col("ve"), lit(1), col("dims"))), 4).as("sim"))
+      val ranked = rankTop(scored, Seq("pid", "dims"), k = 5).select(col("pid"),
+        col("dims"), col("rn").as("rank"), col("vid").as("cid"))
       graft.operators.Scratch.materializePath(ranked, "mrl-ranked")
     }
     Tables.parquet(s, path)
@@ -3572,29 +3516,27 @@ object LlmOps {
   }
 
   private val q119Sql =
-    """WITH p AS (SELECT vec_id AS pid,
+    s"""WITH p AS (SELECT vec_id AS pid,
       |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS pe
       |           FROM embeddings WHERE vec_id < 10),
-      |c AS (SELECT vec_id AS cid,
-      |        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ce
+      |c AS (SELECT vec_id AS vid,
+      |        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ve
       |      FROM embeddings),
       |dd AS (SELECT unnest([64, 48, 32, 16]) AS dims),
-      |sc AS (SELECT pid, cid, dims,
+      |sc AS (SELECT pid, vid, dims,
       |         round(list_cosine_similarity(list_slice(pe, 1, dims),
-      |                                      list_slice(ce, 1, dims)), 4) AS sim
-      |       FROM p CROSS JOIN c CROSS JOIN dd WHERE pid <> cid),
-      |rk AS (SELECT pid, cid, dims, row_number() OVER (
-      |         PARTITION BY pid, dims ORDER BY sim DESC, cid) AS rank
-      |       FROM sc),
-      |t5 AS (SELECT pid, cid, dims, rank FROM rk WHERE rank <= 5),
-      |fl AS (SELECT pid, cid, rank AS rank_full FROM t5 WHERE dims = 64),
-      |lv AS (SELECT pid, cid, dims, rank FROM t5 WHERE dims < 64),
+      |                                      list_slice(ve, 1, dims)), 4) AS sim
+      |       FROM p CROSS JOIN c CROSS JOIN dd WHERE pid <> vid),
+      |t5 AS (${top3Sql("pid, vid, dims", "sc", withRn = true, k = 5,
+                  keys = "pid, dims")}),
+      |fl AS (SELECT pid, vid, rn AS rank_full FROM t5 WHERE dims = 64),
+      |lv AS (SELECT pid, vid, dims, rn FROM t5 WHERE dims < 64),
       |ov AS (SELECT lv.pid, lv.dims, CAST(count(*) AS BIGINT) AS n_overlap
-      |       FROM lv JOIN fl ON lv.pid = fl.pid AND lv.cid = fl.cid
+      |       FROM lv JOIN fl ON lv.pid = fl.pid AND lv.vid = fl.vid
       |       GROUP BY lv.pid, lv.dims),
       |ag AS (SELECT lv.pid, lv.dims, CAST(count(*) AS BIGINT) AS n_rank_agree
-      |       FROM lv JOIN fl ON lv.pid = fl.pid AND lv.cid = fl.cid
-      |                      AND lv.rank = fl.rank_full
+      |       FROM lv JOIN fl ON lv.pid = fl.pid AND lv.vid = fl.vid
+      |                      AND lv.rn = fl.rank_full
       |       GROUP BY lv.pid, lv.dims),
       |base AS (SELECT pid, dims FROM p CROSS JOIN dd WHERE dims < 64)
       |SELECT base.pid, base.dims,
@@ -4483,8 +4425,7 @@ object LlmOps {
       ordered: Boolean, knownN: Option[Long] = None): DataFrame = {
     val vq = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding"),
-        transform(col("embedding"),
-          v => round(v.cast("double") * 10000, 0).cast("long")).as("vq"))
+        quantized(col("embedding")).as("vq"))
     // cell count scales as √(n/8): assign cost n·c and within-cell cost
     // n²/c balance at n^1.5 — the single-level IVF optimum (measured:
     // 13.5× at 10× with fixed 16 cells → ~4× after). Floor of 16 keeps
@@ -5595,10 +5536,8 @@ object LlmOps {
     val g = Tables.parquet(s, knnGraphPath(s, d))
     val e0 = vecEmbeddings(s, d)
     val layout = landedLayout(s, d)
-    val p = probeSet(layout).select(col("vec_id").as("pid"),
-      col("embedding").as("pe"), col("cell"), col("cell2"))
-    val cands = layout
-      .select(col("vec_id").as("vid"), col("embedding").as("ve"), col("cell"))
+    val p = probeRows(layout, col("cell"), col("cell2"))
+    val cands = candRows(layout, "cell")
     serveAnswer(beamWalk(probe2Entry(cands, p), g, e0))
   }
 
@@ -5613,6 +5552,14 @@ object LlmOps {
   /** The serve family's probe set: vec_id 16..25, the q149 class. */
   private def probeSet(df: DataFrame): DataFrame =
     df.filter(col("vec_id") >= 16 && col("vec_id") < 26)
+
+  /** (pid, pe, `extra`) rows of a layout's [[probeSet]]. */
+  private def probeRows(layout: DataFrame, extra: Column*): DataFrame =
+    probeSet(layout).select(
+      col("vec_id").as("pid") +: col("embedding").as("pe") +: extra: _*)
+
+  /** [[probeSet]]'s mirror over the id column `v`. */
+  private def probeSetSql(v: String = "vec_id") = s"$v >= 16 AND $v < 26"
 
   /** Scored (pid, pe, vid, sim) walk rows from a probe × candidate
     * relation, the probe itself excluded. */
@@ -5636,12 +5583,12 @@ object LlmOps {
       round(CosineSimilarityExpr(col("pe"), typedlit(entryEmb)), 4)
         .as("sim"))
 
-  /** Top-3 rows per `keys` in (sim desc, vid) order, ranked `rn`. */
+  /** Top-`k` rows per `keys` in (sim desc, vid) order, ranked `rn`. */
   private def rankTop(df: DataFrame,
-      keys: Seq[String] = Seq("pid")): DataFrame = {
+      keys: Seq[String] = Seq("pid"), k: Int = 3): DataFrame = {
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(col("sim").desc, col("vid"))
-    df.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
+    df.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
   }
 
   /** A walk's answer rows: the per-`keys` top-3 of the visited set, the
@@ -5655,23 +5602,31 @@ object LlmOps {
     serveTop(visited).select(col("pid"), col("vid"), col("sim"), col("rn"))
       .orderBy(col("pid"), col("rn"))
 
-  /** Per-probe recall pivot of the serve reports (q177, q179): answer
-    * rows `top(arm, pid, vid)` that hit the ground truth `exact(pid,
-    * vid)`, counted per probe into one column per arm (arm i → `arms(i)`),
-    * 0 where none hit; `base` holds one row per probe plus the `carry`
-    * columns. */
+  /** Per-probe recall pivot of the serve reports (q167, q176, q177,
+    * q179, q181): answer rows `top(arm, pid, vid)` that hit the ground
+    * truth `exact(pid, vid)`, counted by [[armPivot]]. */
   private def recallPivot(top: DataFrame, exact: DataFrame, base: DataFrame,
-      arms: Seq[String], carry: Seq[Column] = Nil): DataFrame = {
+      arms: Seq[String], carry: Seq[Column] = Nil): DataFrame =
+    armPivot(top.join(exact, Seq("pid", "vid")), base, arms, carry)
+
+  /** Arm-tagged rows `rows(arm, pid)` counted per probe into one column
+    * per arm (arm i → `arms(i)`), 0 where none; `base` holds one row per
+    * probe plus the `carry` columns. */
+  private def armPivot(rows: DataFrame, base: DataFrame, arms: Seq[String],
+      carry: Seq[Column] = Nil): DataFrame = {
     val counts = arms.zipWithIndex.map { case (a, i) =>
       sum(when(col("arm") === i, 1L).otherwise(0L)).as(a)
     }
-    val hits = top.join(exact, Seq("pid", "vid"))
-      .groupBy(col("pid")).agg(counts.head, counts.tail: _*)
+    val hits = rows.groupBy(col("pid")).agg(counts.head, counts.tail: _*)
     base.join(hits, Seq("pid"), "left")
       .select(col("pid") +: carry ++:
         arms.map(a => coalesce(col(a), lit(0L)).as(a)): _*)
       .orderBy(col("pid"))
   }
+
+  /** `arms` as one relation, each row tagged with its index `arm`. */
+  private def byArm(arms: Seq[DataFrame]): DataFrame = arms.zipWithIndex
+    .map { case (a, i) => a.withColumn("arm", lit(i)) }.reduce(_ unionByName _)
 
   /** The shared greedy beam walk over a landed graph (q173's rounds,
     * factored so q177 can run it from different ENTRY sets): from
@@ -5741,8 +5696,7 @@ object LlmOps {
         .filter(col("pid") =!= col("vid"))
         .join(vin.select((keys :+ "vid").map(col): _*),
           keys :+ "vid", "left_anti")
-        .join(e0.select(col("vec_id").as("vid"), col("embedding").as("ve")),
-          Seq("vid"))
+        .join(candRows(e0), Seq("vid"))
         .select(kCols ++ Seq(col("pe"), col("vid"),
           round(CosineSimilarityExpr(col("pe"), col("ve")), 4).as("sim")): _*)
       visited = vin.unionByName(fresh)
@@ -5760,24 +5714,26 @@ object LlmOps {
 
   /** The oracle's probe CTE `pr(pid, pe)` over `e` ([[probeSet]]). */
   private val probeCteSql =
-    """pr AS (SELECT vec_id AS pid, emb AS pe FROM e
-      |       WHERE vec_id >= 16 AND vec_id < 26)""".stripMargin
+    s"""pr AS (SELECT vec_id AS pid, emb AS pe FROM e
+      |       WHERE ${probeSetSql()})""".stripMargin
 
   /** [[probe2Entry]]'s mirror: each probe's `pp` rows against `cellv`. */
   private def probe2EntryCte(name: String) =
     s"""$name AS (SELECT p.pid, c.vec_id AS vid,
       |         round(list_cosine_similarity(p.pe, c.emb), 4) AS sim
       |       FROM pp p JOIN cellv c USING (cell)
-      |       WHERE p.pid >= 16 AND p.pid < 26 AND p.pid <> c.vec_id)"""
+      |       WHERE ${probeSetSql("p.pid")} AND p.pid <> c.vec_id)"""
       .stripMargin
 
-  /** Per-probe top-3 `cols` of the walk rows `from`, in (sim desc, vid)
-    * order; `rn` appended to the output columns when `withRn`. */
-  private def top3Sql(cols: String, from: String, withRn: Boolean = false) =
+  /** [[rankTop]]'s mirror: per-`keys` top-`k` `cols` of the rows
+    * `from`, in (sim desc, vid) order; `rn` appended to the output
+    * columns when `withRn`. */
+  private def top3Sql(cols: String, from: String, withRn: Boolean = false,
+      k: Int = 3, keys: String = "pid") =
     s"""SELECT $cols${if (withRn) ", rn" else ""} FROM (
-      |        SELECT $cols, row_number() OVER (PARTITION BY pid
+      |        SELECT $cols, row_number() OVER (PARTITION BY $keys
       |            ORDER BY sim DESC, vid) AS rn
-      |        FROM $from) WHERE rn <= 3""".stripMargin
+      |        FROM $from) WHERE rn <= $k""".stripMargin
 
   /** [[serveAnswer]]'s mirror over walk CTE `v`. */
   private def serveAnswerSql(v: String) =
@@ -5827,14 +5783,11 @@ object LlmOps {
     val g = Tables.parquet(s, knnGraphPath(s, d))
     val e0 = vecEmbeddings(s, d)
     val layout = landedLayout(s, d)
-    val p = probeSet(layout).select(col("vec_id").as("pid"),
-      col("embedding").as("pe"), col("cell"), col("cell2"))
+    val p = probeRows(layout, col("cell"), col("cell2"))
     val probes = p.select(col("pid"), col("pe"))
     val own = p.select(col("pid"), col("pe"), col("cell"))
-    val cands = layout
-      .select(col("vec_id").as("vid"), col("embedding").as("ve"), col("cell"))
-    val entries = e0.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("vid"), col("embedding").as("ve"))
+    val cands = candRows(layout, "cell")
+    val entries = candRows(e0.filter(col("vec_id") < 8))
     // r19 fourth arm — q187's hierarchical routing at the SAME layer-0
     // walk budget as the other arms (3 rounds, beam 8; q187 itself runs
     // 4 rounds): layer-1 coarse walk from the persisted entry, its
@@ -5852,12 +5805,9 @@ object LlmOps {
     // per arm); Catalyst compiles 3 round plans instead of 12, and the
     // report's wall was ~entirely that planning (measured ~11 s plan vs
     // 0.1 s exec cold at sf0.1).
-    val v0all = scoredPairs(broadcast(probes).crossJoin(entries))
-      .withColumn("arm", lit(0))
-      .unionByName(scoredPairs(cands.join(broadcast(own), Seq("cell")))
-        .withColumn("arm", lit(1)))
-      .unionByName(probe2Entry(cands, p).withColumn("arm", lit(2)))
-      .unionByName(hEntries.withColumn("arm", lit(3)))
+    val v0all = byArm(Seq(scoredPairs(broadcast(probes).crossJoin(entries)),
+      scoredPairs(cands.join(broadcast(own), Seq("cell"))),
+      probe2Entry(cands, p), hEntries))
     val top3All = serveTop(beamWalk(v0all, g, e0, keys = Seq("arm", "pid")),
       Seq("arm", "pid")).select(col("arm"), col("pid"), col("vid"))
     val exact = serveTop(scoredPairs(cands.drop("cell")
@@ -5950,14 +5900,11 @@ object LlmOps {
     val lab = Tables.embeddings(s, d)
       .select(col("vec_id").as("vid"), col("label"))
     val layout = landedLayout(s, d)
-    val p = probeSet(layout).select(col("vec_id").as("pid"),
-      col("embedding").as("pe"), col("label").as("plabel"), col("cell"),
+    val p = probeRows(layout, col("label").as("plabel"), col("cell"),
       col("cell2"))
     val probes = p.select(col("pid"), col("pe"))
     val plab = p.select(col("pid"), col("plabel"))
-    val cands = layout
-      .select(col("vec_id").as("vid"), col("embedding").as("ve"),
-        col("label"), col("cell"))
+    val cands = candRows(layout, "label", "cell")
     // keep only same-label (pid, vid) rows, and every row of arm `pass`
     def labelled(df: DataFrame, pass: Option[Int] = None): DataFrame = {
       val same = col("label") === col("plabel")
@@ -5973,8 +5920,7 @@ object LlmOps {
     // filter passes arm-0 rows unconditionally — per-arm semantics are
     // identical to two separate walks while Catalyst compiles half the
     // round plans (the report's wall is planning, not execution).
-    val v0all = v0.withColumn("arm", lit(0))
-      .unionByName(labelled(v0).withColumn("arm", lit(1)))
+    val v0all = byArm(Seq(v0, labelled(v0)))
     val walked = beamWalk(v0all, g, e0, expandFilter = labelled(_, Some(0)),
       keys = Seq("arm", "pid"))
     // ONE post-walk ranking + ONE hits join (r21, the q177 pivot): the
@@ -6086,8 +6032,7 @@ object LlmOps {
   private def hierServe(s: SparkSession, d: String, g0: DataFrame,
       g1: DataFrame, entryId: Long, entryEmb: Seq[Float]): DataFrame = {
     val e0 = vecEmbeddings(s, d)
-    val probes = probeSet(e0)
-      .select(col("vec_id").as("pid"), col("embedding").as("pe"))
+    val probes = probeRows(e0)
     serveAnswer(beamWalk(hierEntries(probes, g1, e0, entryId, entryEmb),
       g0, e0, rounds = 4))
   }
@@ -6457,8 +6402,7 @@ object LlmOps {
     import s.implicits._
     val vq = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding"),
-        transform(col("embedding"),
-          v => round(v.cast("double") * 10000, 0).cast("long")).as("vq"))
+        quantized(col("embedding")).as("vq"))
     val n = vq.count()
     val totalCells = math.max(16L, math.ceil(math.sqrt(n / 8.0)).toLong)
     val k2 = math.ceil(totalCells / 4.0).toInt
@@ -6535,10 +6479,8 @@ object LlmOps {
     * gain vs exact; LlmOpsSpec proves a planted cross-cell neighbor is
     * recovered). Cost: ≤ 2× the probe-side join fan-out, zero extra
     * shuffles (the second cell is the same map-side argmin). */
-  def q149(s: SparkSession, d: String): DataFrame = {
-    val (path, _) = ivf2Cache.getOrCompute(d)(ivf2Build(s, _))
-    ivf2Serve(Tables.parquet(s, path))
-  }
+  def q149(s: SparkSession, d: String): DataFrame =
+    ivf2Serve(landedLayout(s, d))
 
   /** PROBE-2 WIDENING, the one definition of the two-cell probe
     * discipline (r13 review: this pattern had five hand-rolled copies):
@@ -6559,22 +6501,9 @@ object LlmOps {
     * cells = own assignment + second probe cell, exact in-cell cosine
     * re-rank, top-3 with (sim desc, id) tiebreaks. */
   private def ivf2Serve(layout: DataFrame): DataFrame = {
-    val probes = widenProbes(
-      layout.filter(col("vec_id") >= 16 && col("vec_id") < 26)
-        .select(col("vec_id").as("pid"), col("embedding").as("pe"),
-          col("cell"), col("cell2")),
-      Seq("pid", "pe"))
-    val cands = layout
-      .select(col("vec_id").as("cid"), col("embedding").as("ce"), col("cell"))
-    val w = Window.partitionBy(col("pid")).orderBy(col("sim").desc, col("cid"))
-    cands.join(broadcast(probes), Seq("cell"))
-      .filter(col("pid") =!= col("cid"))
-      .select(col("pid"), col("cid"),
-        round(CosineSimilarityExpr(col("pe"), col("ce")), 4).as("sim"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
-      .select(col("pid"), col("cid"), col("sim"), col("rn"))
-      .orderBy(col("pid"), col("rn"))
+    val probes = probeRows(layout, col("cell"), col("cell2"))
+    probeAnswer(candRows(layout, "cell")
+      .join(broadcast(widenProbes(probes, Seq("pid", "pe"))), Seq("cell")))
   }
 
   private val ivf2K2Sub = "(SELECT k2 FROM nk)"
@@ -6617,7 +6546,7 @@ object LlmOps {
     * chain's rn = 2 coarse row, then a (dist2, cid)-tiebreak argmin
     * over that cell's landed sub-book). */
   private def ivf2Probe2CtesSql(src: String,
-      pred: String = "vec_id >= 16 AND vec_id < 26"): String = {
+      pred: String = probeSetSql()): String = {
     val subUnion = (0 until 4).map { c =>
       s"SELECT $c AS coarse, cid, cent FROM u${c}_c2"
     }.mkString("\n        UNION ALL ")
@@ -6643,14 +6572,8 @@ object LlmOps {
     * against layout `src`, exact in-cell cosine, top-3. */
   private def ivf2ServeSql(src: String): String =
     s"""${ivf2Probe2CtesSql(src)},
-      |s AS (SELECT pid, c.vec_id AS cid,
-      |        round(list_cosine_similarity(pe, c.emb), 4) AS sim
-      |      FROM pp JOIN $src c USING (cell) WHERE pid <> c.vec_id),
-      |r AS (SELECT pid, cid, sim,
-      |        row_number() OVER (PARTITION BY pid ORDER BY sim DESC, cid) AS rn
-      |      FROM s)
-      |SELECT pid, cid, sim, rn FROM r WHERE rn <= 3 ORDER BY pid, rn"""
-      .stripMargin
+      |s AS (${probeScoresSql(s"pp p JOIN $src c USING (cell)")})
+      |${probeAnswerSql("s")}""".stripMargin
 
   private lazy val q149Sql =
     s"""WITH $ivf2ChainsSql,
@@ -6986,70 +6909,28 @@ object LlmOps {
     * one corpus scan — the standard offline recall-eval job); both
     * serve arms are the production cell-blocked joins. */
   def q167(s: SparkSession, d: String): DataFrame = {
-    val (path, _) = ivf2Cache.getOrCompute(d)(ivf2Build(s, _))
-    val assign = Tables.parquet(s, path)
-    val p = assign.filter(col("vec_id") >= 16 && col("vec_id") < 26)
-      .select(col("vec_id").as("pid"), col("embedding").as("pe"),
-        col("cell"), col("cell2"))
-    val own = p.select(col("pid"), col("pe"), col("cell"))
-    val widened = widenProbes(p, Seq("pid", "pe"))
-    val cands = assign
-      .select(col("vec_id").as("cid"), col("embedding").as("ce"), col("cell"))
-    val w = Window.partitionBy(col("pid")).orderBy(col("sim").desc, col("cid"))
-    def top3(joined: DataFrame): DataFrame = joined
-      .filter(col("pid") =!= col("cid"))
-      .select(col("pid"), col("cid"),
-        round(CosineSimilarityExpr(col("pe"), col("ce")), 4).as("sim"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
-      .select(col("pid"), col("cid"))
-    val exact = top3(cands.crossJoin(broadcast(own.drop("cell"))))
-    val arm1 = top3(cands.join(broadcast(own), Seq("cell")))
-    val arm2 = top3(cands.join(broadcast(widened), Seq("cell")))
-    def hits(arm: DataFrame, nm: String) = arm.join(exact, Seq("pid", "cid"))
-      .groupBy(col("pid")).agg(count(lit(1)).as(nm))
-    own.select(col("pid"))
-      .join(hits(arm1, "recall1"), Seq("pid"), "left")
-      .join(hits(arm2, "recall2"), Seq("pid"), "left")
-      .select(col("pid"),
-        coalesce(col("recall1"), lit(0L)).as("recall1"),
-        coalesce(col("recall2"), lit(0L)).as("recall2"))
-      .orderBy(col("pid"))
+    val layout = landedLayout(s, d)
+    val p = probeRows(layout, col("cell"), col("cell2"))
+    val own = p.drop("cell2")
+    val cands = candRows(layout, "cell")
+    def top3(j: DataFrame) =
+      rankTop(probeScores(j)).select(col("pid"), col("vid"))
+    val arms = Seq(own, widenProbes(p, Seq("pid", "pe")))
+      .map(pr => top3(cands.join(broadcast(pr), Seq("cell"))))
+    recallPivot(byArm(arms),
+      top3(cands.crossJoin(broadcast(own.drop("cell")))),
+      own.select(col("pid")), Seq("recall1", "recall2"))
   }
 
   private lazy val q167Sql =
     s"""WITH $ivf2ChainsSql,
       |$ivf2AsgCtesSql,
       |${ivf2Probe2CtesSql("cellv")},
-      |ex AS (SELECT pid, cid FROM (
-      |         SELECT p.pid, c.vec_id AS cid, row_number() OVER (
-      |             PARTITION BY p.pid
-      |             ORDER BY round(list_cosine_similarity(p.pe, c.emb), 4)
-      |               DESC, c.vec_id) AS rn
-      |         FROM pown p, e c WHERE p.pid <> c.vec_id)
-      |       WHERE rn <= 3),
-      |a1 AS (SELECT pid, cid FROM (
-      |         SELECT p.pid, c.vec_id AS cid, row_number() OVER (
-      |             PARTITION BY p.pid
-      |             ORDER BY round(list_cosine_similarity(p.pe, c.emb), 4)
-      |               DESC, c.vec_id) AS rn
-      |         FROM pown p JOIN cellv c USING (cell)
-      |         WHERE p.pid <> c.vec_id)
-      |       WHERE rn <= 3),
-      |a2 AS (SELECT pid, cid FROM (
-      |         SELECT p.pid, c.vec_id AS cid, row_number() OVER (
-      |             PARTITION BY p.pid
-      |             ORDER BY round(list_cosine_similarity(p.pe, c.emb), 4)
-      |               DESC, c.vec_id) AS rn
-      |         FROM pp p JOIN cellv c USING (cell)
-      |         WHERE p.pid <> c.vec_id)
-      |       WHERE rn <= 3),
-      |r1 AS (SELECT a1.pid, CAST(count(*) AS BIGINT) AS recall1
-      |       FROM a1 JOIN ex ON a1.pid = ex.pid AND a1.cid = ex.cid
-      |       GROUP BY a1.pid),
-      |r2 AS (SELECT a2.pid, CAST(count(*) AS BIGINT) AS recall2
-      |       FROM a2 JOIN ex ON a2.pid = ex.pid AND a2.cid = ex.cid
-      |       GROUP BY a2.pid)
+      |${probeTop3Cte("ex", "pown p, e c")},
+      |${probeTop3Cte("a1", "pown p JOIN cellv c USING (cell)")},
+      |${probeTop3Cte("a2", "pp p JOIN cellv c USING (cell)")},
+      |${recallCte("r1", "a1", "ex", "recall1")},
+      |${recallCte("r2", "a2", "ex", "recall2")}
       |SELECT pown.pid, COALESCE(r1.recall1, 0) AS recall1,
       |  COALESCE(r2.recall2, 0) AS recall2
       |FROM pown LEFT JOIN r1 ON pown.pid = r1.pid
@@ -7081,47 +6962,30 @@ object LlmOps {
     * probes, corpus never reshuffles); the exact arm is the q119/q167
     * offline-eval pattern. Oracle: the shared IVF2 chains + label CTEs
     * + both rank arms. */
-  def q176(s: SparkSession, d: String): DataFrame = {
-    val (path, _) = ivf2Cache.getOrCompute(d)(ivf2Build(s, _))
-    filteredServeReport(Tables.parquet(s, path))
-  }
+  def q176(s: SparkSession, d: String): DataFrame =
+    filteredServeReport(landedLayout(s, d))
 
   /** The q176 report over any (vec_id, embedding, cell, cell2, label)
     * layout — separate so the spec can plant a layout where the
     * post-filter arm provably loses a same-label neighbor. */
   private[queries] def filteredServeReport(layout: DataFrame): DataFrame = {
-    val p = layout.filter(col("vec_id") >= 16 && col("vec_id") < 26)
-      .select(col("vec_id").as("pid"), col("embedding").as("pe"),
-        col("label").as("plabel"), col("cell"), col("cell2"))
-    val own = p.select(col("pid"), col("pe"), col("plabel"), col("cell"))
-    val widened = widenProbes(p, Seq("pid", "pe", "plabel"))
-    val cands = layout.select(col("vec_id").as("cid"),
-      col("embedding").as("ce"), col("label"), col("cell"))
-    val w = Window.partitionBy(col("pid")).orderBy(col("sim").desc, col("cid"))
-    def scored(j: DataFrame): DataFrame = j
-      .filter(col("pid") =!= col("cid"))
-      .select(col("pid"), col("cid"), col("label"), col("plabel"),
-        round(CosineSimilarityExpr(col("pe"), col("ce")), 4).as("sim"))
-    def top3(df: DataFrame): DataFrame = df
-      .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
+    val p = probeRows(layout, col("label").as("plabel"), col("cell"),
+      col("cell2"))
+    val own = p.drop("cell2")
+    val cands = candRows(layout, "label", "cell")
+    val same = col("label") === col("plabel")
+    def scored(j: DataFrame) = probeScores(j, "label", "plabel")
+    def pairs(df: DataFrame) = df.select(col("pid"), col("vid"))
     // filtered exact ground truth: brute force among same-label vectors
-    val fex = top3(scored(cands.crossJoin(broadcast(own.drop("cell"))))
-        .filter(col("label") === col("plabel")))
-      .select(col("pid"), col("cid"))
-    val cellCands = scored(cands.join(broadcast(widened), Seq("cell")))
-    val pre = top3(cellCands.filter(col("label") === col("plabel")))
-      .select(col("pid"), col("cid"))
-    val post = top3(cellCands).filter(col("label") === col("plabel"))
-      .select(col("pid"), col("cid"))
-    def hits(arm: DataFrame, nm: String) = arm.join(fex, Seq("pid", "cid"))
-      .groupBy(col("pid")).agg(count(lit(1)).as(nm))
-    own.select(col("pid"), col("plabel").as("label"))
-      .join(hits(pre, "recall_filtered"), Seq("pid"), "left")
-      .join(hits(post, "recall_postfilter"), Seq("pid"), "left")
-      .select(col("pid"), col("label"),
-        coalesce(col("recall_filtered"), lit(0L)).as("recall_filtered"),
-        coalesce(col("recall_postfilter"), lit(0L)).as("recall_postfilter"))
-      .orderBy(col("pid"))
+    val fex = rankTop(
+      scored(cands.crossJoin(broadcast(own.drop("cell")))).filter(same))
+    val cellCands = scored(cands.join(
+      broadcast(widenProbes(p, Seq("pid", "pe", "plabel"))), Seq("cell")))
+    val pre = rankTop(cellCands.filter(same))
+    val post = rankTop(cellCands).filter(same)
+    recallPivot(byArm(Seq(pre, post).map(pairs)), pairs(fex),
+      own.select(col("pid"), col("plabel").as("label")),
+      Seq("recall_filtered", "recall_postfilter"), Seq(col("label")))
   }
 
   private lazy val q176Sql =
@@ -7135,37 +6999,14 @@ object LlmOps {
       |       FROM pp p JOIN lab l ON l.vec_id = p.pid),
       |po AS (SELECT p.pid, p.pe, l.label AS plabel
       |       FROM pown p JOIN lab l ON l.vec_id = p.pid),
-      |fex AS (SELECT pid, cid FROM (
-      |          SELECT p.pid, c.vec_id AS cid, row_number() OVER (
-      |              PARTITION BY p.pid
-      |              ORDER BY round(list_cosine_similarity(p.pe, c.emb), 4)
-      |                DESC, c.vec_id) AS rn
-      |          FROM po p JOIN cvl c
-      |            ON p.pid <> c.vec_id AND c.label = p.plabel)
-      |        WHERE rn <= 3),
-      |pre AS (SELECT pid, cid FROM (
-      |          SELECT p.pid, c.vec_id AS cid, row_number() OVER (
-      |              PARTITION BY p.pid
-      |              ORDER BY round(list_cosine_similarity(p.pe, c.emb), 4)
-      |                DESC, c.vec_id) AS rn
-      |          FROM pl p JOIN cvl c USING (cell)
-      |          WHERE p.pid <> c.vec_id AND c.label = p.plabel)
-      |        WHERE rn <= 3),
-      |post AS (SELECT pid, cid FROM (
-      |           SELECT p.pid, c.vec_id AS cid, p.plabel,
-      |             c.label AS clabel, row_number() OVER (
-      |               PARTITION BY p.pid
-      |               ORDER BY round(list_cosine_similarity(p.pe, c.emb), 4)
-      |                 DESC, c.vec_id) AS rn
-      |           FROM pl p JOIN cvl c USING (cell)
-      |           WHERE p.pid <> c.vec_id)
-      |         WHERE rn <= 3 AND clabel = plabel),
-      |rf AS (SELECT pre.pid, CAST(count(*) AS BIGINT) AS recall_filtered
-      |       FROM pre JOIN fex ON pre.pid = fex.pid AND pre.cid = fex.cid
-      |       GROUP BY pre.pid),
-      |rp AS (SELECT post.pid, CAST(count(*) AS BIGINT) AS recall_postfilter
-      |       FROM post JOIN fex ON post.pid = fex.pid AND post.cid = fex.cid
-      |       GROUP BY post.pid)
+      |${probeTop3Cte("fex", "po p JOIN cvl c ON c.label = p.plabel")},
+      |cs AS (${probeScoresSql("pl p JOIN cvl c USING (cell)",
+                carry = ", c.label, p.plabel")}),
+      |pre AS (${top3Sql("pid, vid", "cs WHERE label = plabel")}),
+      |post AS (SELECT pid, vid FROM (
+      |  ${top3Sql("pid, vid, label, plabel", "cs")}) WHERE label = plabel),
+      |${recallCte("rf", "pre", "fex", "recall_filtered")},
+      |${recallCte("rp", "post", "fex", "recall_postfilter")}
       |SELECT po.pid, po.plabel AS label,
       |  COALESCE(rf.recall_filtered, 0) AS recall_filtered,
       |  COALESCE(rp.recall_postfilter, 0) AS recall_postfilter
