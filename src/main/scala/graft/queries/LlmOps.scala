@@ -223,7 +223,8 @@ object LlmOps {
     val e = Tables.embeddings(s, d)
     val probes = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("pid"), col("embedding").as("pe"))
-    probeAnswer(candRows(e).join(broadcast(probes)), k = 5)
+    serveAnswer(scoredPairs(candRows(e).join(broadcast(probes))), k = 5,
+      id = "cid")
   }
 
   private val q34Sql =
@@ -232,7 +233,7 @@ object LlmOps {
       |c AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
       |      FROM embeddings),
       |s AS (${probeScoresSql("p CROSS JOIN c")})
-      |${probeAnswerSql("s", k = 5)}""".stripMargin
+      |${serveAnswerSql("s", k = 5, id = "cid")}""".stripMargin
 
   /** (vid, ve, `extra`) candidate rows of a (vec_id, embedding, …)
     * relation, the probe-set ANN family's candidate side. */
@@ -240,22 +241,7 @@ object LlmOps {
     df.select(col("vec_id").as("vid") +: col("embedding").as("ve") +:
       extra.map(col): _*)
 
-  /** (pid, vid, `carry`, sim) rows of a probe × candidate relation
-    * `j(pid, pe, vid, ve)`, the probe itself excluded: the 4dp-rounded
-    * cosine the probe-set ANN family ranks on with [[rankTop]]. */
-  private def probeScores(j: DataFrame, carry: String*): DataFrame = j
-    .filter(col("pid") =!= col("vid"))
-    .select((Seq("pid", "vid") ++ carry).map(col) :+
-      round(CosineSimilarityExpr(col("pe"), col("ve")), 4).as("sim"): _*)
-
-  /** A probe-set ANN answer (pid, cid, sim, rn): each probe's top-`k`
-    * [[probeScores]] rows over `j`, in order. */
-  private def probeAnswer(j: DataFrame, k: Int = 3): DataFrame =
-    rankTop(probeScores(j), k = k)
-      .select(col("pid"), col("vid").as("cid"), col("sim"), col("rn"))
-      .orderBy(col("pid"), col("rn"))
-
-  /** [[probeScores]]'s mirror: (pid, vid, `carry`, sim) rows of probes
+  /** [[scoredPairs]]' mirror: (pid, vid, `carry`, sim) rows of probes
     * `p(pid, pe)` × candidates `c(vec_id, emb)` joined by `from`, the
     * probe excluded. */
   private def probeScoresSql(from: String, carry: String = "") =
@@ -266,12 +252,6 @@ object LlmOps {
   /** `name(pid, vid)`: each probe's top-3 [[probeScoresSql]] rows. */
   private def probeTop3Cte(name: String, from: String) =
     s"$name AS (${top3Sql("pid, vid", s"(${probeScoresSql(from)})")})"
-
-  /** [[probeAnswer]]'s mirror over the scored rows `from(pid, vid, sim)`. */
-  private def probeAnswerSql(from: String, k: Int = 3) =
-    s"""SELECT pid, vid AS cid, sim, rn FROM (
-      |  ${top3Sql("pid, vid, sim", from, withRn = true, k = k)})
-      |ORDER BY pid, rn""".stripMargin
 
   /** "Near-duplicate" cosine gate shared by q34b and q73 (Scala filter +
     * both oracle SQL strings interpolate this one constant). Calibrated to
@@ -325,7 +305,8 @@ object LlmOps {
     * nearest-centroid id, same plan shape). */
   def q34c(s: SparkSession, d: String): DataFrame = {
     val (probes, cands) = lshSides(s, d)
-    probeAnswer(cands.join(broadcast(probes), Seq("sig")))
+    serveAnswer(scoredPairs(cands.join(broadcast(probes), Seq("sig"))),
+      id = "cid")
   }
 
   /** The sign-LSH sides of q34c and q181, both as double vectors with
@@ -367,7 +348,7 @@ object LlmOps {
     s"""WITH $lshCtesSql,
        |c AS (SELECT vec_id, dbl AS emb, sig FROM sg),
        |s AS (${probeScoresSql("p JOIN c USING (sig)")})
-       |${probeAnswerSql("s")}""".stripMargin
+       |${serveAnswerSql("s", id = "cid")}""".stripMargin
 
   /** q181 — MULTI-PROBE sign-LSH ANN (the classic Lv et al. multiprobe
     * technique: probe the query's own bucket PLUS every Hamming-1
@@ -400,9 +381,9 @@ object LlmOps {
       explode(array(flips.map(f =>
         col("sig").bitwiseXOR(lit(f))): _*)).as("sig"))
     val arms = Seq(probes, multis)
-      .map(pr => probeScores(cands.join(broadcast(pr), Seq("sig"))))
+      .map(pr => scoredPairs(cands.join(broadcast(pr), Seq("sig"))))
     def top3(df: DataFrame) = rankTop(df).select(col("pid"), col("vid"))
-    val exact = top3(probeScores(
+    val exact = top3(scoredPairs(
       cands.drop("sig").crossJoin(broadcast(probes.drop("sig")))))
     recallPivot(byArm(arms.map(top3)), exact,
       armPivot(byArm(arms), probes.select(col("pid")),
@@ -2461,8 +2442,9 @@ object LlmOps {
         quantized(col("embedding")).as("vq"))
     val assign = graft.operators.KMeans.lloyd(vq, "vec_id", "vq", k = 16, iters = 2)
       .select(col("vec_id"), col("embedding"), col("cluster").as("cell"))
-    probeAnswer(candRows(assign, "cell")
-      .join(broadcast(probeRows(assign, col("cell"))), Seq("cell")))
+    serveAnswer(scoredPairs(candRows(assign, "cell")
+      .join(broadcast(probeRows(assign, col("cell"))), Seq("cell"))),
+      id = "cid")
   }
 
   private lazy val q34dSql =
@@ -2474,7 +2456,7 @@ object LlmOps {
       |p AS (SELECT vec_id AS pid, emb AS pe, cell FROM cell
       |      WHERE ${probeSetSql()}),
       |s AS (${probeScoresSql("p JOIN cell c USING (cell)")})
-      |${probeAnswerSql("s")}""".stripMargin
+      |${serveAnswerSql("s", id = "cid")}""".stripMargin
 
   /** q61 — near-dup CLUSTERS: connected components over the q35 pair graph
     * (Jaccard ≥ 0.8), i.e. the step that turns pairwise near-dup hits into
@@ -5561,12 +5543,13 @@ object LlmOps {
   /** [[probeSet]]'s mirror over the id column `v`. */
   private def probeSetSql(v: String = "vec_id") = s"$v >= 16 AND $v < 26"
 
-  /** Scored (pid, pe, vid, sim) walk rows from a probe × candidate
-    * relation, the probe itself excluded. */
-  private def scoredPairs(j: DataFrame): DataFrame = j
+  /** Scored (pid, pe, vid, `carry`, sim) rows of a probe × candidate
+    * relation `j(pid, pe, vid, ve, …)`, the probe itself excluded: the
+    * 4dp-rounded cosine every walk and probe-set ANN query ranks on. */
+  private def scoredPairs(j: DataFrame, carry: String*): DataFrame = j
     .filter(col("pid") =!= col("vid"))
-    .select(col("pid"), col("pe"), col("vid"),
-      round(CosineSimilarityExpr(col("pe"), col("ve")), 4).as("sim"))
+    .select((Seq("pid", "pe", "vid") ++ carry).map(col) :+
+      round(CosineSimilarityExpr(col("pe"), col("ve")), 4).as("sim"): _*)
 
   /** Round 0 of q173's production entry: each probe `p(pid, pe, cell,
     * cell2)` scored against the members of its landed probe-1 ∪ probe-2
@@ -5591,15 +5574,18 @@ object LlmOps {
     df.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
   }
 
-  /** A walk's answer rows: the per-`keys` top-3 of the visited set, the
-    * probe itself excluded. */
+  /** A walk's answer rows: the per-`keys` top-`k` of the visited set,
+    * the probe itself excluded. */
   private def serveTop(visited: DataFrame,
-      keys: Seq[String] = Seq("pid")): DataFrame =
-    rankTop(visited.filter(col("pid") =!= col("vid")), keys)
+      keys: Seq[String] = Seq("pid"), k: Int = 3): DataFrame =
+    rankTop(visited.filter(col("pid") =!= col("vid")), keys, k)
 
-  /** The serve relation (pid, vid, sim, rn) of a walk, in order. */
-  private def serveAnswer(visited: DataFrame): DataFrame =
-    serveTop(visited).select(col("pid"), col("vid"), col("sim"), col("rn"))
+  /** The serve relation (pid, `id`, sim, rn) of a walk or probe-set
+    * scan: each probe's top-`k` [[serveTop]] rows, in order. */
+  private def serveAnswer(visited: DataFrame, k: Int = 3,
+      id: String = "vid"): DataFrame =
+    serveTop(visited, k = k)
+      .select(col("pid"), col("vid").as(id), col("sim"), col("rn"))
       .orderBy(col("pid"), col("rn"))
 
   /** Per-probe recall pivot of the serve reports (q167, q176, q177,
@@ -5735,10 +5721,14 @@ object LlmOps {
       |            ORDER BY sim DESC, vid) AS rn
       |        FROM $from) WHERE rn <= $k""".stripMargin
 
-  /** [[serveAnswer]]'s mirror over walk CTE `v`. */
-  private def serveAnswerSql(v: String) =
-    s"${top3Sql("pid, vid, sim", s"$v WHERE pid <> vid", withRn = true)}" +
+  /** [[serveAnswer]]'s mirror over the walk or scored CTE `v`. */
+  private def serveAnswerSql(v: String, k: Int = 3, id: String = "vid") = {
+    val top = top3Sql("pid, vid, sim", s"$v WHERE pid <> vid", withRn = true,
+      k = k)
+    (if (id == "vid") top
+     else s"SELECT pid, vid AS $id, sim, rn FROM (\n  $top)") +
       "\nORDER BY pid, rn"
+  }
 
   /** `${a}t3(pid, vid)`: the answer of walk `a` after 3 rounds. */
   private def walkTop3Cte(a: String) =
@@ -6502,8 +6492,9 @@ object LlmOps {
     * re-rank, top-3 with (sim desc, id) tiebreaks. */
   private def ivf2Serve(layout: DataFrame): DataFrame = {
     val probes = probeRows(layout, col("cell"), col("cell2"))
-    probeAnswer(candRows(layout, "cell")
-      .join(broadcast(widenProbes(probes, Seq("pid", "pe"))), Seq("cell")))
+    serveAnswer(scoredPairs(candRows(layout, "cell")
+      .join(broadcast(widenProbes(probes, Seq("pid", "pe"))), Seq("cell"))),
+      id = "cid")
   }
 
   private val ivf2K2Sub = "(SELECT k2 FROM nk)"
@@ -6573,7 +6564,7 @@ object LlmOps {
   private def ivf2ServeSql(src: String): String =
     s"""${ivf2Probe2CtesSql(src)},
       |s AS (${probeScoresSql(s"pp p JOIN $src c USING (cell)")})
-      |${probeAnswerSql("s")}""".stripMargin
+      |${serveAnswerSql("s", id = "cid")}""".stripMargin
 
   private lazy val q149Sql =
     s"""WITH $ivf2ChainsSql,
@@ -6914,7 +6905,7 @@ object LlmOps {
     val own = p.drop("cell2")
     val cands = candRows(layout, "cell")
     def top3(j: DataFrame) =
-      rankTop(probeScores(j)).select(col("pid"), col("vid"))
+      rankTop(scoredPairs(j)).select(col("pid"), col("vid"))
     val arms = Seq(own, widenProbes(p, Seq("pid", "pe")))
       .map(pr => top3(cands.join(broadcast(pr), Seq("cell"))))
     recallPivot(byArm(arms),
@@ -6974,7 +6965,7 @@ object LlmOps {
     val own = p.drop("cell2")
     val cands = candRows(layout, "label", "cell")
     val same = col("label") === col("plabel")
-    def scored(j: DataFrame) = probeScores(j, "label", "plabel")
+    def scored(j: DataFrame) = scoredPairs(j, "label", "plabel")
     def pairs(df: DataFrame) = df.select(col("pid"), col("vid"))
     // filtered exact ground truth: brute force among same-label vectors
     val fex = rankTop(

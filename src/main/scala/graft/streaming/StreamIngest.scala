@@ -408,7 +408,7 @@ object StreamIngest {
     * EXCLUDED from dup-checks on every invocation (a filter over the
     * materialized list), but the state rewrite that physically drops
     * them is LAZY — it only happens when stale rows exceed
-    * [[SemanticDedupProcessor.PruneSlack]] of the list, so a
+    * [[TtlWindow.PruneSlack]] of the list, so a
     * steady-state cell pays the cheap append path almost always and the
     * O(window) rewrite amortizes to O(1)/arrival. An EVENT-TIME timer
     * additionally clears a cell whose newest entry fell TTL behind the
@@ -425,14 +425,6 @@ object StreamIngest {
     * itself — the IVF2 cell routing upstream splits the corpus across
     * cells and the TTL caps each cell's window, so w is
     * (arrival-rate × TTL) / cells, not corpus size. */
-  object SemanticDedupProcessor {
-    /** Lazy-prune trigger: rewrite the ListState only when stale entries
-      * reach this fraction of it. 1/4 keeps the wasted state ≤ 33% above
-      * the live window while making the O(window) rewrite amortized-O(1)
-      * per arrival. */
-    val PruneSlack: Double = 0.25
-  }
-
   class SemanticDedupProcessor(threshold: Double, ttlMs: Long)
       extends org.apache.spark.sql.streaming.StatefulProcessor[
         Long, (Long, Long, Array[Float], java.sql.Timestamp),
@@ -481,12 +473,18 @@ object StreamIngest {
     * `ListState` of entries stamped with their event time (`tsOf`).
     * Entries whose time fell TTL behind the watermark are dead: always
     * EXCLUDED from the checks, but only physically pruned (full list
-    * rewrite) once they reach [[SemanticDedupProcessor.PruneSlack]] of
+    * rewrite) once they reach [[TtlWindow.PruneSlack]] of
     * the list — the lazy-prune contract documented on the semantic
     * processor. An event-time timer at the newest arrival + TTL clears
     * the list on expiry, guarded by its newest entry because timers
     * accumulate on this API. */
   private object TtlWindow {
+    /** Lazy-prune trigger: rewrite the ListState only when stale entries
+      * reach this fraction of it. 1/4 keeps the wasted state ≤ 33% above
+      * the live window while making the O(window) rewrite amortized-O(1)
+      * per arrival. */
+    val PruneSlack: Double = 0.25
+
     /** Folds the `arrivals` in order: `step(live, arrival)` returns the
       * entry the arrival admits, if any (seen by the later arrivals),
       * and its output row. */
@@ -501,7 +499,7 @@ object StreamIngest {
       var live = held.filter(tsOf(_) >= cutoff)
       val stale = held.size - live.size
       val prune = stale > 0 &&
-        (stale >= held.size * SemanticDedupProcessor.PruneSlack)
+        (stale >= held.size * PruneSlack)
       val fresh = scala.collection.mutable.ArrayBuffer[T]()
       val out = scala.collection.mutable.ArrayBuffer[R]()
       var maxTs = Long.MinValue
@@ -591,7 +589,7 @@ object StreamIngest {
     * [[fingerprintDedupStream]]: `ListState` of recently seen
     * (media_id, h_hi, h_lo, tsMs) fingerprints with the
     * [[SemanticDedupProcessor]] lifecycle — per-entry appends on the
-    * hot path, lazy [[SemanticDedupProcessor.PruneSlack]] rewrites,
+    * hot path, lazy [[TtlWindow.PruneSlack]] rewrites,
     * event-time TTL timer with the newest-entry guard. Emits one
     * verdict per input row: (media_id, min Hamming-≤-radius match in
     * this bucket or −1, ts). */

@@ -5,6 +5,12 @@ import java.nio.file.{Files, Paths}
 
 import scala.util.matching.Regex
 
+import org.apache.spark.sql.catalyst.expressions.{Literal, NamedExpression, PlanExpression}
+import org.apache.spark.sql.catalyst.plans.QueryPlan
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.unsafe.types.UTF8String
+
 import graft.{SparkEntry, SparkEnv}
 
 /** Dev tool: writes PLANS.md — formatted physical plans for flagship
@@ -35,10 +41,12 @@ object DumpPlans {
       sb.append("`ReadSchema`, `BroadcastHashJoin` on dims, `WindowGroupLimit`,\n")
       sb.append("`TakeOrderedAndProject`, codegen stage ids.\n")
       for (k <- keys) {
-        val df = SparkEntry.queries(k)(spark, d)
+        val qe = SparkEntry.queries(k)(spark, d).queryExecution
+        val (ids, literals) = printed(qe.executedPlan)
         sb.append(s"\n## $k\n\n```\n")
-        sb.append(renumberIds(stable(df.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")).trim)))
+        sb.append(renumberIds(stable(qe.explainString(
+          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")).trim),
+          ids, literals))
         sb.append("\n```\n")
       }
       Files.write(Paths.get("PLANS.md"), sb.toString.getBytes(StandardCharsets.UTF_8))
@@ -68,18 +76,62 @@ object DumpPlans {
       token.replaceAllIn(p, placeholder)
     }
 
-  /** One query's plan text with its expression ids (`#123`) and lambda
-    * variable suffixes (`lambda x_7`) renumbered from 0 in order of first
-    * appearance. Both come from JVM-wide counters, so the same plan
-    * prints other numbers after another query or in another run; the
-    * renumbering keeps which attributes are the same attribute. */
-  def renumberIds(section: String): String =
-    Seq("""(#)(\d+)""".r, """(lambda [a-z]+_)(\d+)""".r)
-      .foldLeft(section)(renumber)
+  /** One query's plan text with its expression ids (`#123`, those in
+    * `ids`), subquery plan ids (`[id=#45]`) and lambda variable suffixes
+    * (`lambda x_7`) renumbered from 0 in order of first appearance, each
+    * kind on its own. All three come from JVM-wide counters, so the same
+    * plan prints other numbers after another query or in another run;
+    * the renumbering keeps which attributes are the same attribute. A
+    * `#n` that is not an expression id is text of the query and stays
+    * as printed: one whose n is not in `ids`, or one inside an
+    * occurrence of a string literal of the plan (`literals`), such as
+    * `Brand#4`, whatever ids the plan holds. */
+  def renumberIds(section: String, ids: Long => Boolean,
+      literals: Iterable[String] = Nil): String = {
+    val kept = literals.filter(_.contains('#')).toSeq.sortBy(-_.length)
+      .map(l => s"(?<!\\w)${Regex.quote(l)}(?!\\d)|").mkString
+    Seq[(Regex, Long => Boolean)](
+      """(\[id=#)(\d+)""".r -> (_ => true),
+      s"""$kept((?<!\\[id=)#)(\\d+)""".r -> ids,
+      """(lambda [a-z]+_)(\d+)""".r -> (_ => true))
+      .foldLeft(section) { case (text, (token, renumber)) =>
+        val seen = scala.collection.mutable.HashMap.empty[String, Int]
+        token.replaceAllIn(text, m => Regex.quoteReplacement(
+          if (m.group(2) == null || !renumber(m.group(2).toLong)) m.matched
+          else m.group(1) + seen.getOrElseUpdate(m.group(2), seen.size)))
+      }
+  }
 
-  private def renumber(text: String, token: Regex): String = {
-    val ids = scala.collection.mutable.HashMap.empty[String, Int]
-    token.replaceAllIn(text, m => Regex.quoteReplacement(
-      m.group(1) + ids.getOrElseUpdate(m.group(2), ids.size)))
+  /** What a physical plan can print that [[renumberIds]] tells apart:
+    * its expression ids (operator outputs and the named and subquery
+    * expressions inside them) and its string literals, through adaptive
+    * wrappers, query stages, cached relations and subquery plans. */
+  def printed(plan: SparkPlan): (Set[Long], Set[String]) = {
+    val ids = scala.collection.mutable.Set.empty[Long]
+    val literals = scala.collection.mutable.Set.empty[String]
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[QueryPlan[_], java.lang.Boolean])
+    def walk(p: QueryPlan[_]): Unit = if (seen.add(p)) {
+      p.output.foreach(a => ids += a.exprId.id)
+      p.expressions.foreach(_.foreach {
+        case s: PlanExpression[_] =>
+          ids += s.exprId.id
+          s.plan match { case q: QueryPlan[_] => walk(q); case _ => }
+        case n: NamedExpression => ids += n.exprId.id
+        case Literal(v: UTF8String, _) => literals += v.toString
+        case _ =>
+      })
+      val inner = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan, a.initialPlan)
+        case s: QueryStageExec => Seq(s.plan)
+        case _ => Nil
+      }
+      (inner ++ p.children ++ p.innerChildren).foreach {
+        case q: QueryPlan[_] => walk(q)
+        case _ =>
+      }
+    }
+    walk(plan)
+    (ids.toSet, literals.toSet)
   }
 }

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSpec
 
-class DumpPlansSpec extends AnyFunSuite {
+class DumpPlansSpec extends SparkSpec {
 
   test("stable: run-specific tokens become placeholders; expression ids " +
       "and other @ text stay") {
@@ -35,7 +35,7 @@ class DumpPlansSpec extends AnyFunSuite {
         "double), lambda x_88#1937, false)), zip_with(a#3, b#4, " +
         "lambdafunction((lambda x_91#1940 * lambda y_92#1941), " +
         "lambda x_91#1940, lambda y_92#1941, false))"
-    assert(DumpPlans.renumberIds(section) ==
+    assert(DumpPlans.renumberIds(section, _ => true) ==
       "Output [2]: [pid#0L, sim#1]\n" +
         "Input [3]: [pid#0L, vec_id#2L, code_0#3]\n" +
         "Condition : (pid#0L <> vec_id#2L)\n" +
@@ -43,5 +43,39 @@ class DumpPlansSpec extends AnyFunSuite {
         "double), lambda x_0#5, false)), zip_with(a#6, b#7, " +
         "lambdafunction((lambda x_1#8 * lambda y_2#9), " +
         "lambda x_1#8, lambda y_2#9, false))")
+  }
+
+  test("renumberIds: a #n that is not an expression id stays as printed, " +
+      "so a literal such as 'Brand#4' comes through; subquery plan ids " +
+      "renumber on their own") {
+    val section =
+      "PushedFilters: [IsNotNull(p_brand), EqualTo(p_brand,Brand#4)]\n" +
+        "Condition : ((p_brand#384 = Brand#4) AND might_contain(Subquery " +
+        "subquery#399, [id=#532], xxhash64(p_partkey#382L, 42)))\n" +
+        "Output [2]: [p_partkey#382L, p_brand#384]"
+    val renumbered =
+      "PushedFilters: [IsNotNull(p_brand), EqualTo(p_brand,Brand#4)]\n" +
+        "Condition : ((p_brand#0 = Brand#4) AND might_contain(Subquery " +
+        "subquery#1, [id=#0], xxhash64(p_partkey#2L, 42)))\n" +
+        "Output [2]: [p_partkey#2L, p_brand#0]"
+    assert(DumpPlans.renumberIds(section, Set(382L, 384L, 399L)) == renumbered)
+    // 4 is also an expression id here; the literal still stays
+    assert(DumpPlans.renumberIds(section.replace("382", "4"),
+      Set(4L, 384L, 399L), Seq("Brand#4")) == renumbered)
+  }
+
+  test("printed + renumberIds on q101's plan: the literal Brand#4 stays, " +
+      "every expression and plan id is renumbered") {
+    val qe = graft.queries.Relational.q101(spark, sf0001).queryExecution
+    val (ids, literals) = DumpPlans.printed(qe.executedPlan)
+    assert(literals.contains("Brand#4"))
+    val text = DumpPlans.renumberIds(DumpPlans.stable(qe.explainString(
+      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))),
+      ids, literals)
+    assert(text.contains("EqualTo(p_brand,Brand#4)"))
+    assert(text.contains("= Brand#4)"))
+    val nums = """(?<!Brand)#(\d+)""".r.findAllMatchIn(text)
+      .map(_.group(1).toInt).toSeq
+    assert(nums.nonEmpty && nums.max < nums.distinct.size, text)
   }
 }
